@@ -271,19 +271,32 @@ class KinesisEmuStreamReader(DataSourceStreamReader):
         a chunk ALWAYS holds the consecutive seq range
         [first, first+num_rows) (every writer publishes via
         _publish_chunk, which assigns seqs positionally), so slicing
-        by offset equals filtering on the seq column."""
+        by offset equals filtering on the seq column.
+
+        Chunks outside the range are skipped before they are opened, so
+        a batch's cost does not grow with the shard's history: the
+        chunk file name holds its first seq, and the chunks are
+        contiguous, so a chunk ends where the next one starts. Only the
+        last chunk's end needs a footer read."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         chunks = sorted(
             f for f in os.listdir(partition.shard_dir) if f.startswith("chunk-")
         )
-        for f in chunks:
-            first = int(f[len("chunk-"):].split(".")[0])
-            table = pq.read_table(os.path.join(partition.shard_dir, f))
-            n = table.num_rows
-            if first >= partition.end or first + n <= partition.start:
+        firsts = [int(f[len("chunk-"):].split(".")[0]) for f in chunks]
+        for i, (f, first) in enumerate(zip(chunks, firsts)):
+            if first >= partition.end:
+                break
+            path = os.path.join(partition.shard_dir, f)
+            if i + 1 < len(firsts):
+                end = firsts[i + 1]
+            else:
+                end = first + pq.read_metadata(path).num_rows
+            if end <= partition.start:
                 continue
+            table = pq.read_table(path)
+            n = table.num_rows
             lo = max(partition.start - first, 0)
             hi = min(partition.end - first, n)
             sl = table.slice(lo, hi - lo)
@@ -470,14 +483,6 @@ class KinesisEmuStreamWriter(DataSourceStreamArrowWriter):
             with open(intent) as fh:
                 planned = json.load(fh)["shards"]
         else:
-            # AKT_TEE_DIGEST=off drops the content digest from the
-            # intent (replays then verify by count only) — a bench
-            # A/B knob to attribute the digest's share of publish
-            # wall-clock, NEVER for production: without it a
-            # same-count/different-bytes replay publishes silently.
-            with_digest = (
-                os.environ.get("AKT_TEE_DIGEST", "on").lower() != "off"
-            )
             planned = {}
             for shard_id, payloads in payloads_by_shard.items():
                 d = os.path.join(self.stream_dir, shard_id)
@@ -485,9 +490,8 @@ class KinesisEmuStreamWriter(DataSourceStreamArrowWriter):
                 planned[shard_id] = {
                     "start": _shard_end_seq(d),
                     "count": len(payloads),
+                    "digest": _payloads_digest(payloads),
                 }
-                if with_digest:
-                    planned[shard_id]["digest"] = _payloads_digest(payloads)
             with open(intent + ".tmp", "w") as fh:
                 fh.write(json.dumps({"batch": int(batchId), "shards": planned}))
             os.replace(intent + ".tmp", intent)

@@ -6,7 +6,8 @@ nothing and swallows every exception (app.py:71-75), so the only
 production signal was Kinesis iterator-age alarms. Here every
 micro-batch's throughput/latency lands in a thread-safe in-memory
 log (and optionally a parquet sink), so lag is visible from inside
-the job: rows/sec per batch, batch duration, watermark progress.
+the job: rows/sec per batch, batch duration and the time of each of
+its phases, state size, watermark progress.
 
 At scale this is the shape Spark itself recommends: listener events
 arrive on the driver regardless of cluster size (they are tiny
@@ -23,9 +24,29 @@ from typing import Any
 from pyspark.sql.streaming import StreamingQueryListener
 
 
+# progress ``durationMs`` key -> column. ``triggerExecution`` is the
+# whole micro-batch; the others are its phases.
+DURATION_COLUMNS = {
+    "triggerExecution": "batch_duration_ms",
+    "latestOffset": "latest_offset_ms",
+    "getBatch": "get_batch_ms",
+    "queryPlanning": "query_planning_ms",
+    "addBatch": "add_batch_ms",
+    "walCommit": "wal_commit_ms",
+    "commitOffsets": "commit_offsets_ms",
+}
+# ``stateOperators`` entry key -> column, summed over the operators
+STATE_COLUMNS = {
+    "numRowsTotal": "state_rows_total",
+    "memoryUsedBytes": "state_memory_used_bytes",
+}
+
+
 class BatchMetricsListener(StreamingQueryListener):
     """Collects per-batch metrics for every streaming query in the
-    session. ``snapshot()`` returns a list of dicts; ``to_df(spark)``
+    session: throughput, the full ``durationMs`` breakdown (a missing
+    phase reads 0) and the state size summed over the stateful
+    operators. ``snapshot()`` returns a list of dicts; ``to_df(spark)``
     a DataFrame for SQL over the history."""
 
     def __init__(self) -> None:
@@ -40,17 +61,20 @@ class BatchMetricsListener(StreamingQueryListener):
         p = event.progress
         # progress.json is the stable cross-version surface
         d = json.loads(p.json) if hasattr(p, "json") else {}
+        durations = d.get("durationMs") or {}
+        state_ops = d.get("stateOperators") or []
         row = {
             "query_id": str(d.get("id", "")),
             "batch_id": int(d.get("batchId", -1)),
             "num_input_rows": int(d.get("numInputRows", 0) or 0),
             "input_rows_per_sec": float(d.get("inputRowsPerSecond", 0.0) or 0.0),
             "process_rows_per_sec": float(d.get("processedRowsPerSecond", 0.0) or 0.0),
-            "batch_duration_ms": int(
-                (d.get("durationMs") or {}).get("triggerExecution", 0) or 0
-            ),
             "watermark": str((d.get("eventTime") or {}).get("watermark", "")),
         }
+        for key, col in DURATION_COLUMNS.items():
+            row[col] = int(durations.get(key, 0) or 0)
+        for key, col in STATE_COLUMNS.items():
+            row[col] = sum(int(op.get(key, 0) or 0) for op in state_ops)
         with self._lock:
             self._rows.append(row)
 
@@ -92,8 +116,11 @@ class BatchMetricsListener(StreamingQueryListener):
                 StructField("num_input_rows", LongType()),
                 StructField("input_rows_per_sec", DoubleType()),
                 StructField("process_rows_per_sec", DoubleType()),
-                StructField("batch_duration_ms", LongType()),
                 StructField("watermark", StringType()),
+            ]
+            + [
+                StructField(col, LongType())
+                for col in (*DURATION_COLUMNS.values(), *STATE_COLUMNS.values())
             ]
         )
         return spark.createDataFrame(self.snapshot(), schema)

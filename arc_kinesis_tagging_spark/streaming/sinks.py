@@ -91,9 +91,15 @@ def autotag_batch_sink(
     a 1000-executor cluster (swap parquet for a MERGE-capable table
     format in production).
 
+    Each micro-batch plan runs exactly once. ``batch_df`` is lazy: every
+    action on it re-reads the source and re-runs the decode. So the
+    batch is reduced to its ``(_id, max(seq))`` keys and pinned first;
+    the empty check, the store lookup (one left join with a hit marker)
+    and both outputs then read only pinned blocks and store parquet.
+
     Store schema: (_id string, revision string, tags array<struct>).
-    Unknown _ids are dead-lettered to ``store_path + '.deadletter'``
-    instead of failing the batch (R16).
+    Unknown and null _ids are dead-lettered to
+    ``store_path + '.deadletter'`` instead of failing the batch (R16).
     """
     from pyspark.sql import functions as F
 
@@ -104,19 +110,29 @@ def autotag_batch_sink(
     tag_col = make_tag(t["slug"], t["text"])
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        keys = batch_df.select("_id", "seq").groupBy("_id").agg(
-            F.max("seq").alias("seq")
+        # The only action on batch_df: the highest seq per _id wins
+        # within the batch. localCheckpoint, NOT cache(): see
+        # upsert_by_key_parquet — cache is not a plan barrier, and an
+        # evicted partition would re-read the source.
+        keys = (
+            batch_df.groupBy("_id")
+            .agg(F.max("seq").alias("seq"))
+            .localCheckpoint(eager=True)
         )
-        store = spark.read.parquet(store_path)
-        # enrichment lookup (R12) as a join against the store; the
-        # batch's seq (version) wins over the store's stored seq.
-        # Both sides must be MATERIALIZED (localCheckpoint) before the
-        # upsert below overwrites the store files a lazy plan would
-        # re-read.
-        matched = keys.join(store.drop("seq"), "_id", "inner").localCheckpoint(eager=True)
-        missing = keys.join(store, "_id", "left_anti").localCheckpoint(eager=True)
+        if keys.isEmpty():
+            return
+        # enrichment lookup (R12) as ONE left join against the store;
+        # the batch's seq (version) wins over the store's stored seq.
+        # Pinned before the upsert below overwrites the store files a
+        # lazy plan would re-read. A null _id never matches, so it is
+        # dead-lettered.
+        store = spark.read.parquet(store_path).drop("seq")
+        looked_up = keys.join(
+            store.withColumn("_hit", F.lit(True)), "_id", "left"
+        ).localCheckpoint(eager=True)
+        hit = F.col("_hit").isNotNull()
+        matched = looked_up.filter(hit).drop("_hit")
+        missing = looked_up.filter(~hit).select("_id", "seq")
         # tag decision (R13) + idempotent array upsert (R14). The
         # written version must strictly exceed the stored one (seq+1):
         # a tagged row tying the seed's version would make the upsert

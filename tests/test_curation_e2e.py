@@ -252,3 +252,40 @@ def test_curation_e2e_with_substring_clip_tier(spark, tmp_path):
     assert curated == {
         "doc-1": T1, "doc-2": T2 + " " + T3, "doc-3": TAIL,
     }
+
+
+def test_batch_refresh_with_report_dir_returns_usable_frame(spark, tmp_path):
+    """A report_dir refresh releases the plan's localCheckpoint pins;
+    the DataFrame it returns must still run afterwards (it used to be
+    the pinned plan itself and failed on the released blocks)."""
+    from tools.curation_e2e import batch_refresh
+
+    out = str(tmp_path / "curated")
+    spark.createDataFrame(
+        [
+            ("doc-1", T1, "doc"),
+            ("doc-3", T1_NEAR, "doc"),
+            ("doc-4", T2, "doc"),
+            ("wire-1", T3, "wire"),
+        ],
+        "doc_id string, text string, source string",
+    ).write.parquet(out)
+    bench = spark.createDataFrame(
+        [("bench-1", T2)], "doc_id string, text string"
+    )
+    report_dir = str(tmp_path / "report")
+    got = batch_refresh(spark, out, bench, report_dir)
+    # near dup doc-3 and contaminated doc-4 are dropped
+    want = {"doc": (1, len(T1)), "wire": (1, len(T3))}
+    for _ in range(2):  # acting on it repeatedly must keep working
+        rows = {
+            r["source"]: (r["n_docs"], r["n_chars_total"])
+            for r in got.collect()
+        }
+        assert rows == want
+    assert got.filter(got.source == "wire").count() == 1
+    written = {
+        r["source"]: (r["n_docs"], r["n_chars_total"])
+        for r in spark.read.parquet(report_dir).collect()
+    }
+    assert written == want

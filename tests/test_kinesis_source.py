@@ -202,6 +202,31 @@ def test_batch_replay_over_same_storage(registered, tmp_path):
     ]
 
 
+def test_bounded_read_skips_chunks_outside_range(registered, tmp_path):
+    """A startSeq/endSeq read opens only the chunks that overlap the
+    range: an early chunk overwritten with garbage must not be read."""
+    import os
+
+    spark = registered
+    sd = str(tmp_path / "stream-skip")
+    for _ in range(3):  # three chunks per shard: seqs 0-3, 4-7, 8-11
+        write_kinesis_fixture(sd, [(b"p", s) for s in (0, 1) for _ in range(4)])
+    shard0 = os.path.join(sd, "shardId-000000000000")
+    with open(os.path.join(shard0, f"chunk-{0:020d}.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    rows = (
+        spark.read.format("kinesis_emu")
+        .option("streamDir", sd)
+        .option("startSeq", 5)
+        .option("endSeq", 10)
+        .load()
+        .collect()
+    )
+    assert sorted((r["shard_id"][-1], r["seq"]) for r in rows) == [
+        (s, q) for s in ("0", "1") for q in range(5, 10)
+    ]
+
+
 def test_stream_writer_tee_exactly_once(registered, tmp_path):
     """The DataSourceStreamWriter (producer half): a stream TEE —
     consume stream A through the connector, republish every record to

@@ -1,12 +1,18 @@
 """BatchMetricsListener: per-batch progress events become a queryable
 metrics table (observability the reference consumer entirely lacks)."""
 
+import json
 import time
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
-from arc_kinesis_tagging_spark.streaming.metrics import BatchMetricsListener
+from arc_kinesis_tagging_spark.streaming.metrics import (
+    DURATION_COLUMNS,
+    STATE_COLUMNS,
+    BatchMetricsListener,
+)
 from arc_kinesis_tagging_spark.streaming.pipeline import story_pipeline
 from arc_kinesis_tagging_spark.streaming.source import read_record_stream
 from tests.test_streaming_pipeline import FIXTURE, write_stream_fixture
@@ -31,16 +37,7 @@ def test_metrics_listener_collects_batches(spark, fixture_dir, tmp_path):
             .start()
         )
         q.awaitTermination(120)
-        # listener events are delivered asynchronously (possibly after
-        # termination): wait until the event stream settles
-        deadline, last_n, stable_since = time.time() + 30, -1, time.time()
-        while time.time() < deadline:
-            n = len(listener.snapshot())
-            if n != last_n:
-                last_n, stable_since = n, time.time()
-            elif n > 0 and time.time() - stable_since > 2.0:
-                break
-            time.sleep(0.25)
+        _wait_settled(listener)
         rows = listener.snapshot()
         assert rows, "no progress events captured"
         totals = listener.totals()
@@ -48,6 +45,92 @@ def test_metrics_listener_collects_batches(spark, fixture_dir, tmp_path):
         df = listener.to_df(spark)
         assert df.filter(F.col("num_input_rows") > 0).count() >= 1
         assert df.schema["batch_duration_ms"].dataType.typeName() == "long"
+        # the whole durationMs map is kept, one long column per phase
+        for col in (*DURATION_COLUMNS.values(), *STATE_COLUMNS.values()):
+            assert df.schema[col].dataType.typeName() == "long", col
+        busy = [r for r in rows if r["num_input_rows"] > 0]
+        assert sum(r["add_batch_ms"] for r in busy) > 0
+        assert all(r["add_batch_ms"] <= r["batch_duration_ms"] for r in rows)
+        # a stateless query reports no state
+        assert all(r["state_rows_total"] == 0 for r in rows)
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def _wait_settled(listener: BatchMetricsListener) -> None:
+    # listener events are delivered asynchronously (possibly after
+    # termination): wait until the event stream settles
+    deadline, last_n, stable_since = time.time() + 30, -1, time.time()
+    while time.time() < deadline:
+        n = len(listener.snapshot())
+        if n != last_n:
+            last_n, stable_since = n, time.time()
+        elif n > 0 and time.time() - stable_since > 2.0:
+            break
+        time.sleep(0.25)
+
+
+def _event(progress: dict) -> SimpleNamespace:
+    """A listener event as Spark delivers it: progress.json is a string."""
+    return SimpleNamespace(progress=SimpleNamespace(json=json.dumps(progress)))
+
+
+def test_metrics_listener_keeps_duration_map_and_state():
+    """Every durationMs phase becomes its own column, a missing phase
+    reads 0, and the state operators' rows and memory are summed."""
+    listener = BatchMetricsListener()
+    listener.onQueryProgress(_event({
+        "id": "q1",
+        "batchId": 7,
+        "numInputRows": 40,
+        "durationMs": {
+            "addBatch": 900, "getBatch": 3, "latestOffset": 12,
+            "queryPlanning": 45, "walCommit": 20, "commitOffsets": 15,
+            "triggerExecution": 1000,
+        },
+        "stateOperators": [
+            {"numRowsTotal": 30, "memoryUsedBytes": 4096},
+            {"numRowsTotal": 5, "memoryUsedBytes": 1024},
+        ],
+    }))
+    listener.onQueryProgress(_event({
+        "id": "q1", "batchId": 8, "durationMs": {"triggerExecution": 4},
+    }))
+    first, second = listener.snapshot()
+    assert {k: first[k] for k in (*DURATION_COLUMNS.values(), *STATE_COLUMNS.values())} == {
+        "batch_duration_ms": 1000,
+        "latest_offset_ms": 12,
+        "get_batch_ms": 3,
+        "query_planning_ms": 45,
+        "add_batch_ms": 900,
+        "wal_commit_ms": 20,
+        "commit_offsets_ms": 15,
+        "state_rows_total": 35,
+        "state_memory_used_bytes": 5120,
+    }
+    assert second["batch_duration_ms"] == 4
+    assert second["add_batch_ms"] == 0 and second["state_rows_total"] == 0
+
+
+def test_metrics_listener_reports_state_of_stateful_query(spark, fixture_dir, tmp_path):
+    """A deduplicating query's listener rows carry its state size."""
+    listener = BatchMetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        q = (
+            story_pipeline(read_record_stream(spark, fixture_dir))
+            .dropDuplicates(["_id"])
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt-state"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        _wait_settled(listener)
+        df = listener.to_df(spark)
+        last = df.orderBy(F.col("batch_id").desc()).first()
+        assert last["state_rows_total"] > 0
+        assert last["state_memory_used_bytes"] > 0
     finally:
         spark.streams.removeListener(listener)
 

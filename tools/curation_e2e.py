@@ -234,7 +234,11 @@ def batch_refresh(
     benchmark decontamination (drop any survivor sharing >= 3
     distinct 3-grams with an eval doc) -> per-source curation report.
     No broadcast hints anywhere: drop sets and benchmark shingles are
-    corpus-fraction-sized in the worst case, AQE decides at runtime."""
+    corpus-fraction-sized in the worst case, AQE decides at runtime.
+
+    With ``report_dir`` the report is written there, the plan's pinned
+    blocks are released, and the returned DataFrame reads the written
+    parquet back."""
     from arc_kinesis_tagging_spark.functions.text import language_id_expr
     from arc_kinesis_tagging_spark.operators.dedup import (
         contamination_pairs,
@@ -280,14 +284,15 @@ def batch_refresh(
         # created inside this plan (jaccard-prefix survivor/verify
         # tables, contamination shingle sets) have no remaining
         # consumer. On a long-lived driver those executor blocks
-        # otherwise linger until ContextCleaner GC. Only taken on the
-        # write path: a caller who asked for the DataFrame back may
-        # still act on it.
+        # otherwise linger until ContextCleaner GC.
         from arc_kinesis_tagging_spark.sources.maintenance import (
             release_pinned_blocks,
         )
 
         release_pinned_blocks(spark)
+        # ``report`` reads the released pins and can no longer run:
+        # hand back the written table instead.
+        return spark.read.parquet(report_dir)
     return report
 
 
