@@ -422,6 +422,9 @@ def _train_arrayform(
                 )
                 hit = ys >= 0
                 E[_np.nonzero(hit)[0], ys[hit]] -= 1.0
+                # an unlabeled doc contributes nothing, as in the row
+                # form, where its null errors drop out of F.sum
+                E[~hit] = 0.0
                 # partial gradient: g_bc += x_db * e_dc, bias row
                 # collects e_dc (the row form's b=-1 pseudo-bucket)
                 _np.add.at(G, allb, allx[:, None] * E[di])

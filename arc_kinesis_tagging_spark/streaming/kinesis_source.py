@@ -3,10 +3,11 @@ Spark 4's Python Data Source API (SPARK-44076).
 
 The file-source emulator (source.py) proves the pipeline; THIS module
 proves the connector shape: a ``DataSourceStreamReader`` whose offsets
-are per-shard sequence numbers, whose ``partitions()`` emits one input
-partition per shard (the reference's shard-parallel consume loop,
-app.py:16-24/89-96, as genuine Spark tasks), and whose options mirror
-the reference's configuration surface:
+are per-shard sequence numbers, whose ``partitions()`` turns a batch's
+per-shard ``[start, end)`` ranges into read tasks (the reference's
+shard-parallel consume loop, app.py:16-24/89-96, as genuine Spark
+tasks), and whose options mirror the reference's configuration
+surface:
 
 - ``streamDir``     — the "stream": a directory of shard subdirs
                       (``shardId-*/``) holding sequence-keyed chunks
@@ -17,6 +18,17 @@ the reference's configuration surface:
                       arrived before first start, by definition
 - ``maxRecordsPerShardPerBatch`` — admission control; the analog of
                       the reference's GetRecords Limit=20 (app.py:22-24)
+
+Read tasks are packed by record count (``pack_ranges``): a batch of
+``n`` records over ``k`` shard ranges runs as ``min(k, ceil(n /
+RECORDS_PER_TASK))`` tasks, largest range first into the emptiest
+task. Every task starts one Python worker session per Python operator
+(this scan, then the pipeline's UDFs), and that session has a fixed
+CPU cost however few records it sees. Small micro-batches — the
+reference polls 20 records per shard — therefore run as one task, and
+a batch with at least ``RECORDS_PER_TASK`` records per shard keeps one
+task per shard. Packing depends only on the offsets, so a replayed
+batch re-delivers the same rows in the same per-task order.
 
 A production AWS build subclasses ``KinesisEmuStreamReader`` and
 overrides the three storage touchpoints — ``read()`` (GetRecords,
@@ -142,12 +154,108 @@ def _shard_end_seq(shard_dir: str) -> int:
     return first + md.num_rows
 
 
-@dataclass
-class ShardRange(InputPartition):
+@dataclass(frozen=True)
+class ShardRange:
+    """The records ``[start, end)`` of one shard."""
+
     shard_dir: str
     shard_id: str
     start: int
     end: int
+
+
+@dataclass
+class ShardRanges(InputPartition):
+    """One read task: its shard ranges in shard-id order."""
+
+    ranges: tuple[ShardRange, ...]
+
+
+# Records a read task must hold to be worth its fixed cost: the fixed
+# cost of a task divided by the cost of a record. Measured with
+# story_pipeline over the batch reader on a 4-core host:
+# - fixed: every task opens one Python worker session per Python
+#   operator (this scan, then the gunzip UDF), and each session spends
+#   ~0.15-0.3 s of CPU in worker_util.setup_spark_files ->
+#   importlib.invalidate_caches however few records it gets (100
+#   records as 4 tasks instead of 1 cost 0.9-2.0 s more CPU);
+# - per record: ~65 us (one task, 100 -> 10k records: 0.66 -> 1.30 s).
+# 0.2 s / 65 us ~ 3k records. A smaller task spends more on its
+# sessions than on its records, so its records join another task. On
+# the same host one task is still faster than four up to ~5k records,
+# so packing to ~3k records per task does not trade the CPU saving
+# for a slower batch.
+RECORDS_PER_TASK = 3_000
+
+
+def pack_ranges(ranges: list[ShardRange]) -> list[ShardRanges]:
+    """Bin-pack shard ranges into ``min(len(ranges), ceil(total /
+    RECORDS_PER_TASK))`` read tasks: largest range first into the
+    emptiest task (ties: lower shard id, lower task index). A pure
+    function of the ranges, so a replayed batch gets the same tasks in
+    the same order."""
+    ranges = [r for r in ranges if r.end > r.start]
+    if not ranges:
+        return []
+    total = sum(r.end - r.start for r in ranges)
+    n = min(len(ranges), -(-total // RECORDS_PER_TASK))
+    bins: list[list[ShardRange]] = [[] for _ in range(n)]
+    loads = [0] * n
+    for r in sorted(ranges, key=lambda r: (r.start - r.end, r.shard_id)):
+        i = loads.index(min(loads))
+        bins[i].append(r)
+        loads[i] += r.end - r.start
+    return [
+        ShardRanges(tuple(sorted(b, key=lambda r: r.shard_id))) for b in bins
+    ]
+
+
+def _read_ranges(partition: ShardRanges):
+    """Yield Arrow RecordBatches (SCHEMA_DDL order) for each range of
+    the task, in shard-id order — the whole chunk range crosses the
+    Python->JVM boundary as columnar buffers instead of pickled row
+    tuples (guide §4: measured round 15, the per-row pickle path was
+    the stream sources' dominant cost). Row filtering is a zero-copy
+    positional slice: a chunk ALWAYS holds the consecutive seq range
+    [first, first+num_rows) (every writer publishes via _publish_chunk,
+    which assigns seqs positionally), so slicing by offset equals
+    filtering on the seq column.
+
+    Chunks outside a range are skipped before they are opened, so a
+    batch's cost does not grow with the shard's history: the chunk
+    file name holds its first seq, and the chunks are contiguous, so a
+    chunk ends where the next one starts. Only the last chunk's end
+    needs a footer read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for r in partition.ranges:
+        chunks = sorted(
+            f for f in os.listdir(r.shard_dir) if f.startswith("chunk-")
+        )
+        firsts = [int(f[len("chunk-"):].split(".")[0]) for f in chunks]
+        for i, (f, first) in enumerate(zip(chunks, firsts)):
+            if first >= r.end:
+                break
+            path = os.path.join(r.shard_dir, f)
+            if i + 1 < len(firsts):
+                end = firsts[i + 1]
+            else:
+                end = first + pq.read_metadata(path).num_rows
+            if end <= r.start:
+                continue
+            table = pq.read_table(path)
+            lo = max(r.start - first, 0)
+            hi = min(r.end - first, table.num_rows)
+            sl = table.slice(lo, hi - lo)
+            out = pa.table(
+                {
+                    "data": sl["data"],
+                    "shard_id": pa.array([r.shard_id] * (hi - lo), pa.string()),
+                    "seq": sl["seq"],
+                }
+            )
+            yield from out.to_batches()
 
 
 def _dbg(msg: str) -> None:
@@ -247,69 +355,26 @@ class KinesisEmuStreamReader(DataSourceStreamReader):
     def reportLatestOffset(self) -> dict:  # noqa: N802
         return self.latestOffset()
 
-    def partitions(self, start: dict, end: dict) -> list[ShardRange]:
-        parts = []
-        for shard_id, end_seq in end.items():
-            s = int(start.get(shard_id, 0))
-            e = int(end_seq)
-            if e > s:
-                parts.append(
-                    ShardRange(
-                        os.path.join(self.stream_dir, shard_id), shard_id, s, e
-                    )
-                )
-        _dbg(f"partitions pid={os.getpid()} id={id(self)} start={start} end={end}")
-        # one partition per shard -> shard-parallel tasks (R2)
-        return parts
-
-    def read(self, partition: ShardRange):
-        """Yield Arrow RecordBatches (SCHEMA_DDL order) — the whole
-        chunk range crosses the Python->JVM boundary as columnar
-        buffers instead of 20k pickled row tuples (guide §4: measured
-        round 15, the per-row pickle path was the stream sources'
-        dominant cost). Row filtering is a zero-copy positional slice:
-        a chunk ALWAYS holds the consecutive seq range
-        [first, first+num_rows) (every writer publishes via
-        _publish_chunk, which assigns seqs positionally), so slicing
-        by offset equals filtering on the seq column.
-
-        Chunks outside the range are skipped before they are opened, so
-        a batch's cost does not grow with the shard's history: the
-        chunk file name holds its first seq, and the chunks are
-        contiguous, so a chunk ends where the next one starts. Only the
-        last chunk's end needs a footer read."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        chunks = sorted(
-            f for f in os.listdir(partition.shard_dir) if f.startswith("chunk-")
-        )
-        firsts = [int(f[len("chunk-"):].split(".")[0]) for f in chunks]
-        for i, (f, first) in enumerate(zip(chunks, firsts)):
-            if first >= partition.end:
-                break
-            path = os.path.join(partition.shard_dir, f)
-            if i + 1 < len(firsts):
-                end = firsts[i + 1]
-            else:
-                end = first + pq.read_metadata(path).num_rows
-            if end <= partition.start:
-                continue
-            table = pq.read_table(path)
-            n = table.num_rows
-            lo = max(partition.start - first, 0)
-            hi = min(partition.end - first, n)
-            sl = table.slice(lo, hi - lo)
-            out = pa.table(
-                {
-                    "data": sl["data"],
-                    "shard_id": pa.array(
-                        [partition.shard_id] * (hi - lo), pa.string()
-                    ),
-                    "seq": sl["seq"],
-                }
+    def partitions(self, start: dict, end: dict) -> list[ShardRanges]:
+        # min(#ranges, ceil(records / RECORDS_PER_TASK)) read tasks, not
+        # one per shard: each task pays a fixed Python worker session
+        # per Python operator, which outweighs the records of a small
+        # batch. Sorted by shard id so the packing depends only on the
+        # offsets, never on their key order.
+        ranges = [
+            ShardRange(
+                os.path.join(self.stream_dir, shard_id),
+                shard_id,
+                int(start.get(shard_id, 0)),
+                int(end_seq),
             )
-            yield from out.to_batches()
+            for shard_id, end_seq in sorted(end.items())
+        ]
+        _dbg(f"partitions pid={os.getpid()} id={id(self)} start={start} end={end}")
+        return pack_ranges(ranges)
+
+    def read(self, partition: ShardRanges):
+        yield from _read_ranges(partition)
 
     def commit(self, end: dict) -> None:
         _dbg(f"commit pid={os.getpid()} id={id(self)} end={end}")  # chunks are retained; offsets live in the checkpoint
@@ -321,25 +386,25 @@ class KinesisEmuStreamReader(DataSourceStreamReader):
 class KinesisEmuBatchReader(DataSourceReader):
     """Batch mode over the same stream storage (the Kafka-connector
     parity: a stream you can also ``spark.read`` for replay/backfill).
-    One partition per shard; optional ``startSeq``/``endSeq`` options
-    bound the replay window on every shard."""
+    Tasks are packed like the stream reader's; optional
+    ``startSeq``/``endSeq`` options bound the replay window on every
+    shard."""
 
     def __init__(self, options: dict) -> None:
         self.stream_dir = options["streamdir"]
         self.start_seq = int(options.get("startseq", 0))
         self.end_seq = int(options.get("endseq", -1))
 
-    def partitions(self) -> list[ShardRange]:
-        parts = []
+    def partitions(self) -> list[ShardRanges]:
+        ranges = []
         for s in _shard_dirs(self.stream_dir):
             d = os.path.join(self.stream_dir, s)
             end = _shard_end_seq(d) if self.end_seq < 0 else self.end_seq
-            if end > self.start_seq:
-                parts.append(ShardRange(d, s, self.start_seq, end))
-        return parts
+            ranges.append(ShardRange(d, s, self.start_seq, end))
+        return pack_ranges(ranges)
 
-    def read(self, partition: ShardRange):
-        yield from KinesisEmuStreamReader.read(self, partition)  # same scan
+    def read(self, partition: ShardRanges):
+        yield from _read_ranges(partition)
 
 
 @dataclass

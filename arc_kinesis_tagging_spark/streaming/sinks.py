@@ -108,8 +108,13 @@ def autotag_batch_sink(
 
     t = tag or {"slug": AUTOTAG[0], "text": AUTOTAG[1]}
     tag_col = make_tag(t["slug"], t["text"])
+    # The store's schema is inferred from its files once per sink, not
+    # on every read: inference is a Spark job. The sink is the store's
+    # only writer, so the schema each upsert writes is the next batch's.
+    store_schema = None
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal store_schema
         # The only action on batch_df: the highest seq per _id wins
         # within the batch. localCheckpoint, NOT cache(): see
         # upsert_by_key_parquet — cache is not a plan barrier, and an
@@ -126,9 +131,11 @@ def autotag_batch_sink(
         # Pinned before the upsert below overwrites the store files a
         # lazy plan would re-read. A null _id never matches, so it is
         # dead-lettered.
-        store = spark.read.parquet(store_path).drop("seq")
+        if store_schema is None:
+            store_schema = spark.read.parquet(store_path).schema
+        store = spark.read.schema(store_schema).parquet(store_path)
         looked_up = keys.join(
-            store.withColumn("_hit", F.lit(True)), "_id", "left"
+            store.drop("seq").withColumn("_hit", F.lit(True)), "_id", "left"
         ).localCheckpoint(eager=True)
         hit = F.col("_hit").isNotNull()
         matched = looked_up.filter(hit).drop("_hit")
@@ -142,7 +149,9 @@ def autotag_batch_sink(
             "seq", F.col("seq") + 1
         )
         # keyed upsert writeback (R15): last-writer-wins by seq
-        upsert_by_key_parquet(spark, tagged, store_path, "_id", "seq")
+        store_schema = upsert_by_key_parquet(
+            spark, tagged, store_path, "_id", "seq", existing=store
+        )
         # dead letters (R16): unknown documents, never a failed batch
         if not missing.isEmpty():
             missing.withColumn("reason", F.lit("document_not_found")).write.mode(

@@ -77,3 +77,19 @@ def test_sink_one_batch_keys_and_dead_letters(spark, tmp_path):
     # a replay re-tags idempotently: same tags, same version
     write_batch(batch, 0)
     assert _store(spark, store) == got
+
+
+def test_sink_reads_store_with_the_schema_it_wrote(spark, tmp_path):
+    """The sink infers the store schema once, then reads each batch with
+    the schema its last upsert wrote: a store seeded with an int seq is
+    widened to long by the first batch and must still read back."""
+    store = str(tmp_path / "store")
+    spark.createDataFrame(
+        [("a", "r1", None, 0), ("b", "r1", None, 0)],
+        "_id string, revision string, "
+        "tags array<struct<slug:string,text:string>>, seq int",
+    ).write.parquet(store)
+    write_batch = autotag_batch_sink(spark, store, TAG)
+    write_batch(spark.createDataFrame([("a", 4)], "_id string, seq long"), 0)
+    write_batch(spark.createDataFrame([("b", 6)], "_id string, seq long"), 1)
+    assert _store(spark, store) == {"a": ([TAG], 5), "b": ([TAG], 7)}

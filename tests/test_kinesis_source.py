@@ -1,8 +1,8 @@
 """The custom Python Data Source streaming connector with Kinesis
-semantics: per-shard sequence offsets, shard-parallel partitions,
-TRIM_HORIZON/LATEST starting positions, per-batch admission control,
-checkpointed exactly-once offset recovery, and end-to-end composition
-with the story pipeline."""
+semantics: per-shard sequence offsets, read tasks packed by record
+count, TRIM_HORIZON/LATEST starting positions, per-batch admission
+control, checkpointed exactly-once offset recovery, and end-to-end
+composition with the story pipeline."""
 
 import gzip
 import json
@@ -11,7 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from arc_kinesis_tagging_spark.streaming.kinesis_source import (
+    RECORDS_PER_TASK,
     KinesisEmuDataSource,
+    KinesisEmuStreamReader,
     write_kinesis_fixture,
 )
 from arc_kinesis_tagging_spark.streaming.pipeline import story_pipeline
@@ -224,6 +226,60 @@ def test_bounded_read_skips_chunks_outside_range(registered, tmp_path):
     )
     assert sorted((r["shard_id"][-1], r["seq"]) for r in rows) == [
         (s, q) for s in ("0", "1") for q in range(5, 10)
+    ]
+
+
+def _shard_ids(n):
+    return [f"shardId-{s:012d}" for s in range(n)]
+
+
+def test_small_batch_packs_into_one_read_task(tmp_path):
+    """4 shards x 25 records is far below RECORDS_PER_TASK: one read
+    task, which delivers every (shard_id, seq) exactly once."""
+    sd = str(tmp_path / "stream-pack")
+    write_kinesis_fixture(sd, [(b"p%d" % i, i % 4) for i in range(100)])
+    reader = KinesisEmuStreamReader({"streamdir": sd})
+    parts = reader.partitions({}, {s: 25 for s in _shard_ids(4)})
+    assert len(parts) == 1
+    got = [
+        (sid, seq)
+        for p in parts
+        for b in reader.read(p)
+        for sid, seq in zip(b["shard_id"].to_pylist(), b["seq"].to_pylist())
+    ]
+    assert sorted(got) == [(s, q) for s in _shard_ids(4) for q in range(25)]
+    assert len(got) == len(set(got))
+
+
+def test_large_batch_keeps_one_read_task_per_shard():
+    """With at least RECORDS_PER_TASK records per shard, every shard
+    range is its own task, as without packing."""
+    reader = KinesisEmuStreamReader({"streamdir": "/stream"})
+    start = {s: 7 for s in _shard_ids(4)}
+    end = {s: 7 + RECORDS_PER_TASK + i for i, s in enumerate(_shard_ids(4))}
+    parts = reader.partitions(start, end)
+    assert sorted(
+        (r.shard_id, r.start, r.end) for p in parts for r in p.ranges
+    ) == [(s, 7, end[s]) for s in _shard_ids(4)]
+    assert all(len(p.ranges) == 1 for p in parts)
+
+
+def test_packing_is_a_function_of_the_offsets():
+    """A replayed batch must get the same tasks with the same ranges in
+    the same order, whatever order the offset keys come in."""
+    reader = KinesisEmuStreamReader({"streamdir": "/stream"})
+    sizes = [RECORDS_PER_TASK, 40, RECORDS_PER_TASK // 2, 0, 900, 3]
+    start = {s: 10 for s in _shard_ids(6)}
+    end = {s: 10 + n for s, n in zip(_shard_ids(6), sizes)}
+    first = reader.partitions(start, end)
+    assert first == reader.partitions(start, end)
+    assert first == reader.partitions(
+        dict(reversed(start.items())), dict(reversed(end.items()))
+    )
+    # ceil(total / RECORDS_PER_TASK) tasks; the empty shard gets none
+    assert len(first) == 2
+    assert sorted(r.shard_id for p in first for r in p.ranges) == [
+        s for s, n in zip(_shard_ids(6), sizes) if n
     ]
 
 

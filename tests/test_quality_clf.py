@@ -275,11 +275,13 @@ def test_arrayform_trainer_matches_rowform(spark):
     round; this pins the small-SF case in-tree)."""
     import arc_kinesis_tagging_spark.operators.quality_clf as qc
 
+    # an unlabeled doc must contribute nothing in either form
     df = spark.createDataFrame(
-        _rows(), "doc_id long, label string, text string"
+        _rows() + [(999, None, HQ[0])], "doc_id long, label string, text string"
     )
     classes = sorted(
         r[0] for r in df.select("label").distinct().collect()
+        if r[0] is not None
     )
     m_arr = qc._train_arrayform(
         df, "text", "label", "doc_id", 64, 3, 0.5, 6, classes)
