@@ -24,6 +24,7 @@ and per-record error isolation independent of any codec.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import re
 from collections.abc import Iterator
@@ -531,47 +532,28 @@ _JPG_ZZ = [
 # Table memoization (guide §4.5 — heavyweight state once per worker,
 # not per image): virtually every image in a corpus carries the same
 # DHT tables (the Annex K set, or one encoder's fixed tables), so the
-# canonical-code walk and the decode-map inversion are recomputed
-# per record for an identical result. Keyed on the table BYTES, the
-# caches are exact; the returned dicts are read-only by contract
-# (every caller only looks up). Bounded: a pathological corpus with
-# unbounded distinct tables grows the cache per distinct table (~kB
-# each) — acceptable for a per-task/worker lifetime.
-_JPG_CODES_CACHE: dict = {}
-_JPG_DECODE_CACHE: dict = {}
-
-
-def _jpg_canonical_codes(bits, vals):
-    """Canonical Huffman code assignment (spec C.2): symbols in `vals`
-    order get consecutive codes, shorter lengths first. Memoized per
-    (bits, vals) — shared, read-only."""
-    key = (bytes(bits), bytes(vals))
-    hit = _JPG_CODES_CACHE.get(key)
-    if hit is not None:
-        return hit
+# canonical-code walk and the decode tables are recomputed per record
+# for an identical result. Keyed on the table BYTES, the caches are
+# exact; the returned tables are read-only by contract (every caller
+# only looks up). Each cache holds the last 256 distinct tables, so a
+# corpus with a distinct table per image costs a rebuild per image, not
+# memory that grows for the worker's lifetime.
+@functools.lru_cache(maxsize=256)
+def _jpg_codes(bits: bytes, vals: bytes) -> dict:
     codes, code = [], 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
             codes.append((length, code))
             code += 1
         code <<= 1
-    out = dict(zip(vals, codes))  # symbol -> (length, code)
-    _JPG_CODES_CACHE[key] = out
-    return out
+    return dict(zip(vals, codes))  # symbol -> (length, code)
 
 
-def _jpg_decode_map(bits, vals):
-    key = (bytes(bits), bytes(vals))
-    hit = _JPG_DECODE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    enc = _jpg_canonical_codes(bits, vals)
-    out = {(length, code): sym for sym, (length, code) in enc.items()}
-    _JPG_DECODE_CACHE[key] = out
-    return out
-
-
-_JPG_HUFF_CACHE: dict = {}
+def _jpg_canonical_codes(bits, vals):
+    """Canonical Huffman code assignment (spec C.2): symbols in `vals`
+    order get consecutive codes, shorter lengths first. Memoized per
+    (bits, vals) — shared, read-only."""
+    return _jpg_codes(bytes(bits), bytes(vals))
 
 
 class _JpgHuff:
@@ -579,7 +561,7 @@ class _JpgHuff:
     of length <= 8 from the stream's next 8 bits in one list index
     (256 entries of (symbol, length) or None), ``map`` is the full
     (length, code) -> symbol walk for the 9..16-bit tail. Memoized on
-    the table bytes like the maps (guide §4.5)."""
+    the table bytes by ``_jpg_huff_table`` (guide §4.5)."""
 
     __slots__ = ("map", "fast")
 
@@ -594,13 +576,10 @@ class _JpgHuff:
         self.fast = fast
 
 
-def _jpg_huff_table(bits, vals) -> "_JpgHuff":
-    key = (bytes(bits), bytes(vals))
-    hit = _JPG_HUFF_CACHE.get(key)
-    if hit is None:
-        hit = _JpgHuff(_jpg_decode_map(bits, vals))
-        _JPG_HUFF_CACHE[key] = hit
-    return hit
+@functools.lru_cache(maxsize=256)
+def _jpg_huff_table(bits: bytes, vals: bytes) -> "_JpgHuff":
+    enc = _jpg_codes(bits, vals)
+    return _JpgHuff({(length, code): sym for sym, (length, code) in enc.items()})
 
 
 _DCT8_CACHE = None
@@ -1068,9 +1047,9 @@ def decode_jpeg_bytes(b: bytes):
             i = 0
             while i < len(payload):
                 tc, th = payload[i] >> 4, payload[i] & 0x0F
-                bits = list(payload[i + 1 : i + 17])
+                bits = bytes(payload[i + 1 : i + 17])
                 n = sum(bits)
-                vals = list(payload[i + 17 : i + 17 + n])
+                vals = bytes(payload[i + 17 : i + 17 + n])
                 htables[(tc, th)] = _jpg_huff_table(bits, vals)
                 i += 17 + n
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 prog

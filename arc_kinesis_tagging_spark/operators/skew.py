@@ -81,7 +81,13 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
       probe gate alone). Decide from the optimized plan's STATIC size
       estimate instead — no jobs, file-size-proportional, so at
       100 TB the estimate is huge and the gate stays off; estimate
-      inflation (e.g. join products) errs toward no-op."""
+      inflation (e.g. join products) errs toward no-op. The other
+      direction misfires: a selective filter or aggregate whose
+      output the optimizer underestimates can put a genuinely large
+      derived input under the threshold, and it is then round-robin
+      repartitioned to ``defaultParallelism`` partitions. That costs
+      performance only — one extra shuffle, and possibly fewer,
+      larger partitions than the input had — never correctness."""
     n = df.sparkSession.sparkContext.defaultParallelism
     if _narrow_over_scan(df):
         if df.rdd.getNumPartitions() < n:

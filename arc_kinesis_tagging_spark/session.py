@@ -53,6 +53,33 @@ _DEFAULTS = {
 }
 
 
+# Parent of the package directory, for the Python workers' PYTHONPATH.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _session_conf(overrides: dict) -> dict:
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    conf = {"spark.master": os.environ.get("SPARK_MASTER", f"local[{cpus}]"), **_DEFAULTS}
+    conf.update({k: str(v) for k, v in overrides.items()})
+    if conf["spark.master"].startswith("local"):
+        # Python workers fork from this daemon, which keeps each zip
+        # finder's directory across tasks instead of re-reading
+        # pyspark.zip, py4j and the Spark core jar at the start of every
+        # task (worker_daemon.py). The daemon imports the package when it
+        # starts, before any --py-files arrive, so the package's parent
+        # goes on the workers' PYTHONPATH and the driver may run from any
+        # cwd. Only a local master's workers share the driver's file
+        # system; a cluster keeps Spark's default daemon unless the
+        # package is installed in the executor image (DEPLOY.md).
+        conf.setdefault(
+            "spark.python.daemon.module", "arc_kinesis_tagging_spark.worker_daemon"
+        )
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+        )
+    return conf
+
+
 def get_session(app_name: str = "arc-kinesis-tagging-spark", **overrides: str) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
 
@@ -60,12 +87,7 @@ def get_session(app_name: str = "arc-kinesis-tagging-spark", **overrides: str) -
     the test harness; under spark-submit on a cluster the master from
     the environment wins.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = SparkSession.builder.appName(app_name).master(
-        os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    )
-    conf = dict(_DEFAULTS)
-    conf.update({k: str(v) for k, v in overrides.items()})
-    for k, v in conf.items():
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in _session_conf(overrides).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -267,6 +267,23 @@ def test_jpeg_huffman_tables_are_canonical_prefix_codes():
     assert dc[0] == (2, 0b00) and dc[11] == (9, 0b111111110)
 
 
+def test_jpeg_table_caches_stay_bounded():
+    # one distinct DHT table per image must not grow the per-worker
+    # caches past their size
+    from arc_kinesis_tagging_spark.operators.multimodal import (
+        _jpg_codes,
+        _jpg_huff_table,
+    )
+
+    bits = bytes([2] + [0] * 15)  # two 1-bit codes
+    for k in range(_jpg_huff_table.cache_info().maxsize + 44):
+        hi, lo = 200 + k // 200, k % 200
+        assert _jpg_huff_table(bits, bytes([hi, lo])).map == {(1, 0): hi, (1, 1): lo}
+    for cache in (_jpg_codes, _jpg_huff_table):
+        info = cache.cache_info()
+        assert info.currsize <= info.maxsize == 256
+
+
 def test_jpeg_constant_blocks_roundtrip_exact():
     import numpy as np
 
