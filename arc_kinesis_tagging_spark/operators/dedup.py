@@ -27,7 +27,6 @@ buckets are almost never true near-dups of interest).
 from __future__ import annotations
 
 import decimal
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -520,17 +519,15 @@ def ngram_jaccard_pairs_prefix(
     ).quantize(
         decimal.Decimal("1e-12"), rounding=decimal.ROUND_FLOOR
     ) - decimal.Decimal("1e-12")
-    cand = a.join(b, "tok").filter(F.col("key_a") < F.col("key_b"))
-    # AKT_PPJOIN_POS=off drops the length+positional filters — a bench
-    # A/B knob ONLY (SCALE.md round-13 skew ladder): the pair set is
-    # identical either way, only the candidate volume reaching the
-    # verify join grows.
-    if os.environ.get("AKT_PPJOIN_POS", "on").lower() != "off":
-        cand = cand.filter(
+    cand = (
+        a.join(b, "tok")
+        .filter(F.col("key_a") < F.col("key_b"))
+        .filter(
             F.least("sz_a", "sz_b")
             >= F.lit(t_floor).cast("decimal(13,12)")
             * F.greatest("sz_a", "sz_b")
-        ).filter(
+        )
+        .filter(
             1 + F.least(
                 F.col("sz_a") - F.col("pos_a"),
                 F.col("sz_b") - F.col("pos_b"),
@@ -540,8 +537,8 @@ def ngram_jaccard_pairs_prefix(
                 * (F.col("sz_a") + F.col("sz_b"))
             )
         )
-    cand = cand.select("key_a", "key_b").dropDuplicates(
-        ["key_a", "key_b"]
+        .select("key_a", "key_b")
+        .dropDuplicates(["key_a", "key_b"])
     )
     # pin: BOTH verify join sides read the collected set table —
     # without it the key-shuffle + collect_set aggregate over the full
@@ -710,9 +707,10 @@ def _containment_candidates(
     # containment >= t forces o >= ceil(t * min(|A|,|B|)). Computed
     # with the floored decimal so no qualifying pair is rejected;
     # any-row-passes semantics via the dropDuplicates.
-    cand = a.join(b, "tok").filter(F.col("key_p") != F.col("key_f"))
-    if os.environ.get("AKT_PPJOIN_POS", "on").lower() != "off":
-        cand = cand.filter(
+    cand = (
+        a.join(b, "tok")
+        .filter(F.col("key_p") != F.col("key_f"))
+        .filter(
             1 + F.least(
                 F.col("sz_p") - F.col("pos_p"),
                 F.col("sz_f") - F.col("pos_f"),
@@ -722,10 +720,12 @@ def _containment_candidates(
                 * F.least("sz_p", "sz_f")
             )
         )
-    cand = cand.select(
-        F.least("key_p", "key_f").alias("key_a"),
-        F.greatest("key_p", "key_f").alias("key_b"),
-    ).dropDuplicates(["key_a", "key_b"])
+        .select(
+            F.least("key_p", "key_f").alias("key_a"),
+            F.greatest("key_p", "key_f").alias("key_b"),
+        )
+        .dropDuplicates(["key_a", "key_b"])
+    )
     return sh, cand
 
 

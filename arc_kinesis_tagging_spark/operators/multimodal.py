@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DataType,
     IntegerType,
     LongType,
     StringType,
@@ -53,6 +54,50 @@ DECODED_SCHEMA = StructType(
         StructField("payload_sha", StringType()),
     ]
 )
+
+
+def _per_record(df: DataFrame, id_col: str, media_col: str, fn,
+                schema) -> DataFrame:
+    """The per-record isolation loop every media entry point runs
+    (reference app.py:71-75 pattern), as one Arrow-batched
+    ``mapInPandas``. ``fn(payload_bytes)`` returns the output rows for
+    one record WITHOUT the id: a list of tuples — one for a decoder,
+    several (or none) for a frame sampler. The id is computed before
+    the ``try``, so a null id never raises from the handler; any
+    exception from ``fn`` (corrupt, truncated or null payload) yields
+    ONE null row for that record, never a failed job and never a
+    record's partial rows. ``schema`` is the output schema (DDL string
+    or StructType) with the id first."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    names = schema.fieldNames()
+    null_row = (None,) * (len(names) - 1)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for mid, blob in zip(pdf[id_col], pdf[media_col]):
+                mid_out = None if pd.isna(mid) else int(mid)
+                try:
+                    rows = fn(bytes(blob))
+                except Exception:
+                    rows = [null_row]
+                out.extend((mid_out, *r) for r in rows)
+            yield pd.DataFrame(out, columns=names)
+
+    return df.select(id_col, media_col).mapInPandas(run, schema)
+
+
+def _rgb_mean_row(px) -> tuple:
+    """(width, height, mean_r, mean_g, mean_b) of an (h, w, 3) image."""
+    px = px.astype("float64")
+    h, w, _ = px.shape
+    return (w, h, px[:, :, 0].mean(), px[:, :, 1].mean(), px[:, :, 2].mean())
+
+
+def _rgb_sums(px) -> tuple:
+    """Exact integer (sum_r, sum_g, sum_b) of an (..., 3) image."""
+    return tuple(int(v) for v in px.reshape(-1, 3).astype("int64").sum(axis=0))
 
 
 def attach_fake_media(df: DataFrame, id_col: str, seed_text_col: str) -> DataFrame:
@@ -105,21 +150,11 @@ def decode_media(df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
     pattern): a bad payload yields a null row, never a failed job.
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    mt, w, h, payload = _decode_fake(bytes(blob))
-                    out.append(
-                        (mid_out, mt, w, h, len(payload), hashlib.sha256(payload).hexdigest())
-                    )
-                except Exception:
-                    out.append((mid_out, None, None, None, None, None))
-            yield pd.DataFrame(out, columns=[f.name for f in DECODED_SCHEMA.fields])
+    def one(b):
+        mt, w, h, payload = _decode_fake(b)
+        return [(mt, w, h, len(payload), hashlib.sha256(payload).hexdigest())]
 
-    return df.select(id_col, media_col).mapInPandas(decode, DECODED_SCHEMA)
+    return _per_record(df, id_col, media_col, one, DECODED_SCHEMA)
 
 
 def resize_media(
@@ -138,33 +173,19 @@ def resize_media(
     exercises. Failed payloads yield null resized/media (isolation).
     """
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    mt, w, h, payload = _decode_fake(bytes(blob))
-                    scale = max(1, -(-max(w, h) // max_dim))  # ceil div
-                    nw, nh = max(1, w // scale), max(1, h // scale)
-                    npayload = payload[::scale]
-                    header = (
-                        f"AKTS;t={mt};w={nw};h={nh};n={len(npayload)};".encode()
-                    )
-                    out.append(
-                        (mid_out, w, h, (nw, nh, len(npayload)), header + npayload)
-                    )
-                except Exception:
-                    out.append((mid_out, None, None, None, None))
-            yield pd.DataFrame(
-                out, columns=["media_id", "width", "height", "resized", "media"]
-            )
+    def one(b):
+        mt, w, h, payload = _decode_fake(b)
+        scale = max(1, -(-max(w, h) // max_dim))  # ceil div
+        nw, nh = max(1, w // scale), max(1, h // scale)
+        npayload = payload[::scale]
+        header = f"AKTS;t={mt};w={nw};h={nh};n={len(npayload)};".encode()
+        return [(w, h, (nw, nh, len(npayload)), header + npayload)]
 
-    schema = (
+    return _per_record(
+        df, id_col, media_col, one,
         "media_id long, width int, height int, "
-        "resized struct<width:int,height:int,n_bytes:int>, media binary"
+        "resized struct<width:int,height:int,n_bytes:int>, media binary",
     )
-    return df.select(id_col, media_col).mapInPandas(resize, schema)
 
 
 def frame_sample_media(
@@ -178,38 +199,23 @@ def frame_sample_media(
     ffmpeg keyframe sampler produces. Fake frames are fixed-width
     slices of the payload; frame_sha stands in for the decoded frame
     tensor/feature."""
-    import hashlib
 
     FRAME_BYTES = 16
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    _mt, _w, _h, payload = _decode_fake(bytes(blob))
-                    frames = [
-                        payload[i : i + FRAME_BYTES]
-                        for i in range(0, len(payload), FRAME_BYTES)
-                    ]
-                    for fi in range(0, len(frames), every_n):
-                        out.append(
-                            (
-                                mid_out,
-                                fi,
-                                len(frames),
-                                hashlib.sha256(frames[fi]).hexdigest(),
-                            )
-                        )
-                except Exception:
-                    out.append((mid_out, None, None, None))
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_index", "n_frames", "frame_sha"]
-            )
+    def one(b):
+        _mt, _w, _h, payload = _decode_fake(b)
+        frames = [
+            payload[i : i + FRAME_BYTES]
+            for i in range(0, len(payload), FRAME_BYTES)
+        ]
+        return [
+            (fi, len(frames), hashlib.sha256(frames[fi]).hexdigest())
+            for fi in range(0, len(frames), every_n)
+        ]
 
-    return df.select(id_col, media_col).mapInPandas(
-        sample, "media_id long, frame_index int, n_frames int, frame_sha string"
+    return _per_record(
+        df, id_col, media_col, one,
+        "media_id long, frame_index int, n_frames int, frame_sha string",
     )
 
 
@@ -268,34 +274,15 @@ def decode_ppm(
     failed job."""
     import numpy as np
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    b = bytes(blob)
-                    m = _PPM_RE.match(b)
-                    if not m or int(m.group(3)) != 255:
-                        raise ValueError("not an 8-bit P6")
-                    w, h = int(m.group(1)), int(m.group(2))
-                    px = (
-                        np.frombuffer(b, dtype=np.uint8, count=w * h * 3, offset=m.end())
-                        .reshape(h, w, 3)
-                        .astype(np.float64)
-                    )
-                    out.append(
-                        (mid_out, w, h,
-                         px[:, :, 0].mean(), px[:, :, 1].mean(), px[:, :, 2].mean())
-                    )
-                except Exception:
-                    out.append((mid_out, None, None, None, None, None))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "mean_r", "mean_g", "mean_b"],
-            )
+    def one(b):
+        m = _PPM_RE.match(b)
+        if not m or int(m.group(3)) != 255:
+            raise ValueError("not an 8-bit P6")
+        w, h = int(m.group(1)), int(m.group(2))
+        px = np.frombuffer(b, dtype=np.uint8, count=w * h * 3, offset=m.end())
+        return [_rgb_mean_row(px.reshape(h, w, 3))]
 
-    return df.select(id_col, media_col).mapInPandas(dec, PPM_DECODED_SCHEMA)
+    return _per_record(df, id_col, media_col, one, PPM_DECODED_SCHEMA)
 
 
 # --- real-format decode #2: PNG (RFC 2083 / ISO 15948), pure stdlib ----------
@@ -457,30 +444,11 @@ def decode_png(
     identical mapInPandas plumbing as ``decode_ppm``/``decode_media``.
     Per-record error isolation: a corrupt payload (bad CRC, truncated
     IDAT, wrong color type) yields a null row, never a failed job."""
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                # id computed defensively BEFORE the try: a null/NaN id
-                # inside the except handler would otherwise raise and
-                # fail the whole job, breaking the isolation contract
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    px = decode_png_rgb8_bytes(bytes(blob)).astype("float64")
-                    h, w, _ = px.shape
-                    out.append(
-                        (mid_out, w, h,
-                         px[:, :, 0].mean(), px[:, :, 1].mean(), px[:, :, 2].mean())
-                    )
-                except Exception:
-                    out.append((mid_out, None, None, None, None, None))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "mean_r", "mean_g", "mean_b"],
-            )
-
-    return df.select(id_col, media_col).mapInPandas(dec, PPM_DECODED_SCHEMA)
+    return _per_record(
+        df, id_col, media_col,
+        lambda b: [_rgb_mean_row(decode_png_rgb8_bytes(b))],
+        PPM_DECODED_SCHEMA,
+    )
 
 
 # --- real-format decode #3: JPEG (ITU-T T.81 baseline sequential) ------------
@@ -1264,24 +1232,14 @@ def decode_jpeg(
     then per-image mean gray. Per-record error isolation: corrupt,
     progressive, or subsampled payloads yield a null row."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    px = decode_jpeg_bytes(bytes(blob))
-                    if px.ndim != 2:
-                        raise ValueError("expected grayscale")
-                    h, w = px.shape
-                    out.append((mid_out, w, h, float(px.mean())))
-                except Exception:
-                    out.append((mid_out, None, None, None))
-            yield pd.DataFrame(
-                out, columns=["media_id", "width", "height", "mean_gray"]
-            )
+    def one(b):
+        px = decode_jpeg_bytes(b)
+        if px.ndim != 2:
+            raise ValueError("expected grayscale")
+        h, w = px.shape
+        return [(w, h, float(px.mean()))]
 
-    return df.select(id_col, media_col).mapInPandas(dec, JPEG_DECODED_SCHEMA)
+    return _per_record(df, id_col, media_col, one, JPEG_DECODED_SCHEMA)
 
 
 # --- PNG grayscale (color type 0) -------------------------------------------
@@ -1449,22 +1407,12 @@ def decode_png_gray(
     """Grayscale PNG decode through the identical batched path; null
     rows on corrupt/unsupported payloads."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    px = decode_png_gray8_bytes(bytes(blob)).astype("float64")
-                    h, w = px.shape
-                    out.append((mid_out, w, h, px.mean()))
-                except Exception:
-                    out.append((mid_out, None, None, None))
-            yield pd.DataFrame(
-                out, columns=["media_id", "width", "height", "mean_gray"]
-            )
+    def one(b):
+        px = decode_png_gray8_bytes(b).astype("float64")
+        h, w = px.shape
+        return [(w, h, px.mean())]
 
-    return df.select(id_col, media_col).mapInPandas(dec, JPEG_DECODED_SCHEMA)
+    return _per_record(df, id_col, media_col, one, JPEG_DECODED_SCHEMA)
 
 
 # --- image perceptual hash (pHash) ------------------------------------------
@@ -1536,8 +1484,8 @@ def _phash_mix_pixels(seed: int, variant: int):
     inside int64, so ``>> 13`` / ``>> 20`` / ``& 255`` are exactly the
     ``// 8192`` / ``// 1048576`` / ``% 256`` the DuckDB oracles
     compute (floor-division equals arithmetic shift for nonnegative
-    ints). Equivalence fuzzed against the unhoisted form, including at
-    the 2^31 seed boundary."""
+    ints). Equivalence with the literal floor-division form is fuzzed
+    in tests/test_phash.py, including at the 2^31 seed boundary."""
     import numpy as np
 
     h = seed * 2654435761 + _phash_mix_grid()
@@ -1571,7 +1519,7 @@ def _phash_of_pixels(px, ci, shifts) -> int:
     """The hash math shared by image pHash and video frame-hash:
     int64 pixels -> box sums to 32x32 -> integer-cosine DCT -> 63
     bits vs lower-median. ``ci``/``shifts`` are hoisted by callers
-    (one table per batch, not per image)."""
+    (one table per call, not per image)."""
     import numpy as np
 
     h, w = px.shape
@@ -1613,25 +1561,17 @@ def phash_gray(
     bit i = coefficient > lower-median. Map-only Arrow pass, no
     shuffle; per-record isolation (corrupt payload -> null hash).
     Output: (media_id, phash long)."""
+    import numpy as np
 
-    def comp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    ci = _phash_cos_table()
+    shifts = np.arange(_PHASH_K * _PHASH_K - 1, dtype=np.int64)
 
-        ci = _phash_cos_table()
-        shifts = np.arange(_PHASH_K * _PHASH_K - 1, dtype=np.int64)
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    px = decode_png_gray8_bytes(bytes(blob)).astype(np.int64)
-                    out.append((mid_out, _phash_of_pixels(px, ci, shifts)))
-                except Exception:
-                    out.append((mid_out, None))
-            yield pd.DataFrame(out, columns=["media_id", "phash"])
+    def one(b):
+        px = decode_png_gray8_bytes(b).astype(np.int64)
+        return [(_phash_of_pixels(px, ci, shifts),)]
 
-    return df.select(id_col, media_col).mapInPandas(
-        comp, "media_id long, phash long"
+    return _per_record(
+        df, id_col, media_col, one, "media_id long, phash long"
     )
 
 
@@ -1652,25 +1592,6 @@ def _vhash_pixels(group: int, frame: int, variant: int):
     # xor raised TypeError.
     seed = (group * 1000003 + frame * 8191) % 2**31
     return _phash_mix_pixels(seed, variant)
-
-
-def _vhash_pixels_unhoisted(group: int, frame: int, variant: int):
-    """Reference (pre-round-15) form of ``_vhash_pixels``: the literal
-    floor-division/modulo spelling the DuckDB oracles compute. Kept as
-    the equivalence witness for the hoisted ``_phash_mix_pixels`` fast
-    path (tests/test_phash.py) — not called on any query path."""
-    import numpy as np
-
-    seed = (group * 1000003 + frame * 8191) % 2**31
-    x = np.arange(_PHASH_SRC, dtype=np.int64)[:, None]
-    y = np.arange(_PHASH_SRC, dtype=np.int64)[None, :]
-    h = seed * 2654435761 + (x * _PHASH_SRC + y) * 2246822519
-    p = ((h // 8192) ^ (h // 1048576)) % 256
-    if variant:
-        p = np.minimum(
-            255, p + np.where((x * 31 + y * 17) % 128 == variant, 20, 0)
-        )
-    return p.astype(np.uint8)
 
 
 _VHASH_FRAMES = 4  # frames per fixture video
@@ -1712,36 +1633,21 @@ def vhash_frames(
     shared integer-DCT pHash math. Map-only Arrow pass; corrupt
     payloads yield a null-hash row per video (isolated, dropped by
     the pair stage). Output: (media_id, frame_idx, fhash)."""
+    import numpy as np
 
-    def comp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    ci = _phash_cos_table()
+    shifts = np.arange(_PHASH_K * _PHASH_K - 1, dtype=np.int64)
 
-        ci = _phash_cos_table()
-        shifts = np.arange(_PHASH_K * _PHASH_K - 1, dtype=np.int64)
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    _w, _h, ys = decode_y4m_bytes(bytes(blob))
-                    for fi in range(0, len(ys), every):
-                        out.append(
-                            (
-                                mid_out,
-                                fi,
-                                _phash_of_pixels(
-                                    ys[fi].astype(np.int64), ci, shifts
-                                ),
-                            )
-                        )
-                except Exception:
-                    out.append((mid_out, None, None))
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_idx", "fhash"]
-            )
+    def one(b):
+        _w, _h, ys = decode_y4m_bytes(b)
+        return [
+            (fi, _phash_of_pixels(ys[fi].astype(np.int64), ci, shifts))
+            for fi in range(0, len(ys), every)
+        ]
 
-    return df.select(id_col, media_col).mapInPandas(
-        comp, "media_id long, frame_idx int, fhash long"
+    return _per_record(
+        df, id_col, media_col, one,
+        "media_id long, frame_idx int, fhash long",
     )
 
 
@@ -1818,34 +1724,26 @@ def ahash_wav(
     Haitsma-Kalker double-difference sign bits. Map-only Arrow pass;
     clips shorter than 1024 frames (or corrupt) yield a null hash.
     Output: (media_id, ahash long)."""
+    import numpy as np
 
-    def comp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    C = _ahash_cos_table()
+    need = _AHASH_NF * _AHASH_T
+    shifts = np.arange((_AHASH_NF - 1) * 4, dtype=np.int64)
 
-        C = _ahash_cos_table()
-        need = _AHASH_NF * _AHASH_T
-        shifts = np.arange((_AHASH_NF - 1) * 4, dtype=np.int64)
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    s, _rate = decode_wav_bytes(bytes(blob))
-                    x = s[:, 0].astype(np.int64)
-                    if len(x) < need:
-                        raise ValueError("clip too short to fingerprint")
-                    fr = x[:need].reshape(_AHASH_NF, _AHASH_T)
-                    S = fr @ C.T  # (16, 20) int64 exact
-                    E = (S.reshape(_AHASH_NF, 5, 4) ** 2).sum(axis=2)
-                    D = E[:, :4] - E[:, 1:]
-                    bits = ((D[1:] - D[:-1]) > 0).astype(np.int64).ravel()
-                    out.append((mid_out, int((bits << shifts).sum())))
-                except Exception:
-                    out.append((mid_out, None))
-            yield pd.DataFrame(out, columns=["media_id", "ahash"])
+    def one(b):
+        s, _rate = decode_wav_bytes(b)
+        x = s[:, 0].astype(np.int64)
+        if len(x) < need:
+            raise ValueError("clip too short to fingerprint")
+        fr = x[:need].reshape(_AHASH_NF, _AHASH_T)
+        S = fr @ C.T  # (16, 20) int64 exact
+        E = (S.reshape(_AHASH_NF, 5, 4) ** 2).sum(axis=2)
+        D = E[:, :4] - E[:, 1:]
+        bits = ((D[1:] - D[:-1]) > 0).astype(np.int64).ravel()
+        return [(int((bits << shifts).sum()),)]
 
-    return df.select(id_col, media_col).mapInPandas(
-        comp, "media_id long, ahash long"
+    return _per_record(
+        df, id_col, media_col, one, "media_id long, ahash long"
     )
 
 
@@ -2153,30 +2051,14 @@ def decode_jpeg420(
     ride on engine division order). Per-record isolation: corrupt or
     unsupported payloads yield a null row."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    px = decode_jpeg_bytes(bytes(blob))
-                    if px.ndim != 3:
-                        raise ValueError("expected color")
-                    h, w, _ = px.shape
-                    s = px.reshape(-1, 3).sum(axis=0)
-                    out.append(
-                        (mid_out, w, h, int(s[0]), int(s[1]), int(s[2]))
-                    )
-                except Exception:
-                    out.append((mid_out, None, None, None, None, None))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "sum_r", "sum_g", "sum_b",
-                ],
-            )
+    def one(b):
+        px = decode_jpeg_bytes(b)
+        if px.ndim != 3:
+            raise ValueError("expected color")
+        h, w, _ = px.shape
+        return [(w, h, *_rgb_sums(px))]
 
-    return df.select(id_col, media_col).mapInPandas(dec, JPEG420_DECODED_SCHEMA)
+    return _per_record(df, id_col, media_col, one, JPEG420_DECODED_SCHEMA)
 
 
 # --- PNG paletted (color type 3) --------------------------------------------
@@ -2334,39 +2216,16 @@ def decode_png_palette(
     per-channel sums. Per-record isolation: corrupt or unsupported
     payloads yield a null row."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    bb = bytes(blob)
-                    px = decode_png_palette8_bytes(bb)
-                    h, w, _ = px.shape
-                    # n_palette re-derived from the PLTE chunk length
-                    plte_at = bb.index(b"PLTE")
-                    (plen,) = struct.unpack(
-                        ">I", bb[plte_at - 4 : plte_at]
-                    )
-                    s = px.reshape(-1, 3).astype("int64").sum(axis=0)
-                    out.append(
-                        (mid_out, w, h, plen // 3,
-                         int(s[0]), int(s[1]), int(s[2]))
-                    )
-                except Exception:
-                    out.append(
-                        (mid_out, None, None, None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "n_palette",
-                    "sum_r", "sum_g", "sum_b",
-                ],
-            )
+    def one(b):
+        px = decode_png_palette8_bytes(b)
+        h, w, _ = px.shape
+        # n_palette re-derived from the PLTE chunk length
+        plte_at = b.index(b"PLTE")
+        (plen,) = struct.unpack(">I", b[plte_at - 4 : plte_at])
+        return [(w, h, plen // 3, *_rgb_sums(px))]
 
-    return df.select(id_col, media_col).mapInPandas(
-        dec, PNG_PALETTE_DECODED_SCHEMA
+    return _per_record(
+        df, id_col, media_col, one, PNG_PALETTE_DECODED_SCHEMA
     )
 
 
@@ -2502,24 +2361,12 @@ def decode_png_gray16(
     """Real 16-bit grayscale PNG decode, Arrow-batched, with exact
     integer sums and per-record isolation."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    px = decode_png_gray16_bytes(bytes(blob))
-                    h, w = px.shape
-                    out.append(
-                        (mid_out, w, h, int(px.astype("int64").sum()))
-                    )
-                except Exception:
-                    out.append((mid_out, None, None, None))
-            yield pd.DataFrame(
-                out, columns=["media_id", "width", "height", "sum_val"]
-            )
+    def one(b):
+        px = decode_png_gray16_bytes(b)
+        h, w = px.shape
+        return [(w, h, int(px.astype("int64").sum()))]
 
-    return df.select(id_col, media_col).mapInPandas(dec, PNG16_DECODED_SCHEMA)
+    return _per_record(df, id_col, media_col, one, PNG16_DECODED_SCHEMA)
 
 
 # --- Progressive JPEG (SOF2) encoder ----------------------------------------
@@ -3131,27 +2978,11 @@ def decode_png_adam7(
     """Adam7-interlaced PNG decode through the identical mapInPandas
     plumbing as ``decode_png``; per-record error isolation to null
     rows."""
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    px = decode_png_rgb8_adam7_bytes(bytes(blob)).astype("float64")
-                    hh, ww, _ = px.shape
-                    out.append(
-                        (mid_out, ww, hh,
-                         px[:, :, 0].mean(), px[:, :, 1].mean(), px[:, :, 2].mean())
-                    )
-                except Exception:
-                    out.append((mid_out, None, None, None, None, None))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "mean_r", "mean_g", "mean_b"],
-            )
-
-    return df.select(id_col, media_col).mapInPandas(dec, PPM_DECODED_SCHEMA)
+    return _per_record(
+        df, id_col, media_col,
+        lambda b: [_rgb_mean_row(decode_png_rgb8_adam7_bytes(b))],
+        PPM_DECODED_SCHEMA,
+    )
 
 
 # --- REAL audio container: WAV (RIFF / PCM16) --------------------------------
@@ -3256,26 +3087,14 @@ def decode_wav(
     Per-record error isolation to null rows."""
     import numpy as np
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    s, rate = decode_wav_bytes(bytes(blob))
-                    out.append(
-                        (mid_out, s.shape[1], rate, s.shape[0],
-                         int(np.abs(s.astype(np.int64)).sum()))
-                    )
-                except Exception:
-                    out.append((mid_out, None, None, None, None))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "n_channels", "sample_rate",
-                         "n_frames", "sum_abs"],
-            )
+    def one(b):
+        s, rate = decode_wav_bytes(b)
+        return [
+            (s.shape[1], rate, s.shape[0],
+             int(np.abs(s.astype(np.int64)).sum()))
+        ]
 
-    return df.select(id_col, media_col).mapInPandas(dec, WAV_DECODED_SCHEMA)
+    return _per_record(df, id_col, media_col, one, WAV_DECODED_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -3313,53 +3132,34 @@ def audio_features(
     """
     import numpy as np
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    s, rate = decode_wav_bytes(bytes(blob))
-                    s64 = s.astype(np.int64)
-                    ch0 = s64[:, 0]
-                    zcr = int(np.sum(ch0[:-1] * ch0[1:] < 0))
-                    peak = int(np.abs(s64).max()) if s64.size else 0
-                    sum_sq = int((s64 * s64).sum())
-                    x = ch0.astype(np.float64)
-                    n_win = max(0, (len(x) - n_fft) // hop + 1)
-                    bands = np.zeros(4)
-                    if n_win > 0:
-                        idx = (
-                            np.arange(n_win)[:, None] * hop
-                            + np.arange(n_fft)[None, :]
-                        )
-                        P = np.abs(np.fft.rfft(x[idx], axis=1)) ** 2
-                        nb = P.shape[1] // 4
-                        for b in range(4):
-                            lo = b * nb
-                            hi = (b + 1) * nb if b < 3 else P.shape[1]
-                            bands[b] = P[:, lo:hi].sum() / n_win
-                    bq = np.floor(bands * 1e6 + 0.5).astype(np.int64)
-                    out.append(
-                        (mid_out, s.shape[1], rate, s.shape[0], zcr,
-                         peak, sum_sq, *map(int, bq))
-                    )
-                except Exception:
-                    out.append(
-                        (mid_out, *([None] * 10))
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_channels", "sample_rate", "n_frames",
-                    "zcr", "peak_abs", "sum_sq",
-                    "band0_u6", "band1_u6", "band2_u6", "band3_u6",
-                ],
+    def one(b):
+        s, rate = decode_wav_bytes(b)
+        s64 = s.astype(np.int64)
+        ch0 = s64[:, 0]
+        zcr = int(np.sum(ch0[:-1] * ch0[1:] < 0))
+        peak = int(np.abs(s64).max()) if s64.size else 0
+        sum_sq = int((s64 * s64).sum())
+        x = ch0.astype(np.float64)
+        n_win = max(0, (len(x) - n_fft) // hop + 1)
+        bands = np.zeros(4)
+        if n_win > 0:
+            idx = (
+                np.arange(n_win)[:, None] * hop
+                + np.arange(n_fft)[None, :]
             )
+            P = np.abs(np.fft.rfft(x[idx], axis=1)) ** 2
+            nb = P.shape[1] // 4
+            for band in range(4):
+                lo = band * nb
+                hi = (band + 1) * nb if band < 3 else P.shape[1]
+                bands[band] = P[:, lo:hi].sum() / n_win
+        bq = np.floor(bands * 1e6 + 0.5).astype(np.int64)
+        return [
+            (s.shape[1], rate, s.shape[0], zcr, peak, sum_sq,
+             *map(int, bq))
+        ]
 
-    return df.select(id_col, media_col).mapInPandas(
-        feats, AUDIO_FEATURES_SCHEMA
-    )
+    return _per_record(df, id_col, media_col, one, AUDIO_FEATURES_SCHEMA)
 
 
 # --- REAL video container: YUV4MPEG2 (Y4M) -----------------------------------
@@ -3470,25 +3270,13 @@ def sample_y4m_frames(
     output row per kept frame, per-record error isolation (a corrupt
     video yields a single null row, not a failed job)."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    w, h, ys = decode_y4m_bytes(bytes(blob))
-                    for f in range(0, len(ys), every):
-                        out.append(
-                            (mid_out, f, w, h, float(ys[f].mean()))
-                        )
-                except Exception:
-                    out.append((mid_out, None, None, None, None))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "frame_idx", "width", "height", "mean_y"],
-            )
+    def one(b):
+        w, h, ys = decode_y4m_bytes(b)
+        return [
+            (f, w, h, float(ys[f].mean())) for f in range(0, len(ys), every)
+        ]
 
-    return df.select(id_col, media_col).mapInPandas(dec, Y4M_SAMPLED_SCHEMA)
+    return _per_record(df, id_col, media_col, one, Y4M_SAMPLED_SCHEMA)
 
 
 def thumbnail_png(
@@ -3501,38 +3289,17 @@ def thumbnail_png(
     analytic gradient fixtures the oracle derives the thumbnail means
     in closed form — the resize kernel (crop, window sum, scale) is
     what gets verified. Per-record error isolation to null rows."""
-    import numpy as np
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    px = decode_png_rgb8_bytes(bytes(blob)).astype("float64")
-                    h, w, _ = px.shape
-                    hc, wc = (h // 2) * 2, (w // 2) * 2
-                    if hc == 0 or wc == 0:
-                        raise ValueError("too small to thumbnail")
-                    c = px[:hc, :wc, :]
-                    thumb = (
-                        c.reshape(hc // 2, 2, wc // 2, 2, 3)
-                        .mean(axis=(1, 3))
-                    )
-                    out.append(
-                        (mid_out, wc // 2, hc // 2,
-                         thumb[:, :, 0].mean(), thumb[:, :, 1].mean(),
-                         thumb[:, :, 2].mean())
-                    )
-                except Exception:
-                    out.append((mid_out, None, None, None, None, None))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height",
-                         "mean_r", "mean_g", "mean_b"],
-            )
+    def one(b):
+        px = decode_png_rgb8_bytes(b).astype("float64")
+        h, w, _ = px.shape
+        hc, wc = (h // 2) * 2, (w // 2) * 2
+        if hc == 0 or wc == 0:
+            raise ValueError("too small to thumbnail")
+        thumb = px[:hc, :wc, :].reshape(hc // 2, 2, wc // 2, 2, 3).mean(axis=(1, 3))
+        return [_rgb_mean_row(thumb)]
 
-    return df.select(id_col, media_col).mapInPandas(dec, PPM_DECODED_SCHEMA)
+    return _per_record(df, id_col, media_col, one, PPM_DECODED_SCHEMA)
 
 
 # --- GIF89a (LZW-compressed paletted raster, optional interlace) -------------
@@ -3838,40 +3605,16 @@ def decode_gif(
     corrupt or unsupported payloads yield a null row."""
     import numpy as np
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    idx, pal, inter = decode_gif_bytes(bytes(blob))
-                    h, w = idx.shape
-                    px = pal[idx].astype("int64")  # (h, w, 3)
-                    s = px.reshape(-1, 3).sum(axis=0)
-                    wsum_r = int(
-                        (
-                            (np.arange(h, dtype="int64") + 1)
-                            * px[:, :, 0].sum(axis=1)
-                        ).sum()
-                    )
-                    out.append(
-                        (mid_out, w, h, len(pal), int(inter),
-                         int(s[0]), int(s[1]), int(s[2]), wsum_r)
-                    )
-                except Exception:
-                    out.append(
-                        (mid_out, None, None, None, None,
-                         None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "width", "height", "n_colors", "interlaced",
-                    "sum_r", "sum_g", "sum_b", "wsum_r",
-                ],
-            )
+    def one(b):
+        idx, pal, inter = decode_gif_bytes(b)
+        h, w = idx.shape
+        px = pal[idx].astype("int64")  # (h, w, 3)
+        wsum_r = int(
+            ((np.arange(h, dtype="int64") + 1) * px[:, :, 0].sum(axis=1)).sum()
+        )
+        return [(w, h, len(pal), int(inter), *_rgb_sums(px), wsum_r)]
 
-    return df.select(id_col, media_col).mapInPandas(dec, GIF_DECODED_SCHEMA)
+    return _per_record(df, id_col, media_col, one, GIF_DECODED_SCHEMA)
 
 
 # --- Animated GIF (multi-frame) + frame sampling -----------------------------
@@ -4037,30 +3780,12 @@ def sample_gif_frames(
     exact per-frame integer channel sums — the video-modality sampling
     op (q_multimodal_y4m's shape) on GIF's animation container.
     Per-record isolation: corrupt payloads yield one null row."""
-    import numpy as np
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[media_col]):
-                mid_out = None if pd.isna(mid) else int(mid)
-                try:
-                    frames, pal = decode_gif_anim_bytes(bytes(blob))
-                    for f in range(0, len(frames), every):
-                        px = pal[frames[f]].astype("int64")
-                        s = px.reshape(-1, 3).sum(axis=0)
-                        out.append(
-                            (mid_out, len(frames), f,
-                             int(s[0]), int(s[1]), int(s[2]))
-                        )
-                except Exception:
-                    out.append((mid_out, None, None, None, None, None))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_frames", "frame_idx",
-                    "sum_r", "sum_g", "sum_b",
-                ],
-            )
+    def one(b):
+        frames, pal = decode_gif_anim_bytes(b)
+        return [
+            (len(frames), f, *_rgb_sums(pal[frames[f]]))
+            for f in range(0, len(frames), every)
+        ]
 
-    return df.select(id_col, media_col).mapInPandas(dec, GIF_ANIM_SCHEMA)
+    return _per_record(df, id_col, media_col, one, GIF_ANIM_SCHEMA)

@@ -38,12 +38,11 @@ Scale shape (the 100 TB question):
   documented bounded-collect discipline of every model table here
   (the corpus is never collected; the model necessarily is — it IS
   the artifact).
-- Per epoch: one broadcast join (weights onto features), one
-  doc-keyed aggregate (partial-agg collapses to one row per doc
-  per partition before the shuffle), one co-partitioned join back,
-  and one bucket-keyed aggregate bounded by n_buckets * n_classes.
-  Nothing corpus-squared, no corpus-sized window, no Python in the
-  loop — every expression is built-in-function codegen.
+- Per epoch: one map-only Arrow pass over per-doc bucket arrays —
+  a numpy kernel computes scores, softmax errors and one partial
+  gradient per task, bounded by (n_buckets + 1) * n_classes — and a
+  driver-side sum of those partials. No shuffle, nothing
+  corpus-squared, no corpus-sized window.
 - Apply is one broadcast join + one doc-keyed aggregate — the
   shuffle carries one row per doc (map-side partial aggregation
   collapses each doc's grams first, since explode preserves row
@@ -77,8 +76,9 @@ BIAS_BUCKET = -1
 #: above this bucket count the model no longer rides as constant-folded
 #: literal arrays (a 2^18-bucket model would build a multi-hundred-
 #: thousand-node expression tree per class — driver/codegen blowup);
-#: train/apply fall back to the createDataFrame + broadcast-join shape,
-#: which the pre-round-14 code used at every size (round-14 advice)
+#: apply falls back to the createDataFrame + broadcast-join shape
+#: (round-14 advice). Training holds its weights in numpy and never
+#: builds either vehicle.
 LITERAL_WEIGHTS_MAX_BUCKETS = 4096
 
 
@@ -315,20 +315,15 @@ def train_quality_classifier(
     The class list is collected once (bounded by label cardinality)
     and sorted so class indices are deterministic.
 
-    Epoch shape (round-15): below LITERAL_WEIGHTS_MAX_BUCKETS the
+    Epoch shape: _train_arrayform at every bucket count. The
     features are pinned as per-doc ARRAYS and each epoch is ONE
-    map-side pass (scores + softmax errors as sequential folds over
-    the doc's bucket array with constant-folded literal weights) into
-    ONE bucket-keyed aggregate bounded by (B+1) x C — a single
-    shuffle per epoch where the row form needs a doc-keyed aggregate,
-    a join back, and the bucket aggregate (three exchanges). The
-    gradient terms are the same x_db * e_dc multiset; only the
-    association order of the per-doc score sums changes (the row
-    form's hash-aggregate order was already partitioning-dependent),
-    which the round_dp rounding absorbs — equality of the returned
-    model with the row form is pinned in tests/test_quality_clf.py.
-    Above the literal-weight bound the row form with its broadcast
-    weights-table join remains (_train_rowform, the round-14 shape).
+    map-only numpy pass whose per-task partial gradients the driver
+    sums — no shuffle per epoch. The weights never enter a Spark
+    expression, so the literal-weight bound does not apply here.
+    Equality of the returned model with the round-14 row-form loop
+    (a doc-keyed aggregate, a join back and a bucket aggregate per
+    epoch) is pinned in tests/test_quality_clf.py on both sides of
+    that bound.
     """
     classes = sorted(
         r[0] for r in
@@ -338,32 +333,10 @@ def train_quality_classifier(
     C = len(classes)
     if C < 2:
         raise ValueError(f"need >=2 classes, got {classes}")
-    if n_buckets <= LITERAL_WEIGHTS_MAX_BUCKETS:
-        return _train_arrayform(
-            df, text_col, label_col, id_col, n_buckets, epochs, lr,
-            round_dp, classes,
-        )
-    return _train_rowform(
+    return _train_arrayform(
         df, text_col, label_col, id_col, n_buckets, epochs, lr,
         round_dp, classes,
     )
-
-
-def _softmax_errs(s_cols: list, label_col: str, classes: list) -> list:
-    """Per-class softmax-error expressions e_c = p_c - 1[y = c] over
-    score columns, numerically stabilized — shared by both trainer
-    forms (identical expression trees)."""
-    C = len(classes)
-    m = F.greatest(*s_cols) if C > 1 else s_cols[0]
-    exps = [F.exp(s_cols[c] - m) for c in range(C)]
-    z = exps[0]
-    for e in exps[1:]:
-        z = z + e
-    return [
-        exps[c] / z
-        - (F.col(label_col) == F.lit(classes[c])).cast("double")
-        for c in range(C)
-    ]
 
 
 def _train_arrayform(
@@ -376,10 +349,10 @@ def _train_arrayform(
     errors, and the per-task partial gradient matrix, and each task
     emits one (B+1) x C partial; the driver sums the ~numPartitions
     partials (model-bounded collect, deterministic partition order).
-    The guide-§4.2 shape: Spark distributes the pinned features, the
-    per-element math runs in numpy — an expression-tree epoch (either
-    the row form's codegen'd aggregates or array folds, both tried)
-    loses to this by the per-element evaluation overhead."""
+    Spark distributes the pinned features and the per-element math
+    runs in numpy — an expression-tree epoch (codegen'd row-form
+    aggregates or array folds, both tried) loses to this by the
+    per-element evaluation overhead."""
     import numpy as np
 
     C = len(classes)
@@ -422,11 +395,10 @@ def _train_arrayform(
                 )
                 hit = ys >= 0
                 E[_np.nonzero(hit)[0], ys[hit]] -= 1.0
-                # an unlabeled doc contributes nothing, as in the row
-                # form, where its null errors drop out of F.sum
+                # an unlabeled doc contributes nothing
                 E[~hit] = 0.0
                 # partial gradient: g_bc += x_db * e_dc, bias row
-                # collects e_dc (the row form's b=-1 pseudo-bucket)
+                # collects e_dc
                 _np.add.at(G, allb, allx[:, None] * E[di])
                 G[n_buckets] += E.sum(axis=0)
             yield _pd.DataFrame({"g": [G.ravel().tolist()]})
@@ -439,96 +411,6 @@ def _train_arrayform(
             G += np.asarray(r["g"]).reshape(n_buckets + 1, C)
         W -= (lr / n_docs) * G[:n_buckets]
         bias -= (lr / n_docs) * G[n_buckets]
-    return {
-        "classes": classes,
-        "W": np.round(W, round_dp).tolist(),
-        "bias": np.round(bias, round_dp).tolist(),
-        "n_buckets": n_buckets,
-    }
-
-
-def _train_rowform(
-    df, text_col, label_col, id_col, n_buckets, epochs, lr,
-    round_dp, classes,
-) -> dict:
-    """Row-form GD loop (the round-14 shape) — the path for bucket
-    counts above the literal-weight bound, where weights ride as a
-    broadcast table join keyed on the exploded bucket rows."""
-    import numpy as np
-
-    spark = df.sparkSession
-    C = len(classes)
-    feats = clf_features(
-        df, text_col, id_col, n_buckets, extra_cols=(label_col,)
-    ).localCheckpoint(eager=True)  # reused by every epoch
-    ids = feats.select(id_col).distinct().localCheckpoint(eager=True)
-    n_docs = ids.count()
-    # Gradient frame: the features PLUS one synthetic (id, b=-1, x=1)
-    # row per doc, so the per-epoch bucket aggregate's b=-1 row IS the
-    # bias gradient (sum of 1.0 * e_c over docs) — ONE job and ONE
-    # collect per epoch where the previous shape ran two actions that
-    # each recomputed the un-pinned error subtree (round-14
-    # optimization; the gradient sums are over the same row multisets
-    # as before).
-    feats_grad = feats.select(id_col, "b", "x").unionByName(
-        ids.select(
-            F.col(id_col),
-            F.lit(BIAS_BUCKET).cast("long").alias("b"),
-            F.lit(1.0).alias("x"),
-        )
-    ).localCheckpoint(eager=True)
-    W = np.zeros((n_buckets, C))
-    bias = np.zeros(C)
-    for _ in range(epochs):
-        # weights ride as CONSTANT-FOLDED literal arrays indexed by
-        # bucket — no per-epoch createDataFrame/broadcast join (the
-        # products x * W[b,c] are the same doubles either way); above
-        # LITERAL_WEIGHTS_MAX_BUCKETS _weight_cols falls back to the
-        # broadcast-join shape (round-14 advice: a 2^18-bucket literal
-        # tree is a codegen blowup)
-        fw, wcols = _weight_cols(spark, W, bias, n_buckets, feats, C)
-        s = fw.groupBy(id_col, label_col).agg(*[
-            (
-                F.sum(F.col("x") * wcols[c]) + F.lit(float(bias[c]))
-            ).alias(f"s{c}")
-            for c in range(C)
-        ])
-        # softmax errors e_c = p_c - 1[y = c], numerically stabilized
-        m = F.greatest(*[F.col(f"s{c}") for c in range(C)])
-        exps = [F.exp(F.col(f"s{c}") - m) for c in range(C)]
-        z = exps[0]
-        for e in exps[1:]:
-            z = z + e
-        err = s.select(
-            id_col,
-            *[
-                (exps[c] / z
-                 - (F.col(label_col) == F.lit(classes[c])).cast("double")
-                 ).alias(f"e{c}")
-                for c in range(C)
-            ],
-        )
-        # gradient: join back onto the pinned gradient frame, then a
-        # bucket-keyed aggregate bounded by (B + 1) x C — the b=-1 row
-        # carries the bias gradient
-        grad_rows = (
-            feats_grad.join(err, id_col)
-            .groupBy("b")
-            .agg(*[
-                F.sum(F.col("x") * F.col(f"e{c}")).alias(f"g{c}")
-                for c in range(C)
-            ])
-            .collect()
-        )
-        G = np.zeros_like(W)
-        gb = np.zeros(C)
-        for r in grad_rows:
-            if r["b"] == BIAS_BUCKET:
-                gb = np.array([r[f"g{c}"] for c in range(C)])
-            else:
-                G[r["b"]] = [r[f"g{c}"] for c in range(C)]
-        W -= (lr / n_docs) * G
-        bias -= (lr / n_docs) * gb
     return {
         "classes": classes,
         "W": np.round(W, round_dp).tolist(),

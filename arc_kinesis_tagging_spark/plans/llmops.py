@@ -16,7 +16,6 @@ from arc_kinesis_tagging_spark.functions.arrays import AUTOTAG, make_tag, tag_up
 from arc_kinesis_tagging_spark.functions.text import (
     fingerprint_expr,
     language_id_expr,
-    stable_hash64,
     tokens,
 )
 from arc_kinesis_tagging_spark.operators.dedup import (
@@ -2854,32 +2853,18 @@ def q_text_winnowing(spark, sf_dir):
     of length >= k + w - 1 = 8 contributes a common fingerprint — the
     selectivity knob plain rolling-hash fingerprints lack.
 
-    Entirely expression-level (nested HOF transform/aggregate over the
-    gram-hash array — JVM codegen, no UDF, no explode, no shuffle
-    before the final row emit): per-document work is linear in text
-    length and map-side, the same shape as q_dedup_substring's rolling
-    windows. Hashes use the portable md5-prefix convention
+    One map-only ``mapInPandas`` kernel per batch of documents:
+    per-gram Python hashlib for the gram hashes and a vectorized numpy
+    sliding rightmost-argmin for the window minima — linear in text
+    length, no explode, no shuffle before the row emit. (The former
+    nested-HOF expression form evaluated both steps interpreted,
+    about 3x slower.) Hashes use the portable md5-prefix convention
     (functions/text.py:stable_hash64), so the DuckDB oracle replicates
     selection bit for bit via a rank-over-range formulation; the
     per-document summary XORs the selected hashes (order-independent)
     and counts them. Docs shorter than 8 chars have no window and
-    report (0, 0).
-
-    AKT_WINNOW_HASH=xxhash64 swaps the gram hash for the JVM-native
-    xxhash64 (same substring-dedup budget-flag precedent): winnowing
-    only needs SOME total order on hashes, so the algorithm and its
-    guarantees are unchanged, but the per-gram md5+hex+conv chain —
-    the dominant cost at bench scale — collapses to one native hash.
-    Fingerprint VALUES differ from the md5 default (not
-    oracle-comparable; structural invariants pinned in
-    tests/test_winnowing.py), which is why md5 stays the default."""
-    import os as _os
-
+    report (0, 0)."""
     k, w = 5, 4
-    use_xx = _os.environ.get("AKT_WINNOW_HASH") == "xxhash64"
-    gram_hash = (
-        (lambda g: F.xxhash64(g)) if use_xx else (lambda g: stable_hash64(g))
-    )
     d = _t(spark, sf_dir, "documents")
     # One narrow (doc_id, text) round-robin shuffle BEFORE the
     # CPU-bound gram hashing: a plain map-only plan inherits the
@@ -2891,124 +2876,65 @@ def q_text_winnowing(spark, sf_dir):
     spread = d.select("doc_id", "text").repartition(
         spark.sparkContext.defaultParallelism
     )
-    # AKT_WINNOW_IMPL=expr forces the expression form with the md5
-    # hash — the equivalence-test witness and a pure-Catalyst fallback
-    if not use_xx and _os.environ.get("AKT_WINNOW_IMPL", "kernel") != "expr":
-        # Batch-native kernel (round 15, the r14 shingle-kernel
-        # finding applied here): the per-gram md5+hex+conv chain and
-        # the w-step argmin fold both evaluate INTERPRETED inside the
-        # nested HOFs (CodegenFallback) — per-gram Python hashlib plus
-        # a vectorized numpy sliding rightmost-argmin computes the
-        # identical integers ~3x faster. The gram hash is the same
-        # int(md5(utf8)[:15hex], 16); positions enter the output only
-        # through pair-distinctness, which the 0-based numpy indexing
-        # preserves. The expression form remains below under the
-        # AKT_WINNOW_HASH knob and is the equivalence witness
-        # (tests/test_winnowing.py pins kernel == expression).
-        def _winnow(it):
-            from hashlib import md5 as _md5
 
-            import numpy as np
-            import pandas as pd
+    # The gram hash is int(md5(utf8)[:15hex], 16); positions enter
+    # the output only through pair-distinctness, which the 0-based
+    # numpy indexing preserves.
+    def _winnow(it):
+        from hashlib import md5 as _md5
 
-            win = np.lib.stride_tricks.sliding_window_view
-            for pdf in it:
-                ids, ngs, nfs, xrs = [], [], [], []
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                    ng = max(len(text) - (k - 1), 0) if text is not None else 0
-                    n_fps = 0
-                    xr = 0
-                    if ng >= w:
-                        hs = np.fromiter(
-                            (
-                                int(
-                                    _md5(
-                                        text[i : i + k].encode()
-                                    ).hexdigest()[:15],
-                                    16,
-                                )
-                                for i in range(ng)
-                            ),
-                            dtype=np.int64,
-                            count=ng,
-                        )
-                        sw = win(hs, w)
-                        nw = ng - (w - 1)
-                        # rightmost argmin: first min of the reversed
-                        # window == the paper's robust-winnowing tie rule
-                        am = sw[:, ::-1].argmin(axis=1)
-                        off = (w - 1) - am
-                        p = np.arange(nw) + off
-                        hsel = sw[np.arange(nw), off]
-                        pairs = set(zip(p.tolist(), hsel.tolist()))
-                        n_fps = len(pairs)
-                        for _, hv in pairs:
-                            xr ^= int(hv)
-                    ids.append(doc_id)
-                    ngs.append(ng)
-                    nfs.append(n_fps)
-                    xrs.append(xr)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype="int64"),
-                        "n_grams": pd.Series(ngs, dtype="int64"),
-                        "n_fps": pd.Series(nfs, dtype="int64"),
-                        "fp_xor": pd.Series(xrs, dtype="int64"),
-                    }
-                )
+        import numpy as np
+        import pandas as pd
 
-        return spread.mapInPandas(
-            _winnow,
-            "doc_id long, n_grams long, n_fps long, fp_xor long",
-        )
-    text = F.col("text")
-    n = F.length(text)
-    ng = F.greatest(n - F.lit(k - 1), F.lit(0))
-    gram_idx = F.when(ng >= 1, F.sequence(F.lit(1), ng)).otherwise(
-        F.array().cast("array<int>")
-    )
-    with_h = spread.select(
-        "doc_id",
-        ng.cast("long").alias("n_grams"),
-        F.transform(
-            gram_idx,
-            lambda i: gram_hash(text.substr(i, F.lit(k))),
-        ).alias("hs"),
-    )
-    nw = F.greatest(F.size(F.col("hs")) - F.lit(w - 1), F.lit(0))
-    win_idx = F.when(nw >= 1, F.sequence(F.lit(1), nw)).otherwise(
-        F.array().cast("array<int>")
-    )
-    # rightmost argmin per window: fold offsets left->right, <= keeps
-    # the later (higher-position) gram on equal hashes
-    sel = F.transform(
-        win_idx,
-        lambda j: F.aggregate(
-            F.sequence(F.lit(0), F.lit(w - 1)),
-            F.struct(
-                # Long.MAX sentinel: always replaced at the first
-                # offset (h <= MAX for every long, xxhash64's full
-                # signed range included)
-                F.lit((1 << 63) - 1).cast("long").alias("h"),
-                F.lit(-1).alias("p"),
-            ),
-            lambda acc, o: F.when(
-                F.element_at(F.col("hs"), (j + o).cast("int")) <= acc["h"],
-                F.struct(
-                    F.element_at(F.col("hs"), (j + o).cast("int")).alias("h"),
-                    (j + o).cast("int").alias("p"),
-                ),
-            ).otherwise(acc),
-        ),
-    )
-    fps = F.array_distinct(sel)
-    return with_h.select(
-        "doc_id",
-        "n_grams",
-        F.size(fps).cast("long").alias("n_fps"),
-        F.aggregate(
-            fps, F.lit(0).cast("long"), lambda a, s: a.bitwiseXOR(s["h"])
-        ).alias("fp_xor"),
+        win = np.lib.stride_tricks.sliding_window_view
+        for pdf in it:
+            ids, ngs, nfs, xrs = [], [], [], []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                ng = max(len(text) - (k - 1), 0) if text is not None else 0
+                n_fps = 0
+                xr = 0
+                if ng >= w:
+                    hs = np.fromiter(
+                        (
+                            int(
+                                _md5(
+                                    text[i : i + k].encode()
+                                ).hexdigest()[:15],
+                                16,
+                            )
+                            for i in range(ng)
+                        ),
+                        dtype=np.int64,
+                        count=ng,
+                    )
+                    sw = win(hs, w)
+                    nw = ng - (w - 1)
+                    # rightmost argmin: first min of the reversed
+                    # window == the paper's robust-winnowing tie rule
+                    am = sw[:, ::-1].argmin(axis=1)
+                    off = (w - 1) - am
+                    p = np.arange(nw) + off
+                    hsel = sw[np.arange(nw), off]
+                    pairs = set(zip(p.tolist(), hsel.tolist()))
+                    n_fps = len(pairs)
+                    for _, hv in pairs:
+                        xr ^= int(hv)
+                ids.append(doc_id)
+                ngs.append(ng)
+                nfs.append(n_fps)
+                xrs.append(xr)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "n_grams": pd.Series(ngs, dtype="int64"),
+                    "n_fps": pd.Series(nfs, dtype="int64"),
+                    "fp_xor": pd.Series(xrs, dtype="int64"),
+                }
+            )
+
+    return spread.mapInPandas(
+        _winnow,
+        "doc_id long, n_grams long, n_fps long, fp_xor long",
     )
 
 

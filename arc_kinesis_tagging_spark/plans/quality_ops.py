@@ -42,8 +42,6 @@ do, each oracle-checked against DuckDB.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2797,29 +2795,36 @@ def q_dedup_substring(spark, sf_dir):
     one doc-keyed window. Output: per-doc token count, duplicated
     window count, merged duplicated-token coverage and fraction.
 
-    Window-hash variants (``AKT_SUBSTR_HASH``): the DEFAULT is
-    ``rolling`` — the vectorized Rabin-Karp kernel
-    (``_rolling_windows_np``), tokens hashed once, O(1) per window
-    via a modular-inverse prefix, measured **6.6x end-to-end at
-    sf0.1** (7.75 s -> 1.17 s; SCALE.md round-7). ``md5`` restores
-    the expression-only window stage (the digest the DuckDB oracle
-    happens to use internally) and ``xxhash64`` its 8-byte-key
-    variant. The OUTPUT is hash-agnostic — the digest only groups
-    identical window content, so all variants return identical rows
-    (pinned by test_substring_hash_variants_agree), which is why the
-    md5-replicating oracle still hash-checks the rolling default:
-    the compared columns carry coverage counts, never digests."""
-    return _substring_dedup(
-        spark, sf_dir, _os.environ.get("AKT_SUBSTR_HASH", "rolling")
+    Window hashes come from the vectorized Rabin-Karp kernel
+    (``_rolling_windows_np``): tokens hashed once, O(1) per window via
+    a modular-inverse prefix, measured 6.6x end-to-end at sf0.1 over
+    the former md5-per-window expression form (7.75 s -> 1.17 s;
+    SCALE.md round-7). The OUTPUT is hash-agnostic — the digest only
+    groups identical window content — so the DuckDB oracle, which
+    digests windows with md5, still hash-checks these rows: the
+    compared columns carry coverage counts, never digests."""
+    spans = _substring_spans(_t(spark, sf_dir, "documents"))
+    per_doc = spans.groupBy("doc_id", "n_tokens").agg(
+        F.sum("n_wins").alias("n_dup_windows"),
+        F.sum(F.col("e1") - F.col("s0")).alias("dup_token_coverage"),
+    )
+    return per_doc.select(
+        "doc_id",
+        "n_tokens",
+        "n_dup_windows",
+        F.col("dup_token_coverage").cast("long").alias("dup_token_coverage"),
+        F.round(
+            F.col("dup_token_coverage") / F.col("n_tokens").cast("double"), 6
+        ).alias("dup_fraction"),
     )
 
 
 def _rolling_windows_np(d, w: int):
-    """TRUE rolling-hash window stage (the ``AKT_SUBSTR_HASH=rolling``
-    budget path): tokens hashed once, then each w-token window digest
-    is O(1) via a modular-inverse prefix trick instead of O(w) string
-    assembly — the classic Rabin-Karp recurrence, vectorized over the
-    whole Arrow batch in uint64 wraparound arithmetic (mod 2^64, so
+    """TRUE rolling-hash window stage: tokens hashed once, then each
+    w-token window digest is O(1) via a modular-inverse prefix trick
+    instead of O(w) string assembly — the classic Rabin-Karp
+    recurrence, vectorized over the whole Arrow batch in uint64
+    wraparound arithmetic (mod 2^64, so
     the polynomial H(win) = sum h[t] * B^(w-1-t) is exact and
     position-independent). Per batch: one concatenated token-hash
     array, one cumsum, one gather — no per-window work at all.
@@ -2885,39 +2890,13 @@ def _rolling_windows_np(d, w: int):
     )
 
 
-def _substring_spans(d, hash_fn: str = "md5"):
+def _substring_spans(d):
     """Merged duplicated-window spans per document — the shared core of
     the substring-dedup REPORT (q_dedup_substring) and the substring
     CLIP (q_dedup_substring_clip): (doc_id, n_tokens, gid, s0, e1,
     n_wins) with 1-based token positions, span = tokens [s0, e1)."""
     w = _SUBSTR_W
-    if hash_fn == "rolling":
-        windows = _rolling_windows_np(d, w)
-    else:
-        ts = F.split(F.col("text"), " ")
-        n = F.size(ts)
-        if hash_fn == "xxhash64":
-            digest = lambda c: F.xxhash64(c)  # noqa: E731
-            wh_type = "bigint"
-        else:
-            digest = lambda c: F.md5(c)  # noqa: E731
-            wh_type = "string"
-        wins = F.when(
-            n >= w,
-            F.transform(
-                F.sequence(F.lit(1), n - w + 1),
-                lambda i: F.struct(
-                    i.alias("s"),
-                    digest(
-                        F.concat_ws(" ", F.slice(ts, i, F.lit(w)))
-                    ).alias("wh"),
-                ),
-            ),
-        ).otherwise(F.array().cast(f"array<struct<s:int,wh:{wh_type}>>"))
-        base = d.select("doc_id", n.alias("n_tokens"), wins.alias("__w"))
-        windows = base.select(
-            "doc_id", "n_tokens", F.explode("__w").alias("x")
-        ).select("doc_id", "n_tokens", F.col("x.s").alias("s"), F.col("x.wh").alias("wh"))
+    windows = _rolling_windows_np(d, w)
     dup = (
         windows.groupBy("wh")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -2939,23 +2918,6 @@ def _substring_spans(d, hash_fn: str = "md5"):
         F.min("s").alias("s0"),
         F.max(F.col("s") + w).alias("e1"),
         F.count(F.lit(1)).alias("n_wins"),
-    )
-
-
-def _substring_dedup(spark, sf_dir, hash_fn: str = "md5"):
-    spans = _substring_spans(_t(spark, sf_dir, "documents"), hash_fn)
-    per_doc = spans.groupBy("doc_id", "n_tokens").agg(
-        F.sum("n_wins").alias("n_dup_windows"),
-        F.sum(F.col("e1") - F.col("s0")).alias("dup_token_coverage"),
-    )
-    return per_doc.select(
-        "doc_id",
-        "n_tokens",
-        "n_dup_windows",
-        F.col("dup_token_coverage").cast("long").alias("dup_token_coverage"),
-        F.round(
-            F.col("dup_token_coverage") / F.col("n_tokens").cast("double"), 6
-        ).alias("dup_fraction"),
     )
 
 
@@ -3026,12 +2988,9 @@ def q_dedup_substring_clip(spark, sf_dir):
     rows each — bounded by n_tokens/1 but in practice by duplicated
     coverage), then a map-side positional filter lambda drops
     covered tokens — no per-token explode, no second corpus
-    shuffle. Same AKT_SUBSTR_HASH variants as the report; output is
-    hash-agnostic."""
+    shuffle. Same rolling window hash as the report."""
     d = _t(spark, sf_dir, "documents")
-    spans = _substring_spans(
-        d, _os.environ.get("AKT_SUBSTR_HASH", "rolling")
-    )
+    spans = _substring_spans(d)
     span_arr = spans.groupBy("doc_id").agg(
         F.sort_array(
             F.collect_list(F.struct(F.col("s0"), F.col("e1")))

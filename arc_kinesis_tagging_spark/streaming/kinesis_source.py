@@ -258,18 +258,6 @@ def _read_ranges(partition: ShardRanges):
             yield from out.to_batches()
 
 
-def _dbg(msg: str) -> None:
-    p = os.environ.get("KINESIS_EMU_DEBUG_LOG")
-    if p:
-        import time
-
-        with open(p, "a") as f:
-            f.write(f"{time.time():.3f} {msg}\n")
-
-
-_dbg(f"module-import pid={os.getpid()}")
-
-
 class KinesisEmuStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict) -> None:
         self.stream_dir = options["streamdir"]
@@ -293,7 +281,6 @@ class KinesisEmuStreamReader(DataSourceStreamReader):
         # rewound its offset log and re-read earlier batches.
         if self._base is None:
             self._base = dict(out)
-        _dbg(f"initialOffset pid={os.getpid()} id={id(self)} -> {out}")
         return out
 
     def latestOffset(self) -> dict:  # noqa: N802
@@ -303,7 +290,6 @@ class KinesisEmuStreamReader(DataSourceStreamReader):
         for s in _shard_dirs(self.stream_dir):
             actual[s] = _shard_end_seq(os.path.join(self.stream_dir, s))
         if self.max_per_shard is None:
-            _dbg(f"latestOffset-uncapped pid={os.getpid()} id={id(self)} -> {actual}")
             return actual
         # Admission control lives HERE, not in partitions(): Spark
         # checkpoints whatever end offset this returns, so partitions()
@@ -349,7 +335,6 @@ class KinesisEmuStreamReader(DataSourceStreamReader):
                 for s, a in actual.items()
             }
         self._base = dict(end)
-        _dbg(f"latestOffset pid={os.getpid()} id={id(self)} -> {end}")
         return end
 
     def reportLatestOffset(self) -> dict:  # noqa: N802
@@ -370,14 +355,13 @@ class KinesisEmuStreamReader(DataSourceStreamReader):
             )
             for shard_id, end_seq in sorted(end.items())
         ]
-        _dbg(f"partitions pid={os.getpid()} id={id(self)} start={start} end={end}")
         return pack_ranges(ranges)
 
     def read(self, partition: ShardRanges):
         yield from _read_ranges(partition)
 
     def commit(self, end: dict) -> None:
-        _dbg(f"commit pid={os.getpid()} id={id(self)} end={end}")  # chunks are retained; offsets live in the checkpoint
+        pass  # chunks are retained; offsets live in the checkpoint
 
     def stop(self) -> None:
         pass
@@ -456,7 +440,6 @@ class KinesisEmuStreamWriter(DataSourceStreamArrowWriter):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        _dbg(f"write-start pid={os.getpid()} part={pid}")
         batches = [b for b in iterator if b.num_rows]
         staging = os.path.join(self.stream_dir, ".staging")
         os.makedirs(staging, exist_ok=True)
@@ -472,7 +455,6 @@ class KinesisEmuStreamWriter(DataSourceStreamArrowWriter):
                 p = os.path.join(staging, f"stage-{uuid.uuid4().hex}.parquet")
                 pq.write_table(pa.table({"data": data}), p)
                 staged.append((sid, p, len(data)))
-        _dbg(f"write-end pid={os.getpid()} part={pid} staged={len(staged)}")
         return _StagedWrite(pid, staged)
 
     def _cleanup(self, messages) -> None:
@@ -522,7 +504,6 @@ class KinesisEmuStreamWriter(DataSourceStreamArrowWriter):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        _dbg(f"commit-start pid={os.getpid()} batch={batchId}")
         marker_dir = os.path.join(self.stream_dir, "_committed")
         os.makedirs(marker_dir, exist_ok=True)
         marker = os.path.join(marker_dir, f"batch-{int(batchId):020d}")
@@ -606,7 +587,6 @@ class KinesisEmuStreamWriter(DataSourceStreamArrowWriter):
             _publish_chunk(d, got, int(plan["start"]))
         os.replace(intent, marker)  # the commit point; content = the ranges
         self._cleanup(messages)
-        _dbg(f"commit-end pid={os.getpid()} batch={batchId}")
 
     def abort(self, messages, batchId) -> None:  # noqa: N802
         self._cleanup(messages)

@@ -99,28 +99,16 @@ def test_zero_norm_cosine_expr_is_zero(spark):
     assert df.collect()[0]["cos"] == 0.0
 
 
-def test_registry_rotations_are_reorderings():
-    """Every rotation must contain the full canonical query set —
-    bench.py's headline indexes QUERIES by name regardless of rotation,
-    and the legacy r2 rotation once dropped the TPC-H family (ADVICE
-    r03). Re-import the registry module under each rotation env value
-    and compare name sets."""
-    import importlib
-    import os
-
+def test_registry_head_leads_canonical_order():
+    """ALL_QUERIES holds every canonical query exactly once, with _HEAD
+    as its prefix — bench.py's headline indexes QUERIES by name, so a
+    dropped entry would KeyError there. A misspelled head name must
+    raise rather than silently lose its place."""
     import arc_kinesis_tagging_spark.plans.registry as reg
 
-    baseline = {q.name for q in reg.ALL_QUERIES}
-    saved = os.environ.get("AKT_REGISTRY_ROTATION")
-    try:
-        for rot in ("r1", "r2", "r3"):
-            os.environ["AKT_REGISTRY_ROTATION"] = rot
-            importlib.reload(reg)
-            assert {q.name for q in reg.ALL_QUERIES} == baseline, rot
-            assert len(reg.ALL_QUERIES) == len(reg.QUERIES), rot
-    finally:
-        if saved is None:
-            os.environ.pop("AKT_REGISTRY_ROTATION", None)
-        else:
-            os.environ["AKT_REGISTRY_ROTATION"] = saved
-        importlib.reload(reg)
+    names = [q.name for q in reg.ALL_QUERIES]
+    assert sorted(names) == sorted(q.name for q in reg._CANONICAL)
+    assert len(set(names)) == len(names) == len(reg.QUERIES)
+    assert names[: len(reg._HEAD)] == reg._HEAD
+    with pytest.raises(KeyError, match="q_no_such_query"):
+        reg._ordered([*reg._HEAD, "q_no_such_query"])

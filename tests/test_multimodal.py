@@ -3,6 +3,7 @@ mapInPandas, metadata correctness, per-record error isolation."""
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from arc_kinesis_tagging_spark.operators.multimodal import (
@@ -36,18 +37,28 @@ def test_corrupt_payload_isolated(spark):
     assert rows[2]["media_type"] is None
 
 
-def test_null_id_isolated(spark):
-    # a null id alongside a corrupt payload must not fail the job: the
-    # id is computed before the try so the except path never raises
-    from arc_kinesis_tagging_spark.operators.multimodal import decode_png
+@pytest.mark.parametrize("entry", [
+    "decode_media", "resize_media", "frame_sample_media", "decode_ppm",
+    "decode_png", "decode_jpeg", "decode_png_gray", "phash_gray",
+    "vhash_frames", "ahash_wav", "decode_jpeg420", "decode_png_palette",
+    "decode_png_gray16", "decode_png_adam7", "decode_wav",
+    "audio_features", "sample_y4m_frames", "thumbnail_png", "decode_gif",
+    "sample_gif_frames",
+])
+def test_null_id_isolated(spark, entry):
+    # a null id next to a corrupt payload in ONE batch must not fail the
+    # job: the shared per-record loop computes the id before the try, so
+    # the except path never raises; each record yields one null row
+    import arc_kinesis_tagging_spark.operators.multimodal as mm
 
     df = spark.createDataFrame(
         [(None, bytearray(b"junk")), (7, None)], "doc_id long, media binary"
-    )
-    rows = decode_media(df, "doc_id", "media").collect()
-    assert len(rows) == 2 and all(r["media_type"] is None for r in rows)
-    png_rows = decode_png(df, "doc_id", "media").collect()
-    assert len(png_rows) == 2 and all(r["width"] is None for r in png_rows)
+    ).coalesce(1)
+    out = getattr(mm, entry)(df, id_col="doc_id", media_col="media")
+    rows = out.collect()
+    assert sorted(r["media_id"] is None for r in rows) == [False, True]
+    for r in rows:
+        assert all(v is None for k, v in r.asDict().items() if k != "media_id")
 
 
 def test_resize_media(spark, sf_dir):

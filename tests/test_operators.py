@@ -459,44 +459,6 @@ def test_containment_prefix_equals_bruteforce_fuzz(spark):
             assert got == brute(docs, t, n), (t, n, docs, got)
 
 
-def test_ppjoin_knob_off_is_identity(spark, monkeypatch):
-    """AKT_PPJOIN_POS=off (the bench A/B knob) must change ONLY the
-    candidate volume, never the emitted pair set, for both pruned
-    joins."""
-    from arc_kinesis_tagging_spark.operators.dedup import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
-
-    docs = [
-        (0, "w0 w1 w2 w3 w4"), (1, "w0 w1 w2 w3 w4 w5"),
-        (2, "w0 w1"), (3, "w9 w8 w7"), (4, "w9 w8 w7 w6"),
-        (5, ""), (6, "w0"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-
-    def run_all():
-        j = sorted(
-            (r[0], r[1], round(r[2], 9))
-            for r in ngram_jaccard_pairs_prefix(
-                df, "text", "doc_id", 0.6, 1
-            ).collect()
-        )
-        c = sorted(
-            (r[0], r[1], round(r[2], 9))
-            for r in ngram_containment_pairs(
-                df, "text", "doc_id", 0.8, 1
-            ).collect()
-        )
-        return j, c
-
-    on = run_all()
-    monkeypatch.setenv("AKT_PPJOIN_POS", "off")
-    off = run_all()
-    assert on == off
-    assert on[0] and on[1]  # non-degenerate: both emit pairs
-
-
 def test_spread_gate_derived_inputs_no_execution(spark):
     """Round-15 spread gate for non-scan inputs: decided from the
     optimized plan's STATIC size estimate — (a) a small join-derived

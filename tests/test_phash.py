@@ -593,6 +593,24 @@ def test_ahash_incremental_matches_brute_force(spark, sf_dir, tmp_path):
     assert got == want and want
 
 
+def _vhash_pixels_unhoisted(group: int, frame: int, variant: int):
+    """Reference form of ``_vhash_pixels``: the literal floor-division/
+    modulo spelling the DuckDB oracles compute, without the hoisted
+    grid and variant masks of ``_phash_mix_pixels``."""
+    from arc_kinesis_tagging_spark.operators.multimodal import _PHASH_SRC
+
+    seed = (group * 1000003 + frame * 8191) % 2**31
+    x = np.arange(_PHASH_SRC, dtype=np.int64)[:, None]
+    y = np.arange(_PHASH_SRC, dtype=np.int64)[None, :]
+    h = seed * 2654435761 + (x * _PHASH_SRC + y) * 2246822519
+    p = ((h // 8192) ^ (h // 1048576)) % 256
+    if variant:
+        p = np.minimum(
+            255, p + np.where((x * 31 + y * 17) % 128 == variant, 20, 0)
+        )
+    return p.astype(np.uint8)
+
+
 def test_hoisted_mix_pixels_match_reference_form():
     """Round-15 §4.5 hoist: _phash_mix_pixels (shared grid + variant
     masks + shift/mask arithmetic) must be bit-identical to the
@@ -605,7 +623,6 @@ def test_hoisted_mix_pixels_match_reference_form():
         _phash_pixels,
         _phash_mix_pixels,
         _vhash_pixels,
-        _vhash_pixels_unhoisted,
     )
 
     for g in [0, 1, 7, 12502, 2**30, 2**31 - 1]:

@@ -11,9 +11,12 @@ import re
 import numpy as np
 import pytest
 
+from pyspark.sql import functions as F
+
 from arc_kinesis_tagging_spark.operators.quality_clf import (
     BIAS_BUCKET,
     CLF_SALT,
+    _weight_cols,
     apply_quality_classifier,
     clf_features,
     train_quality_classifier,
@@ -266,13 +269,87 @@ def test_clf_features_arrays_match_row_form(spark):
     assert arr.count() > 0
 
 
+def _train_rowform(
+    df, text_col, label_col, id_col, n_buckets, epochs, lr,
+    round_dp, classes,
+) -> dict:
+    """Reference trainer: the round-14 row-form GD loop. Per epoch a
+    doc-keyed score aggregate over (doc, bucket, x) rows with the
+    weights attached by ``_weight_cols`` (literal arrays up to
+    LITERAL_WEIGHTS_MAX_BUCKETS, a broadcast table join above), Spark
+    softmax-error expressions, a join back and a bucket-keyed gradient
+    aggregate whose b=BIAS_BUCKET row carries the bias gradient."""
+    spark = df.sparkSession
+    C = len(classes)
+    feats = clf_features(
+        df, text_col, id_col, n_buckets, extra_cols=(label_col,)
+    ).localCheckpoint(eager=True)
+    ids = feats.select(id_col).distinct().localCheckpoint(eager=True)
+    n_docs = ids.count()
+    feats_grad = feats.select(id_col, "b", "x").unionByName(
+        ids.select(
+            F.col(id_col),
+            F.lit(BIAS_BUCKET).cast("long").alias("b"),
+            F.lit(1.0).alias("x"),
+        )
+    ).localCheckpoint(eager=True)
+    W = np.zeros((n_buckets, C))
+    bias = np.zeros(C)
+    for _ in range(epochs):
+        fw, wcols = _weight_cols(spark, W, bias, n_buckets, feats, C)
+        s = fw.groupBy(id_col, label_col).agg(*[
+            (
+                F.sum(F.col("x") * wcols[c]) + F.lit(float(bias[c]))
+            ).alias(f"s{c}")
+            for c in range(C)
+        ])
+        m = F.greatest(*[F.col(f"s{c}") for c in range(C)])
+        exps = [F.exp(F.col(f"s{c}") - m) for c in range(C)]
+        z = exps[0]
+        for e in exps[1:]:
+            z = z + e
+        err = s.select(
+            id_col,
+            *[
+                (exps[c] / z
+                 - (F.col(label_col) == F.lit(classes[c])).cast("double")
+                 ).alias(f"e{c}")
+                for c in range(C)
+            ],
+        )
+        grad_rows = (
+            feats_grad.join(err, id_col)
+            .groupBy("b")
+            .agg(*[
+                F.sum(F.col("x") * F.col(f"e{c}")).alias(f"g{c}")
+                for c in range(C)
+            ])
+            .collect()
+        )
+        G = np.zeros_like(W)
+        gb = np.zeros(C)
+        for r in grad_rows:
+            if r["b"] == BIAS_BUCKET:
+                gb = np.array([r[f"g{c}"] for c in range(C)])
+            else:
+                G[r["b"]] = [r[f"g{c}"] for c in range(C)]
+        W -= (lr / n_docs) * G
+        bias -= (lr / n_docs) * gb
+    return {
+        "classes": classes,
+        "W": np.round(W, round_dp).tolist(),
+        "bias": np.round(bias, round_dp).tolist(),
+        "n_buckets": n_buckets,
+    }
+
+
 def test_arrayform_trainer_matches_rowform(spark):
-    """The round-15 numpy-epoch trainer (_train_arrayform: one
-    map-only Arrow pass per epoch, driver-summed partial gradients)
-    must return the IDENTICAL rounded model as the row-form GD loop
-    on the docs fixture — the bit-level guarantee the bench query
-    relies on (verified IDENTICAL at sf0.001/0.01/0.1 during the
-    round; this pins the small-SF case in-tree)."""
+    """The numpy-epoch trainer (_train_arrayform: one map-only Arrow
+    pass per epoch, driver-summed partial gradients) must return the
+    IDENTICAL rounded model as the row-form GD reference on the docs
+    fixture, below the literal-weight bound (64 buckets) and above it
+    (8192, where the reference's weights ride as a broadcast join):
+    the array form is the only trainer at every bucket count."""
     import arc_kinesis_tagging_spark.operators.quality_clf as qc
 
     # an unlabeled doc must contribute nothing in either form
@@ -283,8 +360,10 @@ def test_arrayform_trainer_matches_rowform(spark):
         r[0] for r in df.select("label").distinct().collect()
         if r[0] is not None
     )
-    m_arr = qc._train_arrayform(
-        df, "text", "label", "doc_id", 64, 3, 0.5, 6, classes)
-    m_row = qc._train_rowform(
-        df, "text", "label", "doc_id", 64, 3, 0.5, 6, classes)
-    assert m_arr == m_row
+    assert 64 <= qc.LITERAL_WEIGHTS_MAX_BUCKETS < 8192
+    for n_buckets in (64, 8192):
+        m_arr = qc._train_arrayform(
+            df, "text", "label", "doc_id", n_buckets, 3, 0.5, 6, classes)
+        m_row = _train_rowform(
+            df, "text", "label", "doc_id", n_buckets, 3, 0.5, 6, classes)
+        assert m_arr == m_row, n_buckets

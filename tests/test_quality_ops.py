@@ -706,27 +706,7 @@ def test_prefix_dedup_zipfian_skew_balanced(spark):
     assert max(counts) <= 3 * (len(uniq) / n_parts), counts
 
 
-def test_substring_hash_variants_agree(spark, sf_dir, monkeypatch):
-    """The window digest only groups identical window content, so the
-    rolling default (vectorized Rabin-Karp kernel, 6.6x), md5 (the
-    digest the oracle uses internally), and xxhash64 (cheap digest)
-    variants must all return identical rows — the equivalence that
-    lets the md5-replicating oracle hash-check the rolling default."""
-    from arc_kinesis_tagging_spark.plans.quality_ops import q_dedup_substring
-
-    def rows(variant):
-        monkeypatch.setenv("AKT_SUBSTR_HASH", variant)
-        return sorted(
-            map(tuple, q_dedup_substring(spark, sf_dir).collect())
-        )
-
-    md5_rows = rows("md5")
-    assert md5_rows
-    assert md5_rows == rows("xxhash64")
-    assert md5_rows == rows("rolling")
-
-
-def test_substring_clip_toy(spark, tmp_path, monkeypatch):
+def test_substring_clip_toy(spark, tmp_path):
     """Known-answer clip: a 20-token run shared by two documents is
     removed exactly (merged window coverage = the shared run, nothing
     more), untouched documents pass through verbatim."""
@@ -744,7 +724,6 @@ def test_substring_clip_toy(spark, tmp_path, monkeypatch):
         ["doc_id", "text"],
     )
     docs.write.parquet(str(tmp_path / "documents.parquet"))
-    monkeypatch.setenv("AKT_SUBSTR_HASH", "rolling")
     rows = {
         r["doc_id"]: r
         for r in q_dedup_substring_clip(spark, str(tmp_path)).collect()
@@ -757,17 +736,15 @@ def test_substring_clip_toy(spark, tmp_path, monkeypatch):
     assert (rows[3]["n_tokens"], rows[3]["n_kept"]) == (7, 7)
 
 
-def test_substring_clip_matches_report(spark, sf_dir, monkeypatch):
+def test_substring_clip_matches_report(spark, sf_dir):
     """Cross-op invariant on the real corpus: clipped tokens per doc ==
-    the report's merged dup_token_coverage, every doc survives into the
-    output, and the md5 window-digest variant clips identically to the
-    rolling default (the digest only groups identical content)."""
+    the report's merged dup_token_coverage, and every doc survives into
+    the output."""
     from arc_kinesis_tagging_spark.plans.quality_ops import (
         q_dedup_substring,
         q_dedup_substring_clip,
     )
 
-    monkeypatch.setenv("AKT_SUBSTR_HASH", "rolling")
     rep = {
         r["doc_id"]: r for r in q_dedup_substring(spark, sf_dir).collect()
     }
@@ -783,12 +760,6 @@ def test_substring_clip_matches_report(spark, sf_dir, monkeypatch):
             assert len(c["clean_text"].split(" ")) == c["n_kept"], doc_id
         else:
             assert c["clean_text"] == "", doc_id
-    monkeypatch.setenv("AKT_SUBSTR_HASH", "md5")
-    clip_md5 = {
-        r["doc_id"]: r
-        for r in q_dedup_substring_clip(spark, sf_dir).collect()
-    }
-    assert clip == clip_md5
 
 
 def test_lm_buckets_are_exact_tertiles(spark, sf_dir):

@@ -89,8 +89,19 @@ def test_winnowing_short_and_tie_edge(spark):
     """Docs shorter than k + w - 1 emit no fingerprint (0, 0); a
     repeated-character doc (all gram hashes equal) exercises the
     rightmost-tie rule — every window selects its LAST gram, so the
-    fingerprint count equals the window count."""
-    docs = [(0, "short"), (1, "aaaaaaaaaaaa"), (2, "")]
+    fingerprint count equals the window count. Every edge shape
+    (empty, sub-k, exactly k, exactly k + w - 1, multibyte, periodic
+    ties) also matches the pure-Python reference."""
+    docs = [
+        (0, "short"),              # exactly k chars: 1 gram, no window
+        (1, "aaaaaaaaaaaa"),       # all-tie hashes: rightmost rule
+        (2, ""),                   # empty
+        (3, "tiny"),               # < k chars: 0 grams
+        (4, "abcdefgh"),           # exactly k+w-1: one window
+        (5, "naïve café ütf-8 ラーメン text"),  # multibyte chars
+        (6, "ab ab ab ab ab ab"),  # periodic ties
+        (7, "the quick brown fox jumps over the lazy dog"),
+    ]
     import tempfile, os
 
     d = tempfile.mkdtemp()
@@ -110,65 +121,13 @@ def test_winnowing_short_and_tie_edge(spark):
     assert rows[1]["n_fps"] == len(sel) == 5
     assert rows[1]["fp_xor"] == _h("aaaaa")
 
-
-def test_winnowing_xxhash_flag_structure(spark, monkeypatch):
-    """AKT_WINNOW_HASH=xxhash64: same algorithm under a different hash
-    order — gram/row counts unchanged, repeated-char docs still select
-    one gram per window (hash-agnostic ties), output deterministic
-    across two runs, and n_fps stays within the winnowing density
-    bounds (at least one fingerprint per disjoint window block, at
-    most one per window)."""
-    docs = [(0, "the quick brown fox jumps over the lazy dog"),
-            (1, "aaaaaaaaaaaa"), (2, "short")]
-    import os, tempfile
-
-    d = tempfile.mkdtemp()
-    spark.createDataFrame(docs, "doc_id long, text string").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "documents.parquet"))
-
-    monkeypatch.setenv("AKT_WINNOW_HASH", "xxhash64")
-    r1 = {r["doc_id"]: r for r in q_text_winnowing(spark, d).collect()}
-    r2 = {r["doc_id"]: r for r in q_text_winnowing(spark, d).collect()}
-    assert r1 == r2  # deterministic
-    monkeypatch.delenv("AKT_WINNOW_HASH")
-    rmd = {r["doc_id"]: r for r in q_text_winnowing(spark, d).collect()}
-
+    assert rows[4]["n_fps"] == 1  # one window, one fingerprint
+    assert len(rows) == len(docs)
     for did, t in docs:
-        assert r1[did]["n_grams"] == rmd[did]["n_grams"] == max(len(t) - K + 1, 0)
-    n_wins = len(docs[0][1]) - K + 1 - W + 1
-    assert 1 <= r1[0]["n_fps"] <= n_wins
-    assert r1[1]["n_fps"] == 5 and rmd[1]["n_fps"] == 5  # tie rule, hash-agnostic
-    assert r1[2]["n_fps"] == 0
-
-
-def test_winnowing_kernel_matches_expression_form(spark, monkeypatch):
-    """Round-15 batch-native kernel (default path) must produce the
-    IDENTICAL rows as the pure-Catalyst expression form it replaced
-    (AKT_WINNOW_IMPL=expr, kept as the witness): same md5 gram
-    hashes, same rightmost-min tie rule, same distinct-pair count and
-    xor — over edge shapes (empty, sub-k, sub-window, all-ties,
-    multibyte) and the fixture corpus."""
-    import os
-    import tempfile
-
-    docs = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, "aaaaaaaaaaaa"),       # all-tie hashes: rightmost rule
-        (2, "short"),              # exactly k chars: 1 gram, no window
-        (3, "tiny"),               # < k chars: 0 grams
-        (4, ""),                   # empty
-        (5, "abcdefgh"),           # exactly k+w-1: one window
-        (6, "naïve café ütf-8 ラーメン text"),  # multibyte chars
-        (7, "ab ab ab ab ab ab"),  # periodic ties
-    ]
-    d = tempfile.mkdtemp()
-    spark.createDataFrame(docs, "doc_id long, text string").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "documents.parquet"))
-
-    kern = sorted(map(tuple, q_text_winnowing(spark, d).collect()))
-    monkeypatch.setenv("AKT_WINNOW_IMPL", "expr")
-    expr = sorted(map(tuple, q_text_winnowing(spark, d).collect()))
-    assert kern == expr
-    assert len(kern) == len(docs)
+        sel = _winnow(t)
+        want_xor = 0
+        for _p, h in sel:
+            want_xor ^= h
+        r = rows[did]
+        assert r["n_grams"] == max(len(t) - K + 1, 0), did
+        assert (r["n_fps"], r["fp_xor"]) == (len(sel), want_xor), did
