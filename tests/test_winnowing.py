@@ -131,3 +131,85 @@ def test_winnowing_short_and_tie_edge(spark):
         r = rows[did]
         assert r["n_grams"] == max(len(t) - K + 1, 0), did
         assert (r["n_fps"], r["fp_xor"]) == (len(sel), want_xor), did
+
+
+def _winnow_expression_form(docs_df):
+    """The pure-Catalyst expression form of q_text_winnowing (nested
+    HOF transform/aggregate over the md5 gram-hash array), kept here as
+    an independent witness for the mapInPandas kernel."""
+    from pyspark.sql import functions as F
+
+    from arc_kinesis_tagging_spark.functions.text import stable_hash64
+
+    text = F.col("text")
+    ng = F.greatest(F.length(text) - F.lit(K - 1), F.lit(0))
+    gram_idx = F.when(ng >= 1, F.sequence(F.lit(1), ng)).otherwise(
+        F.array().cast("array<int>")
+    )
+    with_h = docs_df.select(
+        "doc_id",
+        ng.cast("long").alias("n_grams"),
+        F.transform(
+            gram_idx, lambda i: stable_hash64(text.substr(i, F.lit(K)))
+        ).alias("hs"),
+    )
+    nw = F.greatest(F.size(F.col("hs")) - F.lit(W - 1), F.lit(0))
+    win_idx = F.when(nw >= 1, F.sequence(F.lit(1), nw)).otherwise(
+        F.array().cast("array<int>")
+    )
+    # rightmost argmin per window: fold offsets left->right, <= keeps
+    # the later (higher-position) gram on equal hashes
+    sel = F.transform(
+        win_idx,
+        lambda j: F.aggregate(
+            F.sequence(F.lit(0), F.lit(W - 1)),
+            F.struct(
+                F.lit((1 << 63) - 1).cast("long").alias("h"),
+                F.lit(-1).alias("p"),
+            ),
+            lambda acc, o: F.when(
+                F.element_at(F.col("hs"), (j + o).cast("int")) <= acc["h"],
+                F.struct(
+                    F.element_at(F.col("hs"), (j + o).cast("int")).alias("h"),
+                    (j + o).cast("int").alias("p"),
+                ),
+            ).otherwise(acc),
+        ),
+    )
+    fps = F.array_distinct(sel)
+    return with_h.select(
+        "doc_id",
+        "n_grams",
+        F.size(fps).cast("long").alias("n_fps"),
+        F.aggregate(
+            fps, F.lit(0).cast("long"), lambda a, s: a.bitwiseXOR(s["h"])
+        ).alias("fp_xor"),
+    )
+
+
+def test_winnowing_kernel_matches_expression_form(spark):
+    """The batch-native kernel produces the IDENTICAL rows as the
+    pure-Catalyst expression form (same md5 gram hashes, same
+    rightmost-min tie rule, same distinct-pair count and xor) over edge
+    shapes (empty, sub-k, sub-window, all-ties, multibyte)."""
+    import os
+    import tempfile
+
+    docs = [
+        (0, "the quick brown fox jumps over the lazy dog"),
+        (1, "aaaaaaaaaaaa"),       # all-tie hashes: rightmost rule
+        (2, "short"),              # exactly k chars: 1 gram, no window
+        (3, "tiny"),               # < k chars: 0 grams
+        (4, ""),                   # empty
+        (5, "abcdefgh"),           # exactly k+w-1: one window
+        (6, "naïve café ütf-8 ラーメン text"),  # multibyte chars
+        (7, "ab ab ab ab ab ab"),  # periodic ties
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    d = tempfile.mkdtemp()
+    df.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
+
+    kern = sorted(map(tuple, q_text_winnowing(spark, d).collect()))
+    expr = sorted(map(tuple, _winnow_expression_form(df).collect()))
+    assert kern == expr
+    assert len(kern) == len(docs)
