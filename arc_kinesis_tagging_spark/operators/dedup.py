@@ -186,7 +186,7 @@ def minhash_near_duplicates(
     # lifetime on every call (see operators/textops.py:167).
     sigs = _minhash_sigs(
         df, text_col, key_col, n_hashes, shingle_n
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     return _minhash_pairs_from_sigs(
         sigs, n_hashes, bands, jaccard_threshold, max_bucket_size
     )
@@ -359,7 +359,7 @@ def ngram_jaccard_pairs(
     # row multiset as the expression form, measured ~4x faster).
     sh = _hashed_shingle_rows(
         df, text_col, key_col, shingle_n
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     sizes = sh.groupBy("key").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col("key").alias("key_a"), "tok")
     b = sh.select(F.col("key").alias("key_b"), "tok")
@@ -454,7 +454,7 @@ def ngram_jaccard_pairs_prefix(
     # expression form, measured ~4x faster — see _hashed_shingle_rows)
     sh = _hashed_shingle_rows(
         df, text_col, key_col, shingle_n
-    ).localCheckpoint(eager=False)  # feeds freq, rank, verify
+    ).localCheckpoint(eager=True)  # feeds freq, rank, verify
     freq = sh.groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
     ranked = (
         sh.join(freq, "tok")
@@ -474,9 +474,9 @@ def ngram_jaccard_pairs_prefix(
         )
         # pin: the prefix SELF-join duplicates its subtree per side —
         # without it the freq-join + rank-window chain runs twice at
-        # runtime (same lazy discipline as the sh pin and the
+        # runtime (same pin discipline as the sh pin and the
         # containment join's ranked pin)
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     t_floor = decimal.Decimal(threshold).quantize(
         decimal.Decimal("1e-12"), rounding=decimal.ROUND_FLOOR
@@ -543,11 +543,11 @@ def ngram_jaccard_pairs_prefix(
     # pin: BOTH verify join sides read the collected set table —
     # without it the key-shuffle + collect_set aggregate over the full
     # shingle rows runs once per side (it showed up twice in the
-    # round-14 before-plan); the lazy checkpoint makes the first
+    # round-14 before-plan); the checkpoint makes the first
     # materialization back both
     sets_ = sh.groupBy("key").agg(
         F.collect_set("tok").alias("toks")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     return (
         cand.join(
             sets_.select(F.col("key").alias("key_a"), F.col("toks").alias("toks_a")),
@@ -618,7 +618,7 @@ def ngram_containment_pairs(
     # twin) — one collect_set pass instead of two
     sets_ = sh.groupBy("key").agg(
         F.collect_set("tok").alias("toks")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     return (
         cand.join(
             sets_.select(F.col("key").alias("key_a"), F.col("toks").alias("toks_a")),
@@ -657,7 +657,7 @@ def _containment_candidates(
     # expression form, measured ~4x faster — see _hashed_shingle_rows)
     sh = _hashed_shingle_rows(
         df, text_col, key_col, shingle_n
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     freq = sh.groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
     ranked = (
         sh.join(freq, "tok")
@@ -676,11 +676,9 @@ def _containment_candidates(
         )
         # pin: TWO consumers (the prefix side and the full index side
         # both need pos/sz for the positional filter) — without it the
-        # freq-join + rank-window chain runs once per consumer. Lazy
-        # (same discipline as the sh pin above): the physical plan
-        # still ENUMERATES both subtrees (see the EXCHANGE_BUDGET
-        # note), but at runtime the first materialization backs both.
-        .localCheckpoint(eager=False)
+        # freq-join + rank-window chain runs once per consumer (same
+        # discipline as the sh pin above).
+        .localCheckpoint(eager=True)
     )
     t_floor = decimal.Decimal(threshold).quantize(
         decimal.Decimal("1e-12"), rounding=decimal.ROUND_FLOOR
@@ -786,7 +784,7 @@ def simhash_near_duplicates(
     # compute, single-task behind a single-row-group scan otherwise.
     sh = _spread_small_scan(df.select(key_col, text_col)).select(
         F.col(key_col).alias("key"), _simhash64(text_col).alias("sim")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     chunks = sh.select(
         "key",
         "sim",
@@ -875,8 +873,8 @@ def phash_near_dup_pairs(
     hamming), each unordered pair once."""
     ph = hashes.filter(F.col(hash_col).isNotNull()).select(
         F.col(id_col).alias("key"), F.col(hash_col).alias("ph")
-    ).localCheckpoint(eager=False)
-    # ^ both sides of the bucket self-join read this table; lazy
+    ).localCheckpoint(eager=True)
+    # ^ both sides of the bucket self-join read this table;
     # localCheckpoint so the ContextCleaner reclaims the blocks once
     # the returned plan is GC'd (persist() in a builder leaks cache —
     # bench reps and the scale ladder call this repeatedly).
@@ -1045,9 +1043,9 @@ def vhash_near_dup_pairs(
         F.col(id_col).alias("key"),
         F.col(frame_col).alias("f"),
         F.col(hash_col).alias("fh"),
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     # ^ candidate banding AND both verify sides read this per-frame
-    # table (K x the video count); lazy localCheckpoint, not persist(),
+    # table (K x the video count); localCheckpoint, not persist(),
     # so repeated invocations in a long-lived driver don't accumulate
     # cached tables (ContextCleaner reclaims on plan GC).
     chunks = _frame_chunks(fh, max_hamming, hash_bits).select(
@@ -1179,9 +1177,9 @@ def vhash_batch_against_corpus(
         F.col(id_col).alias("key"),
         F.col(frame_col).alias("f"),
         F.col(hash_col).alias("fh"),
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     # ^ batch-sized; feeds candidate banding, the verify join, and the
-    # batch frame counts — lazy pin, ContextCleaner reclaims on GC.
+    # batch frame counts — pinned, ContextCleaner reclaims on GC.
     bchunks = _frame_chunks(bfh, max_hamming, hash_bits).select(
         F.col("key").alias("id_batch"), "f", "band", "chunk"
     )

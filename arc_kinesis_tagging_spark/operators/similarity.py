@@ -267,8 +267,8 @@ def cosine_threshold_pairs(
     )
     assigned = _assign_cells(
         df, F.broadcast(centroids), id_col, vec_col, rank_limit=1, keep_sim=True
-    ).localCheckpoint(eager=False)
-    # ^ reused 3x below; without the pin each branch re-scores. Lazy
+    ).localCheckpoint(eager=True)
+    # ^ reused 3x below; without the pin each branch re-scores.
     # localCheckpoint instead of persist(): builder-returned plan has
     # no unpersist point, and ContextCleaner reclaims checkpoint
     # blocks on GC where persist() would leak for the session.

@@ -223,7 +223,7 @@ def prefix_subsumed_marks(
     and the boundary rows are exchanged through a num_partitions-row
     side table: partition p's LAST row takes as successor the minimum
     first-row among partitions > p. The partition ids are pinned with
-    a lazy localCheckpoint so the window branch and the boundary
+    an eager localCheckpoint so the window branch and the boundary
     branch see the same range split. Global sorted adjacency is
     recovered exactly; per-partition work is balanced by row count
     regardless of first-character skew.
@@ -238,7 +238,7 @@ def prefix_subsumed_marks(
         .distinct()
         .repartitionByRange(num_partitions, F.col(col))
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     w = Window.partitionBy("__pid").orderBy(col)
     marked = t.withColumn("__nxt_local", F.lead(col).over(w))

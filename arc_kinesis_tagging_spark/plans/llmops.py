@@ -1426,12 +1426,12 @@ def q_corpus_pipeline6(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    # lazy pin: the text-dedup aggregate feeds both the stage-2
+    # pin: the text-dedup aggregate feeds both the stage-2
     # subtree and the final anti join — one survivor materialization
     # instead of two full text-keyed shuffles (round 14)
     survivors = d.groupBy("text").agg(
         F.min("doc_id").alias("doc_id")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     n = spark.sparkContext.defaultParallelism
     hashes = phash_gray(
         attach_phash_media(
@@ -1511,12 +1511,12 @@ def q_corpus_pipeline7(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    # lazy pin: the text-dedup aggregate feeds both the stage-2
+    # pin: the text-dedup aggregate feeds both the stage-2
     # subtree and the final anti join — one survivor materialization
     # instead of two full text-keyed shuffles (round 14)
     survivors = d.groupBy("text").agg(
         F.min("doc_id").alias("doc_id")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     n = spark.sparkContext.defaultParallelism
     hashes = ahash_wav(
         attach_ahash_media(
@@ -1599,12 +1599,12 @@ def q_corpus_pipeline8(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    # lazy pin: the text-dedup aggregate feeds both the stage-2
+    # pin: the text-dedup aggregate feeds both the stage-2
     # subtree and the final anti join — one survivor materialization
     # instead of two full text-keyed shuffles (round 14)
     survivors = d.groupBy("text").agg(
         F.min("doc_id").alias("doc_id")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     n = spark.sparkContext.defaultParallelism
     fh = vhash_frames(
         attach_vhash_media(
@@ -1689,12 +1689,12 @@ def q_corpus_pipeline9(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     e = _t(spark, sf_dir, "embeddings")
-    # lazy pin: the text-dedup aggregate feeds both the stage-2
+    # pin: the text-dedup aggregate feeds both the stage-2
     # subtree and the final anti join — one survivor materialization
     # instead of two full text-keyed shuffles (round 14)
     survivors = d.groupBy("text").agg(
         F.min("doc_id").alias("doc_id")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     se = e.join(
         survivors.select(F.col("doc_id").alias("vec_id")),
         "vec_id",
@@ -1803,7 +1803,7 @@ def q_corpus_pipeline10(spark, sf_dir):
     s1 = (
         en.groupBy("text")
         .agg(F.min("doc_id").alias("doc_id"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     nd_drop = (
         ngram_jaccard_pairs_prefix(
@@ -2601,11 +2601,11 @@ def q_corpus_pipeline11(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    # lazy pin: s1 feeds the image-hash subtree AND the s2 anti join
+    # pin: s1 feeds the image-hash subtree AND the s2 anti join
     # (round 14 — same one-materialization discipline as s2 below)
     s1 = d.groupBy("text").agg(
         F.min("doc_id").alias("doc_id")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     n = spark.sparkContext.defaultParallelism
     ph = phash_gray(
         attach_phash_media(s1.repartition(n, "doc_id"), "doc_id"),
@@ -2618,7 +2618,7 @@ def q_corpus_pipeline11(spark, sf_dir):
         .distinct()
     )
     s2 = s1.join(pdrop, "doc_id", "left_anti").localCheckpoint(
-        eager=False
+        eager=True
     )
     ah = ahash_wav(
         attach_ahash_media(s2.repartition(n, "doc_id"), "doc_id"),
@@ -2723,11 +2723,11 @@ def q_corpus_pipeline12(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    # lazy pin: s1 feeds the containment-join subtree AND the final
+    # pin: s1 feeds the containment-join subtree AND the final
     # anti join (round 14 — one text-dedup materialization)
     s1 = d.groupBy("text").agg(
         F.min("doc_id").alias("doc_id")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     pairs = ngram_containment_pairs(
         s1, "text", "doc_id", threshold=0.8, shingle_n=3
     )

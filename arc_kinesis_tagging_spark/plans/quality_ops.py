@@ -364,7 +364,7 @@ def q_text_repetition(spark, sf_dir):
     # the corpus as ONE task behind the single-row-group scan (r14)
     toks = spread_small_scan(d.select("doc_id", "text")).select(
         "doc_id", F.split(F.col("text"), " ").alias("__toks")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     word_counts = (
         toks.select("doc_id", F.explode("__toks").alias("tok"))
         .groupBy("doc_id", "tok")
@@ -2108,9 +2108,9 @@ def q_ngram_lm_score(spark, sf_dir):
     # (the bigram explode and vocab's token explode); on a
     # single-row-group fixture every one of those passes ran as ONE
     # task (round-14 measurement) — the spread parallelizes them and
-    # the lazy pin materializes the tiny text projection once
+    # the pin materializes the tiny text projection once
     sp = spread_small_scan(d.select("doc_id", "text")).localCheckpoint(
-        eager=False
+        eager=True
     )
     # ONE aggregate sees bigram OCCURRENCES (bgc, the per-doc distinct
     # counts); the model tables chain off it — nab = sum of m over
@@ -2125,7 +2125,7 @@ def q_ngram_lm_score(spark, sf_dir):
         "doc_id", F.col("b.ta").alias("ta"), F.col("b.tb").alias("tb")
     ).groupBy("doc_id", "ta", "tb").agg(
         F.count(F.lit(1)).alias("m")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     nab = bgc.groupBy("ta", "tb").agg(F.sum("m").alias("nab"))
     na = bgc.groupBy("ta").agg(F.sum("m").alias("na"))
     vocab = sp.select(F.explode(ts).alias("t")).agg(
@@ -2234,13 +2234,13 @@ def q_ngram_lm_pruned(spark, sf_dir):
     # model tables chain off the single occurrence-sized aggregate
     # bgc (round-15, same exact-integer identities as lm_score)
     sp = spread_small_scan(d.select("doc_id", "text")).localCheckpoint(
-        eager=False
+        eager=True
     )
     bgc = sp.select("doc_id", F.explode(bigrams).alias("b")).select(
         "doc_id", F.col("b.ta").alias("ta"), F.col("b.tb").alias("tb")
     ).groupBy("doc_id", "ta", "tb").agg(
         F.count(F.lit(1)).alias("m")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     nab = bgc.groupBy("ta", "tb").agg(F.sum("m").alias("nab"))
     # top-V prune: \x01 sorts below every token character, so the
     # composite key's string order equals the (ta, tb) pair order —
@@ -2470,14 +2470,14 @@ def q_lm_buckets(spark, sf_dir):
     )
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     # the scored stream feeds THREE consumers (histogram, per-lang
-    # totals, final bucket join); a lazy local checkpoint pins it so
+    # totals, final bucket join); a local checkpoint pins it so
     # the LM scoring pipeline materializes once. Measured gain at
     # sf0.1 is modest (3.74 -> 3.53 s: ReusedExchange already
     # deduplicated most of the repeated subtree), but the checkpoint
     # makes the once-only property structural rather than dependent
     # on exchange-reuse firing, at the usual non-replicated-block
     # trade-off (cheap recompute on executor loss).
-    s = scores.join(d, "doc_id").localCheckpoint(eager=False)
+    s = scores.join(d, "doc_id").localCheckpoint(eager=True)
     hist = s.groupBy("lang", "bits_per_token").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -3296,7 +3296,7 @@ def _dsir_scored(spark, sf_dir):
     # rows, per bucket).
     feats = hashed_gram_bucket_counts(
         d, "text", "doc_id", _DSIR_B, salt="dsir:", extra_cols=("lang",)
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     model = feats.groupBy("b").agg(
         F.sum("m").alias("cr"),
         F.sum(
@@ -3489,21 +3489,21 @@ def _clf_onestep_scored(docs: DataFrame) -> DataFrame:
     C = len(_CLF_CLASSES)
     feats = clf_features(
         docs, "text", "doc_id", _CLF_B, extra_cols=("lang",)
-    ).localCheckpoint(eager=False)  # 3 consumers, see docstring
+    ).localCheckpoint(eager=True)  # 3 consumers, see docstring
     # per-class doc counts straight off the docs frame: a doc carries
     # features iff it has >= 1 token (every token is a unigram gram),
     # so this map-side scan + 1-row aggregate equals the former
     # distinct-over-features — which shuffled the full feature table
     # TWICE (the 1-row result is consumed by two crossJoins and the
     # plan enumerated the distinct per consumer; round-14 before-plan).
-    # Pinned lazily so the second crossJoin reads the materialized row.
+    # Pinned so the second crossJoin reads the materialized row.
     nd = docs.filter(F.size(tokens(F.col("text"))) > 0).agg(
         F.count(F.lit(1)).alias("n"),
         *[
             F.sum((F.col("lang") == c).cast("long")).alias(f"n_{i}")
             for i, c in enumerate(_CLF_CLASSES)
         ],
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     w1 = (
         feats.groupBy("b")
         .agg(
@@ -3606,11 +3606,11 @@ def q_corpus_pipeline13(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     ).withColumn("dg", F.md5("text"))
-    # lazy pin: the digest-dedup aggregate feeds the survivor semi
+    # pin: the digest-dedup aggregate feeds the survivor semi
     # join AND the dropped-count anti join (round 14)
     keep = d.groupBy("dg").agg(
         F.min("doc_id").alias("doc_id")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     surv = d.join(keep.select("doc_id"), "doc_id", "left_semi")
     dropped = (
         d.join(keep.select("doc_id"), "doc_id", "left_anti")

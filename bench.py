@@ -1,11 +1,18 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line with per-query wall-clock seconds.
+ONE JSON line with the suite's wall-clock seconds.
 
 Each query is forced to full execution with a noop-format write
 (df.write.format("noop")) so timing covers scan -> shuffle -> sink
 without driver collection overhead. One warm-up run of a tiny query
 amortizes JVM/session startup out of the per-query numbers.
+
+The full record (per-entry wall seconds under ``queries``, the busy
+CPU seconds of the same rep under ``cpu``) goes to the untracked
+BENCH_full_latest.json. ``--compare FILE`` also prints per-entry wall
+and cpu ratios against FILE's record and exits 1 on any entry more
+than 1.5x and 0.25 s slower; tools/qtime.py's paired A/B against the
+parent commit then decides whether a flag is real.
 """
 
 from __future__ import annotations
@@ -369,458 +376,72 @@ def bench_stream_tee(spark, sf_dir: str, n_records: int = 20000) -> tuple[float,
     return dt, n_records / dt
 
 
-def _recover_from_tail(raw: dict) -> dict:
-    """Salvage per-query seconds from a driver artifact whose stdout
-    tail-capture truncated the JSON line (BENCH_r03.json: parsed=null,
-    tail starts mid-queries-map). The `"q_name": 1.23` pairs survive in
-    the tail text; stop at the "compare" block so prior-round delta
-    values are never mistaken for timings."""
-    import re
-
-    tail = raw.get("tail") or ""
-    cut = tail.find('"compare"')
-    if cut >= 0:
-        tail = tail[:cut]
-    out: dict = {}
-    for name, val in re.findall(
-        r'"(q_[A-Za-z0-9_]+|stream_pipeline_20k)":\s*([0-9]+(?:\.[0-9]+)?)',
-        tail,
-    ):
-        out.setdefault(name, float(val))
-    return out
+def busy_cpu_s() -> float:
+    """Busy CPU seconds of the whole machine since boot: user + nice +
+    system + irq + softirq of ``/proc/stat`` (perfbench's ``cpu_s``
+    definition). Machine-wide, so it counts the JVM, its Python workers
+    and anything else running on the host."""
+    with open("/proc/stat") as fh:
+        f = [int(x) for x in fh.readline().split()[1:]]
+    return (f[0] + f[1] + f[2] + f[5] + f[6]) / os.sysconf("SC_CLK_TCK")
 
 
-def _round_of(path: str) -> int | None:
-    """BENCH_r13.json -> 13 (None for non-round-named baselines)."""
-    import re
-
-    m = re.match(r"BENCH_r0*(\d+)\.json$", os.path.basename(path))
-    return int(m.group(1)) if m else None
-
-
-def _record_matches(raw: dict, full: dict) -> bool:
-    """A full per-query record belongs to a baseline iff they share
-    ``value`` (headline seconds to 3 dp) and ``sf`` — any other bench
-    run changes them."""
-    parsed = raw.get("parsed") or raw
-    return all(
-        full.get(key) == parsed.get(key)
-        for key in ("value", "sf")
-        if parsed.get(key) is not None
-    )
+def with_cpu(fn, *args):
+    """(fn(*args), busy CPU seconds spent while it ran). The /proc/stat
+    reads sit outside whatever wall-clock region ``fn`` times."""
+    c0 = busy_cpu_s()
+    result = fn(*args)
+    return result, busy_cpu_s() - c0
 
 
-def _side_file_names(baseline_path: str) -> list[str]:
-    """Candidate side files carrying the baseline's per-query map, in
-    trust order: the IMMUTABLE per-round record first (written from
-    round 14 on; only runs of that same round touch it), then the
-    mutable latest-run record (overwritten by EVERY bench run — the
-    round-13 failure mode)."""
-    names = []
-    rnd = _round_of(baseline_path)
-    if rnd is not None:
-        names.append(f"BENCH_full_r{rnd:02d}.json")
-    names.append("BENCH_full_latest.json")
-    return names
+def load_baseline(path: str, sf) -> dict:
+    """Read a full bench record (BENCH_full_latest.json or
+    BENCH_baseline_4c.json) for ``--compare``. Exits 1 unless it has a
+    top-level ``queries`` map measured at this run's sf: a cross-sf
+    ratio reads as a huge speedup or regression on every entry."""
+    with open(path) as fh:
+        base = json.load(fh)
+    if not isinstance(base.get("queries"), dict):
+        print(f"bench: {path} has no top-level queries map", file=sys.stderr)
+        sys.exit(1)
+    if base.get("sf") != sf:
+        print(f"bench: {path} is sf={base.get('sf')}, this run is "
+              f"sf={sf}; cross-sf compare refused", file=sys.stderr)
+        sys.exit(1)
+    return base
 
 
-def _side_file_queries(baseline_path: str, raw: dict) -> dict:
-    """Per-query map for a baseline whose stdout line carries none:
-    from round 12 on, the printed metric line is compact (the full
-    61-entry map repeatedly outgrew the driver's tail-capture window
-    — BENCH_r03/r11 recorded parsed:null) and the per-query timings
-    live only in side files written by the same bench run the driver
-    recorded. Each candidate must be PROVEN to belong to this
-    baseline before it is trusted (_record_matches); a mismatch falls
-    through to the next candidate and ultimately to git recovery."""
-    d = os.path.dirname(os.path.abspath(baseline_path))
-    for fname in _side_file_names(baseline_path):
-        try:
-            with open(os.path.join(d, fname)) as fh:
-                full = json.load(fh)
-        except (OSError, ValueError):
+def compare(queries: dict, cpu: dict, base: dict, name: str) -> dict:
+    """Print one line per entry shared with the baseline ``base``
+    (then/now wall, wall ratio, then/now cpu, cpu ratio) and return the
+    summary. An entry is flagged when it is more than 1.5x slower in
+    wall AND at least 0.25 s slower; the cpu ratio is shown, never
+    gated. Nothing here decides that a flag is noise: a paired A/B with
+    tools/qtime.py against the parent commit does. Exits 1 when no
+    entry is shared, so an empty compare never reads as a clean one."""
+    then_cpu = base.get("cpu") or {}
+    regressions = []
+    n = 0
+    for q, now in queries.items():
+        then = base["queries"].get(q)
+        if not then:
             continue
-        if _record_matches(raw, full):
-            return full.get("queries") or {}
-        print(
-            f"bench: {fname} does not match baseline "
-            f"{os.path.basename(baseline_path)} (value/sf drift — a "
-            "later bench run overwrote it); trying next source",
-            file=sys.stderr,
-        )
-    return {}
-
-
-def _git_recovered_queries(baseline_path: str, raw: dict) -> dict:
-    """Last-resort baseline recovery (round-14 verdict task 1): the
-    working-tree side files are MUTABLE — any interim bench run
-    overwrites BENCH_full_latest.json, and that exact failure shipped
-    round 13 a vacuous compare. The COMMITTED tree is not: the driver
-    commits the round artifact and the side files together, so the
-    commit that introduced the baseline BENCH_r{N}.json carries the
-    matching per-query map. Resolve that commit, read the side files
-    out of it, and validate value/sf the same way as on disk. Fails
-    soft (empty dict -> loud zero-compare path), never silently."""
-    import subprocess
-
-    repo = os.path.dirname(os.path.abspath(baseline_path))
-    rel = os.path.basename(baseline_path)
-    try:
-        commit = subprocess.run(
-            ["git", "-C", repo, "log", "-n1", "--format=%H", "--", rel],
-            capture_output=True, text=True, timeout=60,
-        ).stdout.strip()
-        if not commit:
-            return {}
-        for fname in _side_file_names(baseline_path):
-            show = subprocess.run(
-                ["git", "-C", repo, "show", f"{commit}:{fname}"],
-                capture_output=True, text=True, timeout=60,
-            )
-            if show.returncode != 0:
-                continue
-            full = json.loads(show.stdout)
-            if _record_matches(raw, full):
-                print(
-                    f"bench: baseline per-query map recovered from "
-                    f"git ({commit[:10]}:{fname})",
-                    file=sys.stderr,
-                )
-                return full.get("queries") or {}
-    except Exception:
-        pass
-    return {}
-
-
-def _baseline_queries(baseline_path: str, raw: dict) -> dict:
-    """Resolve a baseline's per-query map, most- to least-direct:
-    inline map (pre-r12 local runs), driver-wrapped map, regex tail
-    recovery (truncated artifacts), validated side files (immutable
-    per-round first), then the committed copies via git. Empty dict
-    means every source failed validation — compare_block degrades to
-    the LOUD zero-compare path, never to wrong numbers."""
-    return (raw.get("queries")
-            or (raw.get("parsed") or {}).get("queries")
-            or _recover_from_tail(raw)
-            or _side_file_queries(baseline_path, raw)
-            or _git_recovered_queries(baseline_path, raw))
-
-
-# Canary TRIPLET (round-12 verdict task 4): the r12 host factor was
-# set by ONE 0.15-0.19 s query (q_topk), itself inside JIT jitter. The
-# factor is now the MEDIAN of three tiny heterogeneous, code-stable
-# canaries — CPU-bound top-k, one-shuffle hash dedup, and a
-# pushdown-dominated scan aggregate — so one canary's jitter (or a
-# resource-profile mismatch with the drifted subsystem) cannot set the
-# normalization alone. Back-compat: all three have been HEADLINE
-# entries since round 4, so every old artifact carries their thens;
-# any canary missing from a baseline just drops out of the median.
-CANARIES = ["q_topk", "q_dedup_exact", "q_tpch_q6ish"]
-CANARY = CANARIES[0]  # legacy single-canary name, kept for artifacts
-
-
-def _median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
-
-
-def _canary_factor(factors: dict) -> float | None:
-    vals = [f for f in factors.values() if f]
-    return round(_median(vals), 3) if vals else None
-
-
-def compare_block(queries: dict, baseline_path: str,
-                  sf=None) -> dict:
-    """Per-query deltas vs a prior BENCH_r*.json: ratio = now/then,
-    plus a CANARY-NORMALIZED ratio (round-6 lesson: an external-host-
-    load incident inflated every query ~1.2x uniformly, costing the
-    round its cross-round comparability). The canaries are trivial
-    queries measured in the same run; environment inflation moves them
-    by the same factor as real queries, so ratio_norm = ratio /
-    median(canary_now / canary_then) cancels uniform host drift while
-    a genuine plan regression (one query moving, canaries flat)
-    survives. Queries whose NORMALIZED ratio is >1.5x (and >0.25s
-    absolute) are listed under `regressions`; raw ratios stay in the
-    deltas block."""
-    with open(baseline_path) as fh:
-        raw = json.load(fh)
-    # Cross-SF compares are meaningless AND dangerous: every ratio
-    # reads as a huge speedup/regression, and a non-vacuous bogus
-    # compare would (wrongly) clear the BENCH_flags watch ledger. A
-    # dev run at sf0.001 against the driver's sf0.1 baseline degrades
-    # to the loud empty-compare path instead.
-    base_sf = (raw.get("parsed") or raw).get("sf")
-    if sf is not None and base_sf is not None and base_sf != sf:
-        print(
-            f"bench: baseline {os.path.basename(baseline_path)} is "
-            f"sf={base_sf}, this run is sf={sf} — cross-SF compare "
-            "refused",
-            file=sys.stderr,
-        )
-        return {"baseline": os.path.basename(baseline_path),
-                "canary": {"name": CANARY, "now": queries.get(CANARY),
-                           "then": None, "factor": None,
-                           "triplet": {c: None for c in CANARIES}},
-                "deltas": {name: {"then": None, "now": now,
-                                  "ratio": None, "ratio_norm": None}
-                           for name, now in queries.items()},
-                "regressions": []}
-    # driver-recorded BENCH_r*.json wraps our JSON line under "parsed";
-    # either key may exist but hold null, so coalesce defensively, and
-    # fall back through tail recovery, validated side files, and the
-    # committed git copies (r04: a truncated baseline silently
-    # compared ZERO queries; r13: an interim run overwrote the
-    # mutable side file and shipped a vacuous compare)
-    base = _baseline_queries(baseline_path, raw)
-    canary_now, canary_then = queries.get(CANARY), base.get(CANARY)
-    triplet = {
-        name: (
-            round(queries[name] / base[name], 3)
-            if queries.get(name) and base.get(name) else None
-        )
-        for name in CANARIES
-    }
-    canary_factor = _canary_factor(triplet)
-    deltas, regressions = {}, []
-    for name, now in queries.items():
-        then = base.get(name)
-        if then is None:
-            deltas[name] = {"then": None, "now": now, "ratio": None,
-                            "ratio_norm": None}
-            continue
-        ratio = round(now / then, 3) if then > 0 else None
-        norm = (round(ratio / canary_factor, 3)
-                if ratio is not None and canary_factor else None)
-        deltas[name] = {"then": then, "now": now, "ratio": ratio,
-                        "ratio_norm": norm}
-        eff = norm if norm is not None else ratio
-        if eff is not None and eff > 1.5 and (now - then) >= 0.25:
-            regressions.append(name)
-    return {"baseline": os.path.basename(baseline_path),
-            # legacy single-canary fields kept so old tooling reading
-            # canary.name/now/then keeps working; `factor` is now the
-            # triplet median and `triplet` carries per-canary ratios
-            "canary": {"name": CANARY, "now": canary_now,
-                       "then": canary_then, "factor": canary_factor,
-                       "triplet": triplet},
-            "deltas": deltas, "regressions": regressions}
-
-
-def _is_confirmed(ratio, norm, now, then) -> bool:
-    """A regression is CONFIRMED only when BOTH the raw and the
-    canary-normalized ratios clear the 1.5x gate (plus the 0.25s
-    absolute floor). Round-14 forensics (SCALE.md): after a full
-    73-entry suite the long-lived local JVM is fully JIT-hot and the
-    parquet page-cached, which speeds the tiny CPU-bound canaries
-    ~3x more than the big codec/shuffle queries — the in-JVM canary
-    re-measure then UNDER-corrects and normalization alone
-    'confirmed' 16 queries whose raw standalone ratios were
-    0.85-1.4x. A genuine plan regression moves the RAW ratio on any
-    host at least as much as the normalized one unless the host got
-    uniformly faster — and that case stays visible through the
-    tracked ledger (normalized-only flags are tracked, not
-    cleared)."""
-    return (
-        norm is not None and norm > 1.5
-        and ratio is not None and ratio > 1.5
-        and then is not None and (now - then) >= 0.25
-    )
-
-
-def adjudicate_regressions(spark, cmp_full: dict, sf_dir: str) -> dict:
-    """Re-measure every flagged regression standalone and split the
-    list into confirmed vs environmental (round-9 verdict task 5 —
-    the round-6/7 protocol, now automatic instead of manual).
-
-    The re-measures run in a SUBPROCESS with its own fresh JVM
-    (round-14 lesson, SCALE.md): re-measuring inside the suite's own
-    process is biased two ways at once — the 70-query-hot JVM runs
-    the tiny canaries ~3x faster than a fresh process (JIT + page
-    cache favor CPU-light queries), while the long-lived process's
-    accumulated state degrades the big Arrow/codegen entries (in-
-    suite q_dedup_phash measured 19 s vs 3.2 s in a fresh process on
-    the same host minutes apart); both biases push normalized ratios
-    UP and manufactured 16 false confirmations in the round-14 run-2
-    artifact — and a fresh SparkSession in the SAME process was
-    measured insufficient (run 3: still 18 s). Only a new JVM levels
-    the field between canaries and flagged queries.
-
-    Each flagged query gets a back-to-back (canary-triplet min-of-3
-    each, query min-of-3) pair, so the normalization factor reflects
-    the host AT RE-MEASURE TIME — the suite-run factor can be stale by
-    minutes. The factor is the median over the triplet (same policy as
-    compare_block); per-canary thens come from the suite run's deltas.
-    Confirmed = BOTH the raw and the re-normalized ratio still >1.5x
-    with >=0.25s absolute (_is_confirmed)."""
-    flagged = cmp_full.get("regressions") or []
-    deltas = cmp_full.get("deltas") or {}
-    # A VACUOUS compare (zero queries matched — e.g. the baseline's
-    # side-file map was overwritten by an interim run) must not touch
-    # the cross-round watch ledger: "stops being flagged" means a real
-    # comparison saw the query clean, not that nothing was compared.
-    # Without this guard a zero-compare run silently WIPED the
-    # tracked entries (observed round 13).
-    if not any(d.get("ratio") is not None for d in deltas.values()):
-        try:
-            with open(os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "BENCH_flags.json",
-            )) as fh:
-                kept = list(json.load(fh))
-        except Exception:
-            kept = []
-        return {"confirmed": [], "environmental": [], "detail": {},
-                "tracked": kept, "vacuous": True}
-    canary_thens = {
-        c: (deltas.get(c) or {}).get("then") for c in CANARIES
-    }
-    result = {"confirmed": [], "environmental": [], "detail": {}}
-    detail: dict = {}
-    if flagged:
-        import subprocess
-
-        payload = json.dumps({
-            "flagged": flagged,
-            "thens": {n: cmp_full["deltas"][n]["then"] for n in flagged},
-            "canary_thens": canary_thens,
-            "sf_dir": sf_dir,
-        })
-        try:
-            proc = subprocess.run(
-                [sys.executable, "-c",
-                 "import bench; bench._adjudicate_worker()"],
-                input=payload, capture_output=True, text=True,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-                timeout=3000,
-            )
-            detail = json.loads(proc.stdout.strip().splitlines()[-1])
-        except Exception as exc:
-            # a dead worker leaves every flag VISIBLE and blocking
-            # rather than silently discarding the comparison
-            detail = {
-                n: {"then": cmp_full["deltas"][n]["then"],
-                    "error": f"adjudication worker failed: "
-                             f"{str(exc)[:100]}"}
-                for n in flagged
-            }
-    for name in flagged:
-        d = detail.get(name) or {
-            "then": cmp_full["deltas"][name]["then"],
-            "error": "missing from worker output",
-        }
-        result["detail"][name] = d
-        if "error" in d:
-            result["confirmed"].append(name)
-        else:
-            result[
-                "confirmed" if d.get("confirmed") else "environmental"
-            ].append(name)
-    # Cross-round watch ledger (r10 advice): a single environmental
-    # classification can be a canary/query resource-profile mismatch
-    # (CPU-bound canary vs shuffle-bound query), so one env verdict
-    # does NOT clear a flag — it stays "tracked" (visible in the
-    # compare output, non-blocking) until it has been classified
-    # environmental in 2 consecutive flagged runs, or stops being
-    # flagged at all.
-    ledger_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_flags.json"
-    )
-    try:
-        with open(ledger_path) as fh:
-            ledger = json.load(fh)
-    except Exception:
-        ledger = {}
-    new_ledger: dict[str, int] = {}
-    result["tracked"] = []
-    for name in result["environmental"]:
-        n = int(ledger.get(name, 0)) + 1
-        if n < 2:
-            new_ledger[name] = n
-            result["tracked"].append(name)
-    try:
-        with open(ledger_path, "w") as fh:
-            json.dump(new_ledger, fh, indent=1)
-    except OSError:
-        pass  # read-only checkout: tracking degrades, run continues
-    return result
-
-
-def _adjudicate_worker() -> None:
-    """Subprocess entry for adjudicate_regressions: reads the payload
-    JSON from stdin, re-measures every flagged entry (canary-triplet
-    min-of-3 paired with query min-of-3) in THIS process's fresh JVM,
-    and prints one JSON line {name: detail} as the LAST stdout line.
-    CODEC_HEAVY entries get the suite's untimed warm-up rep so
-    min-of-3 never times the janino+C2 compile window."""
-    payload = json.loads(sys.stdin.read())
-    sf_dir = payload["sf_dir"]
-    from arc_kinesis_tagging_spark.session import get_session
-
-    spark = get_session("bench-adjudicate")
-    # same one-time warm-ups as the suite: JVM/parquet caches + the
-    # 32x Python worker pool spin-up
-    run_once(spark, "q_topk", sf_dir)
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).write.format("noop").mode("overwrite").save()
-    # stream entries are not registry queries — re-measure them
-    # through their own bench functions (r10 lesson: stream_tee_20k
-    # flagged and run_once raised KeyError, killing the compare)
-    stream_adj = {
-        "stream_pipeline_20k": lambda: bench_stream_pipeline(spark, sf_dir)[0],
-        "stream_gated_20k": lambda: bench_stream_gated(spark, sf_dir)[0],
-        "stream_tee_20k": lambda: bench_stream_tee(spark, sf_dir)[0],
-    }
-    out: dict = {}
-    for name in payload["flagged"]:
-        then = payload["thens"].get(name)
-        measure = stream_adj.get(name) or (
-            lambda: run_once(spark, name, sf_dir)
-        )
-        try:
-            canary_factors = {}
-            for c in CANARIES:
-                c_then = payload["canary_thens"].get(c)
-                if not c_then:
-                    continue
-                c_now = min(run_once(spark, c, sf_dir) for _ in range(3))
-                canary_factors[c] = round(c_now / c_then, 3)
-            if name in CODEC_HEAVY:
-                measure()  # untimed: absorb janino+C2
-            now = min(measure() for _ in range(3))
-            windows = 1
-            # TWO-WINDOW rule (round-14 forensics, SCALE.md): this
-            # host's noise oscillates on minute scales and hits
-            # python-worker-heavy entries hardest — run 4's worker
-            # "confirmed" stream_pipeline_20k at 3.6 s minutes after
-            # the SAME bench run's suite measured it 1.2 s. A real
-            # plan regression repeats across separated windows; noise
-            # doesn't. Only would-be-confirmed entries pay the wait.
-            if then and _is_confirmed(
-                round(now / then, 3), round(now / then, 3), now, then
-            ):
-                time.sleep(45)
-                now2 = min(measure() for _ in range(3))
-                windows = 2
-                now = min(now, now2)
-        except Exception as exc:
-            out[name] = {"then": then, "error": str(exc)[:120]}
-            continue
-        factor = _canary_factor(canary_factors)
-        ratio = round(now / then, 3) if then else None
-        norm = (
-            round(ratio / factor, 3)
-            if ratio is not None and factor else ratio
-        )
-        out[name] = {
-            "then": then, "remeasured": round(now, 3), "ratio": ratio,
-            "canary_factor": factor, "canary_triplet": canary_factors,
-            "ratio_norm": norm, "windows": windows,
-            "confirmed": _is_confirmed(ratio, norm, now, then),
-        }
-    spark.stop()
-    print(json.dumps(out))
+        n += 1
+        ratio = now / then
+        flagged = ratio > 1.5 and now - then >= 0.25
+        if flagged:
+            regressions.append(q)
+        c_then, c_now = then_cpu.get(q), cpu.get(q)
+        c_ratio = (f"{c_now / c_then:6.2f}x" if c_then and c_now is not None
+                   else "      -")
+        print(f"{q:32s} wall {then:8.3f} -> {now:8.3f} {ratio:6.2f}x  "
+              f"cpu {c_then or 0:8.2f} -> {c_now or 0:8.2f} {c_ratio}"
+              f"{'  FLAG' if flagged else ''}")
+    if n == 0:
+        print(f"bench: --compare shares no entry with {name}",
+              file=sys.stderr)
+        sys.exit(1)
+    return {"baseline": name, "n_compared": n, "regressions": regressions}
 
 
 def settle(max_wait: float = 45.0, load_per_cpu: float = 0.5) -> float:
@@ -841,44 +462,26 @@ def settle(max_wait: float = 45.0, load_per_cpu: float = 0.5) -> float:
     return round(time.perf_counter() - t0, 1)
 
 
-def _next_round() -> int:
-    """The round currently being BUILT: newest driver-recorded
-    BENCH_r*.json + 1 (the driver writes round N's artifact only at
-    round end, so every bench run during round N sees N-1 as the
-    newest and names its immutable record BENCH_full_r{N}.json)."""
-    import glob
-
-    rounds = [
-        r for r in (
-            _round_of(p) for p in glob.glob(os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "BENCH_r*.json"))
-        ) if r is not None
-    ]
-    return (max(rounds) + 1) if rounds else 1
-
-
 def pick_baseline() -> str | None:
-    """Resolve the comparison baseline BEFORE running the suite so a
-    bad --compare invocation fails fast instead of losing the run."""
+    """The ``--compare`` baseline path, or None without the flag."""
     if "--compare" in sys.argv:
         idx = sys.argv.index("--compare") + 1
         if idx >= len(sys.argv):
-            print("usage: bench.py [--compare <BENCH_r*.json>]",
+            print("usage: bench.py [--compare <full bench record .json>]",
                   file=sys.stderr)
             sys.exit(2)
         return sys.argv[idx]
-    import glob
-
-    prior = sorted(glob.glob(os.path.join(os.path.dirname(
-        os.path.abspath(__file__)), "BENCH_r*.json")))
-    return prior[-1] if prior else None
+    return None
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
+    # resolve the baseline BEFORE running the suite so a bad --compare
+    # invocation fails fast instead of losing the run
     baseline = pick_baseline()
+    base = load_baseline(baseline, sf) if baseline else None
     settled = settle()
     spark = get_session("bench")
     # warm-up: JVM + parquet footer caches, plus the Python worker pool
@@ -910,156 +513,82 @@ def main() -> None:
     # verdict task 6): their first rep is dominated by that one-time
     # compile cost, so without the warm-up both timed reps can land
     # inside the compile window and re-flag the family every round.
-    queries = {}
+    # Each rep is a (wall, cpu) pair ordered by wall, so the reported
+    # cpu is the busy CPU of the rep whose wall is reported.
+    queries, cpu = {}, {}
     total = 0.0
     for name in HEADLINE:
         if name in CODEC_HEAVY:
             run_once(spark, name, sf_dir)  # untimed: absorb janino+C2
-        r1 = run_once(spark, name, sf_dir)
-        r2 = run_once(spark, name, sf_dir)
-        if max(r1, r2) > 2 * min(r1, r2):
-            dt = _median([r1, r2, run_once(spark, name, sf_dir)])
-        elif min(r1, r2) < 1.0:
-            dt = min(r1, r2, run_once(spark, name, sf_dir))
+        r1 = with_cpu(run_once, spark, name, sf_dir)
+        r2 = with_cpu(run_once, spark, name, sf_dir)
+        if max(r1[0], r2[0]) > 2 * min(r1[0], r2[0]):
+            dt, c = sorted([r1, r2, with_cpu(run_once, spark, name, sf_dir)])[1]
+        elif min(r1[0], r2[0]) < 1.0:
+            dt, c = min(r1, r2, with_cpu(run_once, spark, name, sf_dir))
         else:
-            dt = min(r1, r2)
+            dt, c = min(r1, r2)
         queries[name] = round(dt, 3)
+        cpu[name] = round(c, 2)
         total += dt
 
-    # same min-of-reps policy as the batch queries: the first stream
-    # run pays one-time streaming-infra setup (state store, sink
-    # wiring) that the steady-state number should not carry
-    stream_s, stream_rps = min(
-        (bench_stream_pipeline(spark, sf_dir) for _ in range(2)),
-        key=lambda t: t[0],
-    )
-    queries["stream_pipeline_20k"] = round(stream_s, 3)
-    total += stream_s
-
-    # gated variant on the SAME fixture: measures robots+LM+DSIR gate
-    # overhead relative to the plain entry (and disambiguates infra
-    # noise from gate cost when either entry drifts)
-    gated_s, gated_rps = min(
-        (bench_stream_gated(spark, sf_dir) for _ in range(2)),
-        key=lambda t: t[0],
-    )
-    queries["stream_gated_20k"] = round(gated_s, 3)
-    total += gated_s
-
-    # exactly-once producer: stream-to-stream republish through the
-    # two-phase commit writer (crash-tested elsewhere, timed here)
-    tee_s, tee_rps = min(
-        (bench_stream_tee(spark, sf_dir) for _ in range(2)),
-        key=lambda t: t[0],
-    )
-    queries["stream_tee_20k"] = round(tee_s, 3)
-    total += tee_s
+    # Streams: the same min-of-reps policy as the batch queries (the
+    # first stream run pays one-time streaming-infra setup: state store,
+    # sink wiring). The gated variant runs on the SAME fixture as the
+    # plain entry, so the pair measures robots+LM+DSIR gate overhead;
+    # the tee is the exactly-once producer (stream-to-stream republish
+    # through the two-phase commit writer, crash-tested elsewhere).
+    # Their cpu covers the whole call, so it also holds the untimed
+    # fixture write of the first rep and the tee's count-back.
+    stream = {"records": 20000}
+    for name, fn, key in (
+        ("stream_pipeline_20k", bench_stream_pipeline, ""),
+        ("stream_gated_20k", bench_stream_gated, "gated_"),
+        ("stream_tee_20k", bench_stream_tee, "tee_"),
+    ):
+        (dt, rps), c = min(
+            (with_cpu(fn, spark, sf_dir) for _ in range(2)),
+            key=lambda t: t[0][0],
+        )
+        queries[name] = round(dt, 3)
+        cpu[name] = round(c, 2)
+        total += dt
+        # throughput is the first-class streaming number (the
+        # reference's ceiling is ~13.3 rec/s); seconds alone hides
+        # rate drift
+        stream[f"{key}seconds"] = round(dt, 3)
+        stream[f"{key}rec_per_sec"] = round(rps, 1)
 
     out = {
         "metric": "headline_suite_seconds",
         "value": round(total, 3),
         "unit": "sec",
         "queries": queries,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # throughput is the first-class streaming number (the reference's
-        # ceiling is ~13.3 rec/s); seconds alone hides rate drift
-        "stream": {"records": 20000, "seconds": round(stream_s, 3),
-                   "rec_per_sec": round(stream_rps, 1),
-                   "gated_seconds": round(gated_s, 3),
-                   "gated_rec_per_sec": round(gated_rps, 1),
-                   "tee_seconds": round(tee_s, 3),
-                   "tee_rec_per_sec": round(tee_rps, 1)},
+        "cpu": cpu,
+        "sf": sf,
+        "stream": stream,
         "settle_wait_s": settled,
     }
-    # --compare <prior BENCH.json> (or the newest BENCH_r*.json in the
-    # repo root by default) adds a per-query delta block; regressions
-    # >1.5x AND >0.25s absolute fail the run so a silent plan
-    # degradation breaks the bench, not a 100 TB job.
-    if baseline and os.path.exists(baseline):
-        try:
-            cmp_full = compare_block(queries, baseline, sf=out["sf"])
-            # Self-adjudication (round-9 verdict task 5): a non-empty
-            # regressions list is no longer a terminal state. Each
-            # flagged query is re-measured standalone min-of-3, PAIRED
-            # with a fresh canary min-of-3 taken back-to-back, so the
-            # re-measure carries its own host-drift correction instead
-            # of inheriting the suite run's. A flag survives as
-            # CONFIRMED only if the re-normalized ratio still clears
-            # the same 1.5x/0.25s gate; otherwise it was the host.
-            cmp_full["adjudication"] = adjudicate_regressions(
-                spark, cmp_full, sf_dir
-            )
-            # Full per-query deltas go to a side file: r03's inline
-            # deltas pushed the stdout JSON line past the driver's
-            # tail-capture window, so the driver recorded parsed:null.
-            # The printed line carries only the compact verdict.
-            with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                   "BENCH_compare_latest.json"), "w") as fh:
-                json.dump(cmp_full, fh, indent=1)
-            adj = cmp_full.get("adjudication") or {}
-            out["compare"] = {"baseline": cmp_full["baseline"],
-                              "regressions": cmp_full["regressions"],
-                              "regressions_confirmed":
-                                  adj.get("confirmed", []),
-                              "regressions_environmental":
-                                  adj.get("environmental", []),
-                              # env-classified flags still under the
-                              # 2-consecutive-rounds watch (r10 advice)
-                              "regressions_tracked":
-                                  adj.get("tracked", []),
-                              "canary_factor": cmp_full["canary"]["factor"],
-                              "n_compared": sum(
-                                  1 for d in cmp_full["deltas"].values()
-                                  if d["ratio"] is not None)}
-        except Exception as exc:  # malformed baseline: degrade, don't lose the run
-            out["compare"] = {"baseline": os.path.basename(baseline),
-                              "error": str(exc)[:120]}
-    # The full record (incl. the per-query map) goes to side files;
-    # the PRINTED line is compact. The 61-entry queries map outgrew
-    # the driver's stdout tail-capture window twice (BENCH_r03/r11:
-    # parsed=null), degrading the durable artifact and nulling the
-    # next round's baseline. compare_block reads the side files back
-    # when a compact-format baseline carries no per-query map.
-    # TWO copies (round-14 verdict task 1): BENCH_full_latest.json is
-    # overwritten by every run (and shipped round 13 a vacuous
-    # compare when an interim run clobbered it between the driver's
-    # baseline and its final run); BENCH_full_r{N}.json is the
-    # IMMUTABLE-per-round record — only runs of round N (the round
-    # currently being built, i.e. newest recorded BENCH_r*.json + 1)
-    # ever write it, so the NEXT round's compare always finds an
-    # intact, validated map no matter how many interim runs happened.
+    # The full record (per-query wall and cpu maps) goes to an
+    # untracked side file that a later run can --compare against; the
+    # PRINTED line is compact (the per-query map outgrew stdout tail
+    # captures twice: BENCH_r03/r11 recorded parsed=null).
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_full_latest.json"), "w") as fh:
         json.dump(out, fh, indent=1)
-    round_file = f"BENCH_full_r{_next_round():02d}.json"
-    with open(os.path.join(here, round_file), "w") as fh:
-        json.dump(out, fh, indent=1)
-    printed = {k: v for k, v in out.items() if k != "queries"}
-    printed["n_queries"] = len(queries)
-    printed["queries_file"] = round_file
-    print(json.dumps(printed))
-    # Tear the JVM down BEFORE deciding the exit code: the failure
-    # paths below must not skip cleanup (r04 advice).
+    # Tear the JVM down BEFORE comparing: the compare's failure exits
+    # must not skip cleanup (r04 advice).
     spark.stop()
-    if "--compare" in sys.argv:
-        cmp_out = out.get("compare", {})
-        # only CONFIRMED regressions fail the run; environmental flags
-        # are recorded (side file + stdout) but don't block — the
-        # round-6/7/9 episodes were all host drift that cost a round
-        # of adjudication each. Fall back to the raw list if the
-        # adjudication itself errored (key absent).
-        blocking = cmp_out.get("regressions_confirmed")
-        if blocking is None:
-            blocking = cmp_out.get("regressions")
-        if blocking:
-            sys.exit(1)
-        # an empty comparison is indistinguishable from "zero
-        # regressions" in the one-line summary — make it loud (r04:
-        # a truncated baseline silently compared nothing)
-        if cmp_out.get("n_compared", 0) == 0:
-            print("bench: --compare matched 0 queries against "
-                  f"{os.path.basename(baseline or '?')}", file=sys.stderr)
-            sys.exit(1)
+    printed = {k: v for k, v in out.items() if k not in ("queries", "cpu")}
+    printed["n_queries"] = len(queries)
+    printed["queries_file"] = "BENCH_full_latest.json"
+    if base is not None:
+        printed["compare"] = compare(
+            queries, cpu, base, os.path.basename(baseline)
+        )
+    print(json.dumps(printed))
+    if base is not None and printed["compare"]["regressions"]:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -1,243 +1,80 @@
-"""bench.py's cross-round comparison plumbing (no Spark): baseline
-format coalescing — full map, driver-wrapped, tail-truncated, and the
-round-12 COMPACT stdout format whose per-query map lives only in the
-BENCH_full_latest.json side file."""
+"""bench.py's measure-and-compare plumbing (no Spark): the --compare
+gate against one explicit full bench record, and the busy-CPU helper
+that records cpu next to each entry's wall."""
 
 import json
 import os
 import sys
+import time
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 
 
-def _write(path, obj):
+def _baseline(tmp_path, obj):
+    path = str(tmp_path / "BENCH_baseline.json")
     with open(path, "w") as fh:
         json.dump(obj, fh)
+    return path
 
 
-def test_compare_reads_compact_baseline_via_side_file(tmp_path):
-    """From round 12 the printed metric line carries no queries map
-    (it outgrew the driver's tail-capture twice: BENCH_r03/r11) —
-    compare_block must recover the baseline's per-query timings from
-    the side file the same bench run wrote."""
-    base = str(tmp_path / "BENCH_r12.json")
-    _write(base, {"parsed": {"metric": "headline_suite_seconds",
-                             "value": 50.0, "sf": 0.1, "n_queries": 2,
-                             "queries_file": "BENCH_full_latest.json"}})
-    _write(str(tmp_path / "BENCH_full_latest.json"),
-           {"value": 50.0, "sf": 0.1,
-            "queries": {"q_topk": 0.5, "q_agg_group": 1.0}})
-    out = bench.compare_block({"q_topk": 0.5, "q_agg_group": 2.0}, base)
-    assert out["canary"]["factor"] == 1.0
-    assert out["regressions"] == ["q_agg_group"]
-    assert sum(1 for v in out["deltas"].values()
-               if v["ratio"] is not None) == 2
-
-
-def test_stale_side_file_is_rejected_not_trusted(tmp_path):
-    """The side file is overwritten by every bench run — if an
-    interim run replaced the baseline's map (value/sf mismatch), the
-    compare must degrade to the loud zero-compare path rather than
-    silently comparing against the wrong 'then' timings."""
-    base = str(tmp_path / "BENCH_r12.json")
-    _write(base, {"parsed": {"value": 50.0, "sf": 0.1}})
-    _write(str(tmp_path / "BENCH_full_latest.json"),
-           {"value": 43.21, "sf": 0.1,  # an interim run's record
-            "queries": {"q_topk": 0.1}})
-    out = bench.compare_block({"q_topk": 1.0}, base)
-    assert all(v["ratio"] is None for v in out["deltas"].values())
-
-
-def test_compare_still_reads_full_and_tail_formats(tmp_path):
-    # full map inline (pre-r12 local runs)
-    base = str(tmp_path / "BENCH_r10.json")
-    _write(base, {"queries": {"q_topk": 1.0, "q_x": 1.0}})
-    out = bench.compare_block({"q_topk": 1.0, "q_x": 1.0}, base)
-    assert out["regressions"] == []
-    # truncated driver artifact: recover from tail text
-    base2 = str(tmp_path / "BENCH_r11.json")
-    _write(base2, {"parsed": None,
-                   "tail": 'uite_seconds", "queries": {"q_topk": 1.0, '
-                           '"q_y": 2.0}, "compare": {"q_y": 9.9}}'})
-    out2 = bench.compare_block({"q_topk": 1.0, "q_y": 2.0}, base2)
-    assert out2["deltas"]["q_y"]["then"] == 2.0  # not the compare 9.9
-
-
-def test_compact_baseline_missing_side_file_degrades_empty(tmp_path):
-    base = str(tmp_path / "BENCH_r12.json")
-    _write(base, {"parsed": {"value": 1.0}})
-    out = bench.compare_block({"q_topk": 1.0}, base)
-    assert all(v["ratio"] is None for v in out["deltas"].values())
-
-
-def test_immutable_round_side_file_preferred(tmp_path):
-    """Round-14 verdict task 1: the per-round BENCH_full_r{N}.json is
-    immutable (only round-N runs write it), so it outranks the
-    every-run-mutable BENCH_full_latest.json — an interim run that
-    clobbered 'latest' can no longer ship a vacuous compare."""
-    base = str(tmp_path / "BENCH_r13.json")
-    _write(base, {"parsed": {"value": 50.0, "sf": 0.1}})
-    # 'latest' was overwritten by an interim later-round run...
-    _write(str(tmp_path / "BENCH_full_latest.json"),
-           {"value": 43.21, "sf": 0.1, "queries": {"q_topk": 0.1}})
-    # ...but the round-13 record is intact
-    _write(str(tmp_path / "BENCH_full_r13.json"),
-           {"value": 50.0, "sf": 0.1,
-            "queries": {"q_topk": 0.5, "q_agg_group": 1.0}})
-    out = bench.compare_block({"q_topk": 0.5, "q_agg_group": 1.0}, base)
-    assert out["deltas"]["q_agg_group"]["then"] == 1.0
-    assert out["regressions"] == []
-
-
-def test_mismatched_round_side_file_falls_through(tmp_path):
-    """A per-round side file that fails value/sf validation must fall
-    through to the next source (here: a matching 'latest'), not be
-    trusted and not kill the compare."""
-    base = str(tmp_path / "BENCH_r13.json")
-    _write(base, {"parsed": {"value": 50.0, "sf": 0.1}})
-    _write(str(tmp_path / "BENCH_full_r13.json"),
-           {"value": 9.99, "sf": 0.1, "queries": {"q_topk": 9.9}})
-    _write(str(tmp_path / "BENCH_full_latest.json"),
-           {"value": 50.0, "sf": 0.1, "queries": {"q_topk": 0.5}})
-    out = bench.compare_block({"q_topk": 0.5}, base)
-    assert out["deltas"]["q_topk"]["then"] == 0.5
-
-
-def test_git_recovery_of_committed_side_file(tmp_path):
-    """When EVERY on-disk side file fails validation (the round-13
-    failure: interim runs overwrote them all), the baseline's
-    per-query map is recovered from the commit that introduced the
-    baseline artifact — the driver commits the round artifact and the
-    side files together, so the committed copy provably matches."""
-    import subprocess
-
-    repo = tmp_path
-    for args in (["git", "init", "-q"],
-                 ["git", "config", "user.email", "t@t"],
-                 ["git", "config", "user.name", "t"]):
-        subprocess.run(args, cwd=str(repo), check=True)
-    base = str(repo / "BENCH_r13.json")
-    _write(base, {"parsed": {"value": 50.0, "sf": 0.1}})
-    _write(str(repo / "BENCH_full_latest.json"),
-           {"value": 50.0, "sf": 0.1,
-            "queries": {"q_topk": 0.5, "q_agg_group": 1.0}})
-    subprocess.run(["git", "add", "-A"], cwd=str(repo), check=True)
-    subprocess.run(["git", "commit", "-qm", "round 13"], cwd=str(repo),
-                   check=True)
-    # both on-disk side files now drift (interim runs)
-    _write(str(repo / "BENCH_full_latest.json"),
-           {"value": 43.21, "sf": 0.1, "queries": {"q_topk": 0.1}})
-    _write(str(repo / "BENCH_full_r13.json"),
-           {"value": 44.44, "sf": 0.1, "queries": {"q_topk": 0.2}})
-    out = bench.compare_block({"q_topk": 0.5, "q_agg_group": 2.0}, base)
-    assert out["deltas"]["q_agg_group"]["then"] == 1.0
-    assert out["regressions"] == ["q_agg_group"]
-    # an uncommitted baseline (no introducing commit) degrades LOUDLY
-    base2 = str(repo / "BENCH_r14.json")
-    _write(base2, {"parsed": {"value": 60.0, "sf": 0.1}})
-    out2 = bench.compare_block({"q_topk": 0.5}, base2)
-    assert all(v["ratio"] is None for v in out2["deltas"].values())
-
-
-def test_round_of_and_side_file_names():
-    assert bench._round_of("/x/BENCH_r13.json") == 13
-    assert bench._round_of("/x/BENCH_r01.json") == 1
-    assert bench._round_of("/x/BENCH_full_r13.json") is None
-    assert bench._round_of("/x/whatever.json") is None
-    assert bench._side_file_names("/x/BENCH_r09.json") == [
-        "BENCH_full_r09.json", "BENCH_full_latest.json"]
-    assert bench._side_file_names("/x/custom.json") == [
-        "BENCH_full_latest.json"]
-
-
-def test_canary_factor_is_triplet_median(tmp_path):
-    """Round-12 verdict task 4: one jittery canary must not set the
-    normalization factor — the factor is the MEDIAN over the triplet
-    (q_topk, q_dedup_exact, q_tpch_q6ish)."""
-    base = str(tmp_path / "BENCH_r12.json")
-    _write(base, {"queries": {"q_topk": 0.15, "q_dedup_exact": 1.0,
-                              "q_tpch_q6ish": 1.0, "q_big": 10.0}})
-    # q_topk jitters to 2.0x (sub-second, under the 0.25s absolute
-    # gate); the other two canaries sit at 1.1x/1.2x
-    now = {"q_topk": 0.30, "q_dedup_exact": 1.1, "q_tpch_q6ish": 1.2,
-           "q_big": 13.0}
-    out = bench.compare_block(now, base)
-    assert out["canary"]["factor"] == 1.2  # median, not q_topk's 2.0
-    assert out["canary"]["triplet"] == {
-        "q_topk": 2.0, "q_dedup_exact": 1.1, "q_tpch_q6ish": 1.2}
-    # normalized by 1.2 the 1.3x raw ratio stays under the 1.5x gate
-    assert out["regressions"] == []
-
-
-def test_canary_triplet_backcompat_missing_canaries(tmp_path):
-    """Old artifacts (or hand-built baselines) may carry only q_topk:
-    absent canaries drop out of the median instead of nulling it."""
-    base = str(tmp_path / "BENCH_r05.json")
-    _write(base, {"queries": {"q_topk": 1.0, "q_x": 1.0}})
-    out = bench.compare_block({"q_topk": 1.5, "q_x": 1.5}, base)
-    assert out["canary"]["factor"] == 1.5
-    assert out["canary"]["triplet"]["q_dedup_exact"] is None
-    assert out["regressions"] == []
+def test_slow_entry_flags_and_fails_the_run(tmp_path, capsys):
+    """The gate is the raw wall ratio: > 1.5x AND >= 0.25 s slower
+    flags (and bench.py exits 1 on any flag); a 1.4x entry and a
+    +0.1 s entry do not flag. The cpu ratio is printed, never gated."""
+    base = bench.load_baseline(_baseline(tmp_path, {
+        "sf": 0.1,
+        "queries": {"q_slow": 1.0, "q_mild": 1.0, "q_tiny": 0.1},
+        "cpu": {"q_slow": 4.0, "q_mild": 4.0, "q_tiny": 0.3},
+    }), 0.1)
+    out = bench.compare(
+        {"q_slow": 2.0, "q_mild": 1.4, "q_tiny": 0.2, "q_new": 9.0},
+        {"q_slow": 4.0, "q_mild": 40.0, "q_tiny": 0.3, "q_new": 9.0},
+        base, "BENCH_baseline.json",
+    )
+    assert out == {"baseline": "BENCH_baseline.json", "n_compared": 3,
+                   "regressions": ["q_slow"]}
+    lines = {ln.split()[0]: ln for ln in capsys.readouterr().out.splitlines()}
+    assert lines["q_slow"].endswith("FLAG")
+    assert "10.00x" in lines["q_mild"] and "FLAG" not in lines["q_mild"]
+    assert "q_new" not in lines
 
 
 def test_cross_sf_compare_refused(tmp_path):
-    """A dev run at sf0.001 against the driver's sf0.1 baseline must
-    degrade to the loud empty-compare path (a bogus non-vacuous
-    compare would wrongly clear the BENCH_flags watch ledger)."""
-    base = str(tmp_path / "BENCH_r13.json")
-    _write(base, {"parsed": {"value": 50.0, "sf": 0.1,
-                             "queries": {"q_topk": 0.5}}})
-    out = bench.compare_block({"q_topk": 0.01}, base, sf=0.001)
-    assert all(v["ratio"] is None for v in out["deltas"].values())
-    assert out["regressions"] == []
-    # same-SF still compares
-    out2 = bench.compare_block({"q_topk": 0.5}, base, sf=0.1)
-    assert out2["deltas"]["q_topk"]["ratio"] == 1.0
+    """A cross-sf ratio reads as a huge speedup or regression on every
+    entry, so a baseline at another sf exits 1 before the suite runs."""
+    path = _baseline(tmp_path, {"sf": 0.001, "queries": {"q_topk": 0.1}})
+    with pytest.raises(SystemExit) as exc:
+        bench.load_baseline(path, 0.1)
+    assert exc.value.code == 1
 
 
-def test_confirm_requires_raw_and_normalized():
-    """Round-14 lesson: the post-suite JVM runs tiny canaries ~3x
-    faster than a fresh session, under-correcting the factor and
-    'confirming' queries whose raw ratios were ~1.0-1.4x. Confirmation
-    now requires BOTH ratios >1.5x plus the absolute floor."""
-    ic = bench._is_confirmed
-    assert ic(ratio=2.0, norm=2.0, now=2.0, then=1.0)
-    # raw fine, normalization inflated by a biased canary -> NOT confirmed
-    assert not ic(ratio=1.2, norm=4.0, now=1.2, then=1.0)
-    # normalized fine, raw regressed (host sped up uniformly) -> tracked,
-    # not confirmed
-    assert not ic(ratio=1.2, norm=1.6, now=1.2, then=1.0)
-    assert not ic(ratio=3.0, norm=3.0, now=0.3, then=0.1)  # abs floor
-    assert not ic(ratio=None, norm=2.0, now=2.0, then=1.0)
-    assert not ic(ratio=2.0, norm=None, now=2.0, then=1.0)
-
-
-def test_median_helper():
-    assert bench._median([3.0]) == 3.0
-    assert bench._median([1.0, 2.0]) == 1.5
-    assert bench._median([17.0, 3.4, 3.5]) == 3.5
-
-
-def test_vacuous_compare_preserves_flags_ledger(tmp_path, monkeypatch):
-    """A compare that matched ZERO queries (overwritten side-file
-    baseline) must not clear BENCH_flags.json: 'stops being flagged'
-    requires a real comparison, not an empty one (observed wiping the
-    round-13 ledger)."""
-    import bench as b
-
-    monkeypatch.setattr(
-        b.os.path, "dirname", lambda p, _d=b.os.path.dirname: str(tmp_path)
-        if p == b.os.path.abspath(b.__file__) else _d(p)
+def test_uncomparable_baseline_exits_rather_than_comparing_nothing(tmp_path):
+    """A baseline without a top-level queries map (a driver-wrapped or
+    compact stdout line), or one that shares no entry with the run,
+    exits 1: an empty compare must never read as a clean one."""
+    no_map = _baseline(tmp_path, {"parsed": {"sf": 0.1, "value": 50.0}})
+    with pytest.raises(SystemExit) as exc:
+        bench.load_baseline(no_map, 0.1)
+    assert exc.value.code == 1
+    base = bench.load_baseline(
+        _baseline(tmp_path, {"sf": 0.1, "queries": {"q_gone": 1.0}}), 0.1
     )
-    ledger = tmp_path / "BENCH_flags.json"
-    _write(str(ledger), {"q_x": 1})
-    cmp_full = {"regressions": [], "deltas": {
-        "q_x": {"then": None, "now": 1.0, "ratio": None,
-                "ratio_norm": None}}}
-    out = b.adjudicate_regressions(None, cmp_full, "/nonexistent")
-    assert out.get("vacuous") is True
-    assert out["tracked"] == ["q_x"]
-    import json as _json
-    assert _json.load(open(str(ledger))) == {"q_x": 1}  # untouched
+    with pytest.raises(SystemExit) as exc:
+        bench.compare({"q_topk": 0.2}, {"q_topk": 1.0}, base, "b.json")
+    assert exc.value.code == 1
+
+
+def test_busy_cpu_grows_across_a_busy_loop():
+    """busy_cpu_s is non-negative machine-wide busy seconds, and a
+    CPU-bound loop in this process moves it forward."""
+    before = bench.busy_cpu_s()
+    t_end = time.process_time() + 0.3
+    while time.process_time() < t_end:
+        pass
+    after = bench.busy_cpu_s()
+    assert before >= 0.0
+    assert after - before > 0.1

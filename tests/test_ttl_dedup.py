@@ -5,7 +5,7 @@ needs it, and this container ships a broken install (see
 streaming/stateful.py docstring). The test runs fully wherever
 protobuf is intact.
 
-Skip re-adjudicated 2026-08-14 (round 6): `import google.protobuf`
+Skip re-checked 2026-08-14 (round 6): `import google.protobuf`
 still raises ModuleNotFoundError (no `google` package at all), no
 protobuf wheel exists anywhere on disk, and `pip download protobuf`
 returns nothing in this offline container — a vendored/pinned wheel is

@@ -1,43 +1,49 @@
-"""Standalone per-query timer for optimization work (round 14).
+"""Paired A/B timer for registry queries: the tool that decides whether
+a ``bench.py --compare`` flag is a regression or host noise.
 
-Times selected registry queries in THIS process (fresh JVM if you run
-the script fresh — the honest way to compare against another code
-state), min-of-N with the bench's noop-sink methodology, and
-optionally dumps .explain("formatted") to plans/r14/<q>_<tag>.txt.
+Times the named queries in THIS process with bench.py's methodology
+(same warm-ups, ``run_once`` noop-sink timing, an untimed compile rep
+for CODEC_HEAVY entries) and prints one line per query: the min wall
+over the reps, the busy CPU seconds of that rep (``bench.with_cpu``),
+and every rep's wall.
 
 Usage:
-    python tools/qtime.py [--reps N] [--plan TAG] [--sf DIR] q1 [q2 ...]
+    python tools/qtime.py [--reps N] [--sf DIR] q1 [q2 ...]
 
-Prints one line per query: name, reps, min, all reps. This is a dev
-tool only; the driver's numbers come from bench.py (unchanged
-methodology).
+Protocol for a paired A/B against the parent commit:
+
+    git worktree add ../parent HEAD~1
+    for i in 1 2 3 4 5; do        # alternate which side runs first
+        (cd ../parent && python tools/qtime.py q_flagged)
+        python tools/qtime.py q_flagged
+    done
+
+Each run is a fresh process (a fresh JVM) on each side, so neither side
+inherits the other's JIT, page-cache or Python-worker state. Record the
+per-side mins and cpus, and how many pairs the change lost, in
+CHANGES.md.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from arc_kinesis_tagging_spark.plans.registry import QUERIES
 from arc_kinesis_tagging_spark.session import get_session
-from bench import CODEC_HEAVY, run_once
+from bench import CODEC_HEAVY, run_once, with_cpu
 
 
 def main() -> None:
     args = sys.argv[1:]
     reps = 3
-    plan_tag = None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = []
     i = 0
     while i < len(args):
         if args[i] == "--reps":
             reps = int(args[i + 1]); i += 2
-        elif args[i] == "--plan":
-            plan_tag = args[i + 1]; i += 2
         elif args[i] == "--sf":
             sf_dir = args[i + 1]; i += 2
         else:
@@ -49,23 +55,13 @@ def main() -> None:
     spark.range(64).repartition(32).mapInPandas(
         lambda it: (pdf for pdf in it), "id long"
     ).write.format("noop").mode("overwrite").save()
-    plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r14",
-    )
     for name in names:
-        if plan_tag:
-            os.makedirs(plans_dir, exist_ok=True)
-            df = QUERIES[name].builder(spark, sf_dir)
-            mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted")
-            with open(os.path.join(plans_dir, f"{name}_{plan_tag}.txt"), "w") as fh:
-                fh.write(df._jdf.queryExecution().explainString(mode))
         if name in CODEC_HEAVY:
             run_once(spark, name, sf_dir)  # untimed compile absorb
-        ts = [run_once(spark, name, sf_dir) for _ in range(reps)]
-        print(f"{name}: min={min(ts):.3f}  reps={[round(t,3) for t in ts]}",
-              flush=True)
+        ts = [with_cpu(run_once, spark, name, sf_dir) for _ in range(reps)]
+        wall, cpu = min(ts)
+        print(f"{name}: min={wall:.3f}  cpu={cpu:.2f}  "
+              f"reps={[round(t, 3) for t, _ in ts]}", flush=True)
     spark.stop()
 
 
