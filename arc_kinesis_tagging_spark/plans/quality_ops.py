@@ -1861,8 +1861,8 @@ ORACLE_UNIGRAM_SUBWORDS = _unigram_oracle_sql()
 
 # Frozen models for the SQL-oracled ADMISSION GATE composite: the
 # production streaming stage (streaming/pipeline.py:
-# make_admission_gate(engine="arrow") — robots longest-match + pruned
-# bigram LM + DSIR in ONE vectorized Arrow pass) run as a batch
+# make_admission_gate — robots longest-match + pruned bigram LM +
+# DSIR in ONE vectorized Arrow pass) run as a batch
 # registry query, so the driver hash-checks the production scoring
 # path itself. Models are constants (the fixed-artifact precedent):
 # counts over the corpus vocabulary, power-of-two DSIR ratios (exact
@@ -1918,14 +1918,12 @@ def _admission_urls(d):
 
 def q_admission_gate(spark, sf_dir):
     """The PRODUCTION admission stage as a hash-checked batch query:
-    make_admission_gate(engine="arrow") — the exact vectorized
-    mapInPandas stage the streaming bench runs — over documents with
-    derived host/path and the frozen constant models above. All eight
-    gate columns (robots longest-match with default-allow, pruned-LM
-    bits/kept, DSIR log-ratio/kept) are inside the DuckDB oracle's
-    hash. The expression engine's equality to this stage is pinned
-    separately (tests/test_streaming_gates.py::test_arrow_gate_matches_sql),
-    so one driver row covers both engines."""
+    make_admission_gate — the vectorized mapInPandas stage over the
+    same gate kernel the fused streaming ingest runs — over documents
+    with derived host/path and the frozen constant models above. All
+    eight gate columns (robots longest-match with default-allow,
+    pruned-LM bits/kept, DSIR log-ratio/kept) are inside the DuckDB
+    oracle's hash."""
     from arc_kinesis_tagging_spark.streaming.pipeline import (
         make_admission_gate,
     )
@@ -1935,7 +1933,6 @@ def q_admission_gate(spark, sf_dir):
         ADMISSION_RULES,
         (ADMISSION_BIGRAMS, ADMISSION_CONTEXTS, ADMISSION_V),
         (ADMISSION_DSIR, ADMISSION_UNSEEN),
-        engine="arrow",
         text_col="text",
         lm_threshold=5.0,
         dsir_threshold=0.0,
@@ -2048,32 +2045,6 @@ LEFT JOIN dsdoc ds ON ds.doc_id = d.doc_id
 
 
 ORACLE_ADMISSION_GATE = _admission_oracle_sql()
-
-
-def q_admission_gate_sql(spark, sf_dir):
-    """The SAME production admission stage through the CATALYST
-    expression engine (make_admission_gate(engine="sql") — HOF folds
-    in one fused projection chain), against the SAME DuckDB oracle.
-    The Arrow engine (q_admission_gate) is the production default;
-    this twin keeps the expression path — the parity reference that
-    test_arrow_gate_matches_sql compares against — driver-checked
-    every round too (round-9 verdict task 8), so a Catalyst-side
-    regression can't hide behind a pytest-only pin."""
-    from arc_kinesis_tagging_spark.streaming.pipeline import (
-        make_admission_gate,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    gate = make_admission_gate(
-        ADMISSION_RULES,
-        (ADMISSION_BIGRAMS, ADMISSION_CONTEXTS, ADMISSION_V),
-        (ADMISSION_DSIR, ADMISSION_UNSEEN),
-        engine="sql",
-        text_col="text",
-        lm_threshold=5.0,
-        dsir_threshold=0.0,
-    )
-    return gate(_admission_urls(d)).drop("text")
 
 
 def q_ngram_lm_score(spark, sf_dir):
@@ -3799,8 +3770,6 @@ QUALITY_QUERIES = [
     Query("q_unigram_subwords", q_unigram_subwords,
           ORACLE_UNIGRAM_SUBWORDS),
     Query("q_admission_gate", q_admission_gate, ORACLE_ADMISSION_GATE),
-    Query("q_admission_gate_sql", q_admission_gate_sql,
-          ORACLE_ADMISSION_GATE),
     Query("q_unigram_train", q_unigram_train, None,
           "iterative hard-EM vocabulary fit -> rows-only; reference "
           "parity + Viterbi optimality pinned in tests/test_unigram.py"),

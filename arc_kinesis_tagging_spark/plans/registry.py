@@ -31,6 +31,7 @@ assert len(_BY_NAME) == len(_CANONICAL), "duplicate query names in registry"
 # changed most recently first; every other query follows in _CANONICAL
 # order.
 _HEAD = [
+    "q_admission_gate",
     "q_text_winnowing",
     "q_dedup_substring", "q_dedup_substring_clip",
     "q_dedup_jaccard_prefix", "q_dedup_containment",

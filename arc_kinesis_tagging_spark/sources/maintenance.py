@@ -413,10 +413,11 @@ def compact_bucketed_table(
 
 
 def release_pinned_blocks(spark: SparkSession) -> int:
-    """Free every executor-pinned RDD block in the session — the
-    explicit release point for the ``localCheckpoint`` pins the query
-    builders create (shared-subtree pins in the dedup/LM/pipeline
-    family).
+    """Free the blocks of every locally checkpointed RDD in the
+    session — the explicit release point for the ``localCheckpoint``
+    pins the query builders create (shared-subtree pins in the
+    dedup/LM/pipeline family). User caches (``DataFrame.cache()``,
+    ``rdd.persist()``) are not pins and stay registered.
 
     Why this exists: ``localCheckpoint`` persists an RDD's blocks on
     the executors that computed them and TRUNCATES lineage to those
@@ -430,9 +431,11 @@ def release_pinned_blocks(spark: SparkSession) -> int:
     recomputed (lineage is gone).
 
     Contract: call ONLY after every output derived from the pinned
-    plans has been fully materialized (written/collected). A pinned
-    DataFrame re-executed after release fails rather than silently
-    recomputing — lineage truncation is one-way. Driver scripts
+    plans has been fully materialized (written/collected). The release
+    is session-wide for pins: it also frees the pins of unrelated
+    DataFrames that are still live, and a pinned DataFrame re-executed
+    after release fails rather than silently recomputing — lineage
+    truncation is one-way. Driver scripts
     (tools/curation_e2e.py refresh) call this between pipeline runs;
     the bench does NOT (its per-rep pins die with each rep's plan and
     must stay inside the timed region).
@@ -442,8 +445,10 @@ def release_pinned_blocks(spark: SparkSession) -> int:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     n = 0
     # py4j maps java.util.Map to a dict-like view; iterate its values
-    # (each a JavaRDD) directly.
+    # (each a JavaRDD) directly. Eager and lazy localCheckpoint RDDs
+    # both report isLocallyCheckpointed; cache()/persist() RDDs do not.
     for jrdd in list(jmap.values()):
-        jrdd.unpersist()
-        n += 1
+        if jrdd.rdd().isLocallyCheckpointed():
+            jrdd.unpersist()
+            n += 1
     return n

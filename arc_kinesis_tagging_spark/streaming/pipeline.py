@@ -158,211 +158,16 @@ def dead_letters(records: DataFrame) -> DataFrame:
 
 # --- corpus-quality admission gates, streaming-composable -------------------
 # The batch registry forms (plans/relational3.py:q_robots_gate,
-# plans/quality_ops.py:q_ngram_lm_pruned) rank with windows / train the
-# model in-query — shapes a micro-batch stream cannot run in append
-# mode. These stages are the PRODUCTION streaming forms: the models
-# (robots rules, pruned LM) are bounded by construction, frozen into
-# literal expressions, and evaluated entirely map-side — no shuffle, no
-# state, identical results to the batch formulations (pinned by the
-# golden parity tests in tests/test_streaming_gates.py).
+# plans/quality_ops.py:q_ngram_lm_pruned, q_dsir_score) rank with
+# windows / train the model in-query — shapes a micro-batch stream
+# cannot run in append mode. The PRODUCTION streaming form freezes
+# bounded models (robots rules, pruned LM, DSIR bucket ratios) into one
+# Python kernel, _gate_closures, evaluated entirely map-side — no
+# shuffle, no state. Two entry points share it: make_admission_gate for
+# any frame, fused_gated_story_pipeline for raw records. Parity with
+# the batch formulations is pinned by tests/test_streaming_gates.py.
 
 _LM_SEP = "\x01"  # sorts below every token character
-
-
-def _robots_rules_map(rules):
-    """Literal host -> sorted [(prefix, allow)] map for the robots fold
-    (shared by the stacked and fused gate builders)."""
-    by_host: dict = {}
-    for host, prefix, allow in rules:
-        by_host.setdefault(host, []).append((prefix, allow))
-    entries = []
-    for host, rs in sorted(by_host.items()):
-        entries.append(F.lit(host))
-        entries.append(
-            F.array(
-                *[
-                    F.struct(F.lit(p).alias("prefix"), F.lit(a).alias("allow"))
-                    for p, a in sorted(rs)
-                ]
-            )
-        )
-    rules_map = F.create_map(*entries)
-    empty = F.array().cast("array<struct<prefix:string,allow:boolean>>")
-    return rules_map, empty
-
-
-def _robots_best(rules_map, empty, host_col: str, path_col: str):
-    """Longest-match fold over the host's rule array: one struct
-    expression ``(plen, allow, prefix)`` per row."""
-    cand = F.filter(
-        F.coalesce(F.element_at(rules_map, F.col(host_col)), empty),
-        lambda r: F.col(path_col).startswith(r["prefix"]),
-    )
-    init = F.struct(
-        F.lit(-1).alias("plen"),
-        F.lit(True).alias("allow"),
-        F.lit("<default>").alias("prefix"),
-    )
-    return F.aggregate(
-        cand,
-        init,
-        lambda acc, r: F.when(
-            F.length(r["prefix"]) > acc["plen"],
-            F.struct(
-                F.length(r["prefix"]).alias("plen"),
-                r["allow"].alias("allow"),
-                r["prefix"].alias("prefix"),
-            ),
-        ).otherwise(acc),
-    )
-
-
-def make_robots_gate(rules, host_col: str = "host", path_col: str = "path"):
-    """Build a streaming-safe robots admission stage from a bounded
-    rule list [(host, path_prefix, allow), ...] (robots rules are
-    KB-sized per host, RFC 9309). Longest-match precedence is computed
-    per row with a HOF fold over the host's rule array — the
-    expression equivalent of the batch form's ranked window, legal in
-    append-mode streaming because it is a pure projection. Adds
-    ``admitted`` and ``matched_rule`` columns; unmatched paths default
-    to allow."""
-    rules_map, empty = _robots_rules_map(rules)
-
-    def stage(df: DataFrame) -> DataFrame:
-        # materialize the fold once: admitted and matched_rule both
-        # consume it, and two bare withColumns would run it twice
-        df = df.withColumn(
-            "__robots_best", _robots_best(rules_map, empty, host_col, path_col)
-        )
-        return (
-            df.withColumn("admitted", F.col("__robots_best")["allow"])
-            .withColumn("matched_rule", F.col("__robots_best")["prefix"])
-            .drop("__robots_best")
-        )
-
-    return stage
-
-
-def make_lm_gate(
-    bigram_counts: dict,
-    context_counts: dict,
-    vsize: int,
-    text_col: str = "text",
-    threshold: float = 6.0,
-):
-    """Build a streaming-safe token-bigram LM scoring stage from a
-    FROZEN bounded model: ``bigram_counts`` {(ta, tb): count} is the
-    top-V pruned bigram table (bounded by construction — the
-    q_ngram_lm_pruned model shape), ``context_counts`` {ta: count}
-    the (optionally pruned) unigram contexts, ``vsize`` the training
-    vocabulary size. Scoring is add-one with nab=0 backoff for
-    pruned-out bigrams and na=0 for pruned-out contexts — evaluated
-    per row with literal-map lookups and a HOF sum, so the stage is a
-    pure projection (append-mode safe, zero shuffle). Adds
-    ``n_bigrams``, ``bits_per_token`` (null when < 2 tokens) and
-    ``lm_kept``."""
-    bmap, nmap = _lm_literal_maps(bigram_counts, context_counts)
-
-    def stage(df: DataFrame) -> DataFrame:
-        # materialize the token array ONCE: the expression below
-        # references it five times, and in the interpreted (HOF,
-        # CodegenFallback) projection each textual occurrence of
-        # split() re-tokenizes the row — a real 5x on the hot path.
-        # CollapseProject keeps a non-cheap alias referenced more than
-        # once as an attribute, so the withColumn survives as a single
-        # evaluation.
-        df = df.withColumn("__lm_ts", F.split(F.col(text_col), " "))
-        out = df.withColumn(
-            "__bits", _lm_bits(bmap, nmap, vsize, F.col("__lm_ts"))
-        )
-        return _lm_outputs(out, threshold).drop("__bits", "__lm_ts")
-
-    return stage
-
-
-def _lm_literal_maps(bigram_counts: dict, context_counts: dict):
-    """Literal lookup maps for the frozen pruned-bigram LM (shared by
-    the stacked and fused gate builders)."""
-    if bigram_counts:
-        bmap = F.create_map(
-            *[
-                x
-                for (ta, tb), c in sorted(bigram_counts.items())
-                for x in (F.lit(f"{ta}{_LM_SEP}{tb}"), F.lit(int(c)))
-            ]
-        )
-    else:
-        bmap = F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<int>")
-        )
-    if context_counts:
-        nmap = F.create_map(
-            *[
-                x
-                for ta, c in sorted(context_counts.items())
-                for x in (F.lit(ta), F.lit(int(c)))
-            ]
-        )
-    else:
-        nmap = F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<int>")
-        )
-    return bmap, nmap
-
-
-def _lm_bits(bmap, nmap, vsize: int, ts):
-    """Per-bigram -log2 probability array (add-one smoothing, nab=0 /
-    na=0 backoff for pruned-out entries) over a MATERIALIZED token
-    array column ``ts``."""
-    n = F.size(ts)
-    return F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: -F.log2(
-                (
-                    F.coalesce(
-                        F.element_at(
-                            bmap,
-                            F.concat(
-                                F.element_at(ts, i),
-                                F.lit(_LM_SEP),
-                                F.element_at(ts, i + 1),
-                            ),
-                        ),
-                        F.lit(0),
-                    )
-                    + F.lit(1.0)
-                )
-                / (
-                    F.coalesce(
-                        F.element_at(nmap, F.element_at(ts, i)), F.lit(0)
-                    )
-                    + F.lit(vsize)
-                ).cast("double")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<double>"))
-
-
-def _lm_outputs(out: DataFrame, threshold: float) -> DataFrame:
-    """n_bigrams / bits_per_token / lm_kept from a materialized
-    ``__bits`` column (does NOT drop the temp — callers own that)."""
-    bpt = F.round(
-        F.aggregate(F.col("__bits"), F.lit(0.0), lambda acc, x: acc + x)
-        / F.size("__bits"),
-        3,
-    )
-    return (
-        out.withColumn("n_bigrams", F.size("__bits").cast("long"))
-        .withColumn("bits_per_token", F.when(F.col("n_bigrams") > 0, bpt))
-        .withColumn(
-            "lm_kept",
-            F.coalesce(
-                F.col("bits_per_token") <= F.lit(threshold), F.lit(False)
-            ),
-        )
-    )
 
 
 def train_pruned_lm(
@@ -371,7 +176,7 @@ def train_pruned_lm(
     top_v: int = 512,
     top_u: int = 512,
 ):
-    """Batch-train the frozen bounded model make_lm_gate consumes:
+    """Batch-train the frozen bounded LM make_admission_gate consumes:
     top-V bigrams and top-U unigram contexts by count (deterministic
     tie-break on the token key, selected with the two-level
     bounded_topk_rank — no global sort of the bigram table), plus the
@@ -412,8 +217,8 @@ def train_pruned_lm(
 
 
 def train_dsir_model(docs: DataFrame, target_pred) -> tuple[dict, float]:
-    """Batch-train the frozen bounded model make_dsir_gate consumes:
-    the B-bucket (B = 256) log importance ratios of the target
+    """Batch-train the frozen bounded DSIR model make_admission_gate
+    consumes: the B-bucket (B = 256) log importance ratios of the target
     distribution (rows where ``target_pred`` holds) over the raw
     distribution, hashed-unigram+bigram features, add-one smoothing —
     the exact model of plans/quality_ops.py:q_dsir_score. Returns
@@ -454,106 +259,6 @@ def train_dsir_model(docs: DataFrame, target_pred) -> tuple[dict, float]:
     return model, ratio(0, 0)
 
 
-def make_dsir_gate(
-    model: dict,
-    unseen_ratio: float,
-    threshold: float = 0.0,
-    text_col: str = "text",
-):
-    """Build a streaming-safe DSIR admission stage from a frozen
-    bucket-ratio model (train_dsir_model): per row, hash the doc's
-    unigram+bigram grams into buckets with the portable md5 hash and
-    fold the bucket ratios into the mean log importance ratio — a
-    literal-map lookup inside a HOF, so the stage is a pure projection
-    (append-mode safe, zero shuffle, composes with the robots and LM
-    gates). Adds ``n_grams``, ``dsir_logratio`` (3 dp, null for
-    gram-less docs) and ``dsir_kept``. Scores match the batch
-    q_dsir_score on the training corpus (golden-parity test)."""
-    from arc_kinesis_tagging_spark.functions.text import tokens
-
-    rmap = _dsir_ratio_map(model)
-
-    def stage(df: DataFrame) -> DataFrame:
-        out = df.withColumn(
-            "__dsir", _dsir_scores(rmap, unseen_ratio, tokens(F.col(text_col)))
-        )
-        return _dsir_outputs(out, threshold).drop("__dsir")
-
-    return stage
-
-
-def _dsir_ratio_map(model: dict):
-    """Literal bucket -> log-ratio map for the frozen DSIR model
-    (shared by the stacked and fused gate builders)."""
-    return F.create_map(
-        *[
-            x
-            for b, r in sorted(model.items())
-            for x in (F.lit(int(b)), F.lit(float(r)))
-        ]
-    ) if model else F.map_from_arrays(
-        F.array().cast("array<int>"), F.array().cast("array<double>")
-    )
-
-
-def _dsir_scores(rmap, unseen_ratio: float, toks):
-    """Per-gram log importance-ratio array: unigrams + bigrams hashed
-    into 256 buckets with the portable md5 hash, looked up in the
-    literal model map with the unseen-bucket fallback."""
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = F.concat(toks, bigrams)
-    return F.transform(
-        grams,
-        lambda g: F.coalesce(
-            F.element_at(
-                rmap,
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat(F.lit("dsir:"), g)), 1, 15
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % F.lit(256)
-                ).cast("int"),
-            ),
-            F.lit(float(unseen_ratio)),
-        ),
-    )
-
-
-def _dsir_outputs(out: DataFrame, threshold: float) -> DataFrame:
-    """n_grams / dsir_logratio / dsir_kept from a materialized
-    ``__dsir`` column (does NOT drop the temp — callers own that)."""
-    mean = (
-        F.round(
-            F.aggregate(F.col("__dsir"), F.lit(0.0), lambda a, x: a + x)
-            / F.size("__dsir"),
-            3,
-        )
-        + F.lit(0.0)  # collapse IEEE -0.0 (batch parity)
-    )
-    return (
-        out.withColumn("n_grams", F.size("__dsir").cast("long"))
-        .withColumn("dsir_logratio", F.when(F.col("n_grams") > 0, mean))
-        .withColumn(
-            "dsir_kept",
-            F.coalesce(
-                F.col("dsir_logratio") >= F.lit(threshold), F.lit(False)
-            ),
-        )
-    )
-
-
 def make_admission_gate(
     robots_rules,
     lm_model: tuple,
@@ -564,79 +269,84 @@ def make_admission_gate(
     text_col: str = "text",
     lm_threshold: float = 6.0,
     dsir_threshold: float = 0.0,
-    engine: str = "sql",
 ):
-    """FUSED admission gate: robots longest-match + frozen pruned-LM
-    scoring + frozen DSIR scoring computed in ONE projection chain,
-    column-identical to stacking the three ``make_*_gate`` stages
-    (pinned by tests/test_streaming_gates.py::test_fused_gate_matches_stacked).
+    """The admission gate as a DataFrame stage: robots longest-match +
+    frozen pruned-LM scoring + frozen DSIR scoring in ONE vectorized
+    mapInPandas pass over ``_gate_closures``.
 
-    Why it exists: stacking the three stages costs ~2.3x the plain
-    pipeline (round-8 bench) for two plan reasons the fused form
-    removes — (1) a downstream ``admitted & lm_kept & dsir_kept``
-    filter is pushed through the gate Projects and RE-INLINES every
-    HOF fold into the Filter node, so each gate expression runs twice
-    per row; (2) each stage is its own interpreted projection pass.
-    Here every expensive intermediate (robots fold struct, LM bits
-    array, DSIR score array) is materialized exactly once as a temp
-    column, the scalar outputs are derived from the temps, and
-    ``admission_barrier`` (below) gives callers a pushdown-proof
-    boolean to filter on.
-
+    ``robots_rules`` is a bounded ``[(host, path_prefix, allow), ...]``
+    list (unmatched paths default to allow, rule ``'<default>'``);
     ``lm_model`` is ``(bigram_counts, context_counts, vsize)`` from
     train_pruned_lm; ``dsir_model`` is ``(bucket_ratios,
-    unseen_ratio)`` from train_dsir_model. Pure projection — zero
-    shuffle, zero state, append-mode safe.
+    unseen_ratio)`` from train_dsir_model. Appends eight columns:
+    ``admitted``, ``matched_rule``, ``n_bigrams``, ``bits_per_token``
+    (null under 2 tokens), ``lm_kept``, ``n_grams``, ``dsir_logratio``
+    (3 dp, null for gram-less text) and ``dsir_kept``.
 
-    ``engine="sql"`` (default) builds the Catalyst expression form
-    above; ``engine="arrow"`` evaluates the SAME frozen models in one
-    vectorized Arrow pass (``_arrow_admission_stage``) — HOF folds are
-    CodegenFallback (interpreted, ~20-30 us/row at bench shape), so
-    the Arrow form is several times faster AND is its own
-    materialization fence (predicates do not push below mapInPandas),
-    making ``admission_barrier`` unnecessary. Output is
-    column-identical across engines (pinned by
-    tests/test_streaming_gates.py::test_arrow_gate_matches_sql)."""
-    from arc_kinesis_tagging_spark.functions.text import tokens
+    Map-only — zero shuffle, zero state, append-mode safe. The stage is
+    also a plan fence: predicates never push below mapInPandas, so a
+    downstream ``admitted & lm_kept & dsir_kept`` filter reads
+    materialized booleans instead of re-running the gates."""
+    from typing import Iterator
 
-    if engine == "arrow":
-        return _arrow_admission_stage(
-            robots_rules, lm_model, dsir_model,
-            host_col=host_col, path_col=path_col, text_col=text_col,
-            lm_threshold=lm_threshold, dsir_threshold=dsir_threshold,
-        )
+    from pyspark.sql.types import (
+        BooleanType,
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
 
-    rules_map, empty = _robots_rules_map(robots_rules)
-    bigram_counts, context_counts, vsize = lm_model
-    bmap, nmap = _lm_literal_maps(bigram_counts, context_counts)
-    model, unseen_ratio = dsir_model
-    rmap = _dsir_ratio_map(model)
+    robots, lm, dsir = _gate_closures(
+        robots_rules, lm_model, dsir_model, lm_threshold, dsir_threshold
+    )
 
     def stage(df: DataFrame) -> DataFrame:
-        # one withColumn per expensive intermediate: each is consumed
-        # more than once downstream, so CollapseProject keeps it as an
-        # attribute and it evaluates exactly once per row
-        df = (
-            df.withColumn(
-                "__robots_best",
-                _robots_best(rules_map, empty, host_col, path_col),
-            )
-            .withColumn("__lm_ts", F.split(F.col(text_col), " "))
-            .withColumn(
-                "__bits", _lm_bits(bmap, nmap, vsize, F.col("__lm_ts"))
-            )
-            .withColumn(
-                "__dsir",
-                _dsir_scores(rmap, unseen_ratio, tokens(F.col(text_col))),
-            )
+        out_schema = StructType(
+            list(df.schema.fields)
+            + [
+                StructField("admitted", BooleanType(), False),
+                StructField("matched_rule", StringType(), True),
+                StructField("n_bigrams", LongType(), True),
+                StructField("bits_per_token", DoubleType(), True),
+                StructField("lm_kept", BooleanType(), False),
+                StructField("n_grams", LongType(), True),
+                StructField("dsir_logratio", DoubleType(), True),
+                StructField("dsir_kept", BooleanType(), False),
+            ]
         )
-        df = (
-            df.withColumn("admitted", F.col("__robots_best")["allow"])
-            .withColumn("matched_rule", F.col("__robots_best")["prefix"])
-        )
-        df = _lm_outputs(df, lm_threshold)
-        df = _dsir_outputs(df, dsir_threshold)
-        return df.drop("__robots_best", "__lm_ts", "__bits", "__dsir")
+
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                adm, mr, nb_l, bpt_l, lk_l, ng_l, dm_l, dk_l = (
+                    [], [], [], [], [], [], [], []
+                )
+                for host, path, text in zip(
+                    pdf[host_col], pdf[path_col], pdf[text_col]
+                ):
+                    allow, prefix = robots(host, path)
+                    adm.append(allow)
+                    mr.append(prefix)
+                    nb, bpt, lk = lm(text)
+                    nb_l.append(nb)
+                    bpt_l.append(bpt)
+                    lk_l.append(lk)
+                    ng, dmean, dk = dsir(text)
+                    ng_l.append(ng)
+                    dm_l.append(dmean)
+                    dk_l.append(dk)
+                yield pdf.assign(
+                    admitted=pd.Series(adm, dtype="bool"),
+                    matched_rule=mr,
+                    n_bigrams=pd.Series(nb_l, dtype="int64"),
+                    bits_per_token=pd.Series(bpt_l, dtype="float64"),
+                    lm_kept=pd.Series(lk_l, dtype="bool"),
+                    n_grams=pd.Series(ng_l, dtype="int64"),
+                    dsir_logratio=pd.Series(dm_l, dtype="float64"),
+                    dsir_kept=pd.Series(dk_l, dtype="bool"),
+                )
+
+        return df.mapInPandas(run, out_schema)
 
     return stage
 
@@ -651,7 +361,7 @@ def _gate_closures(
     """The shared Python gate kernels — ``(robots, lm, dsir)``
     closures over the frozen models, memoized with bounded caches —
     used by BOTH the standalone Arrow gate stage
-    (_arrow_admission_stage) and the fused single-pass ingest
+    (make_admission_gate) and the fused single-pass ingest
     (fused_gated_story_pipeline), so the two shapes are
     column-identical by construction, not by parallel maintenance.
 
@@ -768,107 +478,6 @@ def _gate_closures(
         return got
 
     return robots, lm, dsir
-
-
-def _arrow_admission_stage(
-    robots_rules,
-    lm_model: tuple,
-    dsir_model: tuple,
-    *,
-    host_col: str,
-    path_col: str,
-    text_col: str,
-    lm_threshold: float,
-    dsir_threshold: float,
-):
-    """The ``engine="arrow"`` body of make_admission_gate: one
-    vectorized mapInPandas pass computing the SAME eight gate columns
-    as the expression form, from the same frozen models.
-
-    Cross-engine exactness notes (the plans/common.py discipline,
-    applied Spark-expression-vs-Python this time):
-    - LM tokens: ``text.split(" ")`` — Java ``split`` with limit -1
-      keeps leading/inner/trailing empties exactly like Python's.
-    - DSIR tokens: Java ``\\s`` is ASCII ``[ \\t\\n\\x0b\\f\\r]`` (not
-      Python's unicode ``\\s``) — split on that class explicitly.
-    - log2 via ``log(x)/log(2)`` (Spark's Log2 lowering), sums as
-      LEFT folds (``sum`` over a list == ``F.aggregate``'s fold), and
-      3-dp rounding as half-AWAY-FROM-ZERO on the binary double
-      (``floor(|x|*1000 + 0.5)`` signed) == Spark ROUND's
-      BigDecimal.HALF_UP; ``+ 0.0`` collapses IEEE -0.0.
-    - null semantics: null text -> 0 words/grams, null scores, kept
-      False; unmatched host -> default allow, '<default>'.
-
-    Per-text results are memoized with a bounded cache (hot streams
-    repeat headline shapes; the cache drops wholesale past the cap so
-    heavy-tailed corpora cannot grow executor memory). The stage is
-    also a plan fence: predicates never push below mapInPandas, so a
-    downstream admitted-filter reads materialized booleans."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    robots, lm, dsir = _gate_closures(
-        robots_rules, lm_model, dsir_model, lm_threshold, dsir_threshold
-    )
-
-    def stage(df: DataFrame) -> DataFrame:
-        from pyspark.sql.types import (
-            BooleanType,
-            DoubleType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        out_schema = StructType(
-            list(df.schema.fields)
-            + [
-                StructField("admitted", BooleanType(), False),
-                StructField("matched_rule", StringType(), True),
-                StructField("n_bigrams", LongType(), True),
-                StructField("bits_per_token", DoubleType(), True),
-                StructField("lm_kept", BooleanType(), False),
-                StructField("n_grams", LongType(), True),
-                StructField("dsir_logratio", DoubleType(), True),
-                StructField("dsir_kept", BooleanType(), False),
-            ]
-        )
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                adm, mr, nb_l, bpt_l, lk_l, ng_l, dm_l, dk_l = (
-                    [], [], [], [], [], [], [], []
-                )
-                for host, path, text in zip(
-                    pdf[host_col], pdf[path_col], pdf[text_col]
-                ):
-                    allow, prefix = robots(host, path)
-                    adm.append(allow)
-                    mr.append(prefix)
-                    nb, bpt, lk = lm(text)
-                    nb_l.append(nb)
-                    bpt_l.append(bpt)
-                    lk_l.append(lk)
-                    ng, dmean, dk = dsir(text)
-                    ng_l.append(ng)
-                    dm_l.append(dmean)
-                    dk_l.append(dk)
-                yield pdf.assign(
-                    admitted=pd.Series(adm, dtype="bool"),
-                    matched_rule=mr,
-                    n_bigrams=pd.Series(nb_l, dtype="int64"),
-                    bits_per_token=pd.Series(bpt_l, dtype="float64"),
-                    lm_kept=pd.Series(lk_l, dtype="bool"),
-                    n_grams=pd.Series(ng_l, dtype="int64"),
-                    dsir_logratio=pd.Series(dm_l, dtype="float64"),
-                    dsir_kept=pd.Series(dk_l, dtype="bool"),
-                )
-
-        return df.mapInPandas(run, out_schema)
-
-    return stage
 
 
 def fused_gated_story_pipeline(
@@ -1085,19 +694,3 @@ def fused_gated_story_pipeline(
             yield pd.DataFrame(rows, columns=cols)
 
     return records.mapInPandas(run, out_schema)
-
-
-def admission_barrier(df: DataFrame) -> DataFrame:
-    """Materialization barrier for gate outputs: run AFTER
-    ``make_admission_gate`` (or the stacked gates) and BEFORE any
-    filter on ``admitted``/``lm_kept``/``dsir_kept``. Without it,
-    Catalyst pushes the (deterministic) predicate below the gate
-    Project and re-inlines the full HOF folds into the Filter node —
-    the round-8 gated pipeline paid every gate twice per row. The
-    identity Arrow pass pins the computed columns as attributes, so
-    the filter is three boolean loads. Cost: one pipelined Arrow
-    round-trip (no shuffle); net win whenever the gate expressions
-    dominate a row copy, which they do by ~5x at bench shape."""
-    from arc_kinesis_tagging_spark.operators.pandas_ops import arrow_barrier
-
-    return arrow_barrier(df)

@@ -106,6 +106,9 @@ DOC_QUERIES = [
     # unseen-char-floor paths cross-engine
     "q_wordpiece_subwords",
     "q_unigram_subwords",
+    # the admission gate: empty, whitespace-only, single-token and
+    # unicode docs, plus paths no robots rule matches (default allow)
+    "q_admission_gate",
 ]
 
 

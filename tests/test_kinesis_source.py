@@ -481,8 +481,8 @@ def test_stream_writer_commit_crash_windows(tmp_path, monkeypatch):
 def test_gated_pipeline_full_connector_loop(registered, tmp_path):
     """The production loop END TO END over the connector on BOTH
     sides: consume stream A through kinesis_emu, run the story
-    pipeline plus the frozen LM admission gate behind an
-    arrow_barrier, republish only the ADMITTED records to stream B
+    pipeline plus the admission gate (allow-all robots rules, frozen
+    LM), republish only the LM-ADMITTED records to stream B
     through the exactly-once staged writer, and survive a
     checkpointed re-run with zero duplicates. Composes what the
     gate-parity, writer-crash, and reader tests each prove alone."""
@@ -490,9 +490,8 @@ def test_gated_pipeline_full_connector_loop(registered, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from arc_kinesis_tagging_spark.operators.pandas_ops import arrow_barrier
     from arc_kinesis_tagging_spark.streaming.pipeline import (
-        make_lm_gate,
+        make_admission_gate,
         train_pruned_lm,
     )
 
@@ -525,8 +524,10 @@ def test_gated_pipeline_full_connector_loop(registered, tmp_path):
     write_kinesis_fixture(src, recs)
 
     train = spark.createDataFrame([(fluent,)] * 3, "text string")
-    bmap, nmap, vsize = train_pruned_lm(train, "text")
-    lm = make_lm_gate(bmap, nmap, vsize, text_col="headline", threshold=2.5)
+    gate = make_admission_gate(
+        [], train_pruned_lm(train, "text"), ({}, 0.0),
+        text_col="headline", lm_threshold=2.5,
+    )
 
     def run():
         records = (
@@ -534,7 +535,11 @@ def test_gated_pipeline_full_connector_loop(registered, tmp_path):
             .option("streamDir", src).load()
         )
         admitted = (
-            lm(arrow_barrier(story_pipeline(records)))
+            gate(
+                story_pipeline(records)
+                .withColumn("host", F.lit("news"))
+                .withColumn("path", F.lit("/"))
+            )
             .filter(F.col("lm_kept"))
             .select(
                 F.to_binary(F.col("_id"), F.lit("utf-8")).alias("data"),

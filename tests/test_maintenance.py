@@ -435,12 +435,21 @@ def test_compact_ivf_index_survives_interrupted_swap(spark, tmp_path):
             assert len(files) == 1, (d, files)
 
 
+def _pinned_rdds(spark):
+    """The session's persistent RDDs that are localCheckpoint pins."""
+    return [
+        jrdd
+        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values()
+        if jrdd.rdd().isLocallyCheckpointed()
+    ]
+
+
 def test_release_pinned_blocks_frees_localcheckpoint_pins(spark):
     """release_pinned_blocks (round-15 §5 audit) must unpersist every
     executor-pinned RDD — including the blocks a lazy localCheckpoint
-    materialized — and leave the session's persistent-RDD registry
-    empty. Uses a builder-shaped pin (lazy checkpoint, action, then
-    release after the output is materialized)."""
+    materialized — so that no pin remains registered. Uses a
+    builder-shaped pin (lazy checkpoint, action, then release after
+    the output is materialized)."""
     from arc_kinesis_tagging_spark.sources.maintenance import (
         release_pinned_blocks,
     )
@@ -455,9 +464,46 @@ def test_release_pinned_blocks_frees_localcheckpoint_pins(spark):
     )
     out = pinned.groupBy((pinned.id % 7).alias("k")).count()
     assert out.count() == 7  # materializes the pin
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    assert jmap.size() >= 1  # the pin is registered
+    assert len(_pinned_rdds(spark)) >= 1  # the pin is registered
 
     n = release_pinned_blocks(spark)
     assert n >= 1
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert _pinned_rdds(spark) == []
+
+
+def test_release_pinned_blocks_keeps_user_caches(spark):
+    """Only pins are released: a cached DataFrame and a persisted RDD
+    stay registered and keep serving, while eager and lazy
+    localCheckpoint pins are all freed (ADVICE medium)."""
+    from arc_kinesis_tagging_spark.sources.maintenance import (
+        release_pinned_blocks,
+    )
+
+    jsc = spark.sparkContext._jsc
+
+    def registered():
+        return set(jsc.getPersistentRDDs().keys())
+
+    release_pinned_blocks(spark)
+    base = registered()
+    cached = spark.range(100).selectExpr("id * 3 AS v").cache()
+    persisted = spark.sparkContext.parallelize(range(50)).persist()
+    try:
+        assert cached.count() == 100
+        cache_ids = registered() - base
+        assert cache_ids  # the DataFrame cache's RDD
+        assert persisted.count() == 50
+        eager = spark.range(10).localCheckpoint()
+        lazy = spark.range(20).localCheckpoint(eager=False)
+        assert eager.count() == 10 and lazy.count() == 20
+        assert len(_pinned_rdds(spark)) >= 2
+
+        assert release_pinned_blocks(spark) >= 2
+        assert _pinned_rdds(spark) == []
+        after = registered()
+        assert cache_ids <= after
+        assert persisted.id() in after
+        assert cached.count() == 100 and persisted.count() == 50
+    finally:
+        cached.unpersist()
+        persisted.unpersist()

@@ -1,17 +1,18 @@
-"""Round-7 streaming parity for the corpus-quality admission gates:
-the robots longest-match gate and the pruned token-bigram LM gate run
-as PURE-PROJECTION streaming stages (streaming/pipeline.py) — golden-
-tested against their batch registry formulations, then driven e2e
-through the file-backed record stream: decode -> project -> robots
-gate -> LM gate -> dedup -> foreachBatch sink."""
+"""Streaming parity for the corpus-quality admission gate: the robots
+longest-match, pruned token-bigram LM and DSIR gates run as ONE
+map-only stage (streaming/pipeline.py:make_admission_gate) — golden-
+tested column by column against their batch registry formulations,
+pinned on edge rows, driven e2e through the file-backed record stream
+(decode -> project -> admission gate -> dedup -> foreachBatch sink),
+and checked against the single-pass fused ingest."""
 
 from pyspark.sql import functions as F
 
 from arc_kinesis_tagging_spark.sources.tables import load_table
 from arc_kinesis_tagging_spark.streaming.pipeline import (
-    make_lm_gate,
-    make_robots_gate,
+    make_admission_gate,
     story_pipeline,
+    train_dsir_model,
     train_pruned_lm,
 )
 from arc_kinesis_tagging_spark.streaming.source import (
@@ -29,6 +30,10 @@ ROBOTS_RULES = [
     ("site5", "/", False),
     ("site5", "/public/", True),
 ]
+# models that score nothing: an empty LM over a V=4 vocabulary (every
+# bigram costs log2(4) = 2 bits) and an empty DSIR model
+NO_LM = ({}, {}, 4)
+NO_DSIR = ({}, 0.0)
 
 
 def _urls(spark):
@@ -46,26 +51,32 @@ def _urls(spark):
     )
 
 
+def _corpus(spark):
+    d = load_table(spark, "documents", SF)
+    return _urls(spark).join(d.select("doc_id", "text"), "doc_id")
+
+
 def test_robots_stage_matches_batch_query(spark):
-    """The HOF-fold longest-match stage must agree row-for-row with
-    the ranked-window batch formulation on the registry fixture."""
+    """The gate's longest-match robots columns must agree row-for-row
+    with the ranked-window batch formulation on the registry
+    fixture."""
     from arc_kinesis_tagging_spark.plans.relational3 import q_robots_gate
 
     batch = {
         r["doc_id"]: (r["admitted"], r["matched_rule"])
         for r in q_robots_gate(spark, SF).collect()
     }
-    stage = make_robots_gate(ROBOTS_RULES)
+    stage = make_admission_gate(ROBOTS_RULES, NO_LM, NO_DSIR)
     got = {
         r["doc_id"]: (r["admitted"], r["matched_rule"])
-        for r in stage(_urls(spark)).collect()
+        for r in stage(_corpus(spark)).collect()
     }
     assert got == batch
 
 
 def test_lm_gate_matches_pruned_query_scores(spark):
     """With the same frozen model (top-512 bigrams = _LM_TOP_V, all
-    unigram contexts), the map-side stage must reproduce
+    unigram contexts), the gate's LM columns must reproduce
     q_ngram_lm_pruned's bits-per-token within the 3-dp rounding
     granularity (float addition order differs)."""
     from arc_kinesis_tagging_spark.plans.quality_ops import q_ngram_lm_pruned
@@ -73,10 +84,12 @@ def test_lm_gate_matches_pruned_query_scores(spark):
     d = load_table(spark, "documents", SF)
     bmap, nmap, vsize = train_pruned_lm(d, "text", top_v=512, top_u=10**6)
     assert len(bmap) <= 512 and vsize > 0
-    stage = make_lm_gate(bmap, nmap, vsize, text_col="text", threshold=6.0)
+    stage = make_admission_gate(
+        ROBOTS_RULES, (bmap, nmap, vsize), NO_DSIR, lm_threshold=6.0
+    )
     got = {
         r["doc_id"]: r
-        for r in stage(d.select("doc_id", "text")).collect()
+        for r in stage(_corpus(spark)).collect()
         if r["n_bigrams"] > 0
     }
     want = {r["doc_id"]: r for r in q_ngram_lm_pruned(spark, SF).collect()}
@@ -101,14 +114,9 @@ def _gate_story(doc_id, headline):
 
 def test_streaming_gates_dedup_sink_e2e(spark, tmp_path):
     """Full micro-batch path: gzip'd records -> decode/route/filter/
-    project -> robots gate -> LM gate -> DSIR gate -> stateful dedup
+    project -> admission gate (robots, LM, DSIR) -> stateful dedup
     -> foreachBatch sink, compared against the batch golden over the
     same records."""
-    from arc_kinesis_tagging_spark.streaming.pipeline import (
-        make_dsir_gate,
-        train_dsir_model,
-    )
-
     fluent = "the quick brown fox jumps over the lazy dog"
     gibberish = "zx qv jk wq xz vq kj qw zv xq"
     offtopic = "completely unrelated topic entirely other subject matter"
@@ -128,26 +136,25 @@ def test_streaming_gates_dedup_sink_e2e(spark, tmp_path):
     # fluent corpus only, so gibberish scores all-backoff bits; DSIR
     # target = fox-like docs, raw also carries the offtopic doc, so
     # offtopic grams score a negative importance ratio
-    robots = make_robots_gate(
-        [("a", "/", True), ("b", "/", False)], host_col="host", path_col="path"
-    )
     train = spark.createDataFrame(
         [(fluent,), (fluent + " again",), (fluent,), (offtopic,)],
         "text string",
     )
-    bmap, nmap, vsize = train_pruned_lm(train, "text")
-    lm = make_lm_gate(bmap, nmap, vsize, text_col="headline", threshold=2.5)
-    model, unseen = train_dsir_model(
-        train, F.col("text").contains("fox")
+    gate = make_admission_gate(
+        [("a", "/", True), ("b", "/", False)],
+        train_pruned_lm(train, "text"),
+        train_dsir_model(train, F.col("text").contains("fox")),
+        text_col="headline",
+        lm_threshold=2.5,
+        dsir_threshold=0.0,
     )
-    dsir = make_dsir_gate(model, unseen, threshold=0.0, text_col="headline")
 
     def gated(df):
         withurl = df.withColumn(
             "host", F.split(F.col("_id"), "-").getItem(0)
         ).withColumn("path", F.concat(F.lit("/posts/"), F.col("_id")))
         return (
-            dsir(lm(robots(withurl)))
+            gate(withurl)
             .filter(
                 F.col("admitted") & F.col("lm_kept") & F.col("dsir_kept")
             )
@@ -191,23 +198,20 @@ def test_streaming_gates_dedup_sink_e2e(spark, tmp_path):
 
 def test_dsir_gate_matches_batch_query(spark):
     """With the model trained on the same corpus (target = lang 'en'),
-    the map-side DSIR stage must reproduce q_dsir_score's per-doc
+    the gate's DSIR columns must reproduce q_dsir_score's per-doc
     n_grams, 3-dp log ratio (within rounding granularity — the fold
     order differs from the batch bucket-aggregate), and kept flag."""
     from arc_kinesis_tagging_spark.plans.quality_ops import q_dsir_score
-    from arc_kinesis_tagging_spark.streaming.pipeline import (
-        make_dsir_gate,
-        train_dsir_model,
-    )
-    from pyspark.sql import functions as F
 
     d = load_table(spark, "documents", SF)
     model, unseen = train_dsir_model(d, F.col("lang") == "en")
     assert 0 < len(model) <= 256
-    stage = make_dsir_gate(model, unseen, threshold=0.0)
+    stage = make_admission_gate(
+        ROBOTS_RULES, NO_LM, (model, unseen), dsir_threshold=0.0
+    )
     got = {
         r["doc_id"]: r
-        for r in stage(d.select("doc_id", "text")).collect()
+        for r in stage(_corpus(spark)).collect()
         if r["n_grams"] > 0
     }
     want = {r["doc_id"]: r for r in q_dsir_score(spark, SF).collect()}
@@ -229,89 +233,32 @@ def test_dsir_gate_matches_batch_query(spark):
     probe = "qqqzzzvvv"
     b = int(hashlib.md5(f"dsir:{probe}".encode()).hexdigest()[:15], 16) % 256
     holey = {k: v for k, v in model.items() if k != b}
-    stage2 = make_dsir_gate(holey, unseen, threshold=0.0)
+    stage2 = make_admission_gate(
+        ROBOTS_RULES, NO_LM, (holey, unseen), dsir_threshold=0.0
+    )
     odd = spark.createDataFrame(
-        [(999, probe)], "doc_id long, text string"
+        [(999, "site1", "/", probe)],
+        "doc_id long, host string, path string, text string",
     )
     r = stage2(odd).collect()[0]
     assert r["n_grams"] == 1
     assert abs(r["dsir_logratio"] - round(unseen, 3)) <= 0.0011
 
 
-def test_fused_gate_matches_stacked(spark):
-    """make_admission_gate (one projection chain) must be
-    column-identical to stacking the three individual gates — same
-    columns in the same order, same values row-for-row — and its
-    filtered plan must evaluate each HOF fold exactly once (the
-    round-8 stacked form re-ran every gate inside the pushed-down
-    Filter node: 37 split() occurrences in the executed plan; the
-    fused+admission_barrier form carries 3 aggregate folds total)."""
-    from arc_kinesis_tagging_spark.streaming.pipeline import (
-        admission_barrier,
-        make_admission_gate,
-        make_dsir_gate,
-        train_dsir_model,
+def test_admission_gate_edge_rows(spark):
+    """Literal gate rows on adversarial shapes, with models that score
+    nothing: every bigram costs log2(V) = 2 bits and every gram the
+    unseen ratio. Covers empty text, whitespace runs (" " split keeps
+    empties for the LM; the \\s tokenizer drops them for DSIR),
+    single-token text (null bits_per_token -> lm_kept False), an
+    unknown host (default allow), and a negative mean that rounds to
+    zero (-0.0004 -> 0.0, not -0.0, kept at threshold 0.0)."""
+    import math
+
+    gate = make_admission_gate(
+        ROBOTS_RULES, NO_LM, ({}, -0.0004),
+        lm_threshold=6.0, dsir_threshold=0.0,
     )
-
-    d = load_table(spark, "documents", SF)
-    urls = _urls(spark).join(d.select("doc_id", "text"), "doc_id")
-    bmap, nmap, vsize = train_pruned_lm(d, "text", top_v=512, top_u=10**6)
-    model, unseen = train_dsir_model(d, F.col("lang") == "en")
-
-    robots = make_robots_gate(ROBOTS_RULES)
-    lm = make_lm_gate(bmap, nmap, vsize, text_col="text", threshold=6.0)
-    dsir = make_dsir_gate(model, unseen, threshold=0.0, text_col="text")
-    fused = make_admission_gate(
-        ROBOTS_RULES, (bmap, nmap, vsize), (model, unseen),
-        text_col="text", lm_threshold=6.0, dsir_threshold=0.0,
-    )
-
-    stacked = dsir(lm(robots(urls)))
-    fused_df = fused(urls)
-    assert stacked.columns == fused_df.columns
-    assert stacked.subtract(fused_df).count() == 0
-    assert fused_df.subtract(stacked).count() == 0
-
-    pred = F.col("admitted") & F.col("lm_kept") & F.col("dsir_kept")
-    plan = (
-        admission_barrier(fused_df)
-        .filter(pred)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # one robots fold + one LM bits sum + one DSIR score sum — no
-    # re-inlined copies in a pushed-down Filter
-    assert plan.count("aggregate(") == 3, plan.count("aggregate(")
-    assert plan.count("md5") == 1, plan.count("md5")
-
-
-def test_arrow_gate_matches_sql(spark):
-    """engine="arrow" (one vectorized mapInPandas pass) must be
-    column-identical to the expression engine on the real corpus PLUS
-    adversarial text shapes: empty text, whitespace runs (Java split
-    keeps empties on " " but drops them in the \\s+ tokenizer),
-    single-token docs (null bits_per_token -> lm_kept False), unknown
-    hosts (default allow), and negative DSIR means near the 3-dp
-    boundary (half-away-from-zero rounding + -0.0 collapse)."""
-    from arc_kinesis_tagging_spark.streaming.pipeline import (
-        make_admission_gate,
-        train_dsir_model,
-    )
-
-    d = load_table(spark, "documents", SF)
-    bmap, nmap, vsize = train_pruned_lm(d, "text", top_v=512, top_u=10**6)
-    model, unseen = train_dsir_model(d, F.col("lang") == "en")
-    kw = dict(text_col="text", lm_threshold=6.0, dsir_threshold=0.0)
-    sql_gate = make_admission_gate(
-        ROBOTS_RULES, (bmap, nmap, vsize), (model, unseen), **kw
-    )
-    arrow_gate = make_admission_gate(
-        ROBOTS_RULES, (bmap, nmap, vsize), (model, unseen),
-        engine="arrow", **kw
-    )
-
-    corpus = _urls(spark).join(d.select("doc_id", "text"), "doc_id")
     edge = spark.createDataFrame(
         [
             (9001, "site0", "/admin/x", ""),
@@ -322,17 +269,26 @@ def test_arrow_gate_matches_sql(spark):
         ],
         "doc_id long, host string, path string, text string",
     )
-    for df in (corpus, edge):
-        a = sql_gate(df)
-        b = arrow_gate(df)
-        assert a.columns == b.columns
-        assert a.subtract(b).count() == 0
-        assert b.subtract(a).count() == 0
-    # the arrow stage is its own pushdown fence: a downstream filter
-    # must NOT re-evaluate anything below the MapInPandas node
+    cols = [
+        "doc_id", "admitted", "matched_rule", "n_bigrams", "bits_per_token",
+        "lm_kept", "n_grams", "dsir_logratio", "dsir_kept",
+    ]
+    rows = sorted(tuple(r) for r in gate(edge).select(*cols).collect())
+    assert rows == [
+        (9001, False, "/admin/", 0, None, False, 0, None, False),
+        (9002, True, "<default>", 0, None, False, 1, 0.0, True),
+        (9003, True, "/public/", 5, 2.0, True, 5, 0.0, True),
+        (9004, True, "/tmp/cache/", 3, 2.0, True, 0, None, False),
+        (9005, True, "<default>", 6, 2.0, True, 13, 0.0, True),
+    ]
+    assert all(
+        math.copysign(1.0, r[7]) == 1.0 for r in rows if r[7] is not None
+    )  # -0.0 collapsed
+    # the stage is its own pushdown fence: a downstream filter must
+    # NOT re-evaluate anything below the MapInPandas node
     pred = F.col("admitted") & F.col("lm_kept") & F.col("dsir_kept")
     plan = (
-        arrow_gate(corpus)
+        gate(edge)
         .filter(pred)
         ._jdf.queryExecution()
         .executedPlan()
@@ -346,7 +302,7 @@ def test_fused_single_pass_matches_composed(spark):
     """fused_gated_story_pipeline (ONE mapInPandas doing gunzip ->
     json -> publish filter -> projection -> gates) must be
     row-identical to the composed form (story_pipeline + host/path +
-    the Arrow gate stage) on every record class: fluent/gibberish
+    make_admission_gate) on every record class: fluent/gibberish
     headlines, robots-blocked hosts, non-published, wrong operation,
     corrupt gzip (dead letter), bare-string payload (url pointer),
     ANS-type-violating docs, and null/missing fields — in BOTH
@@ -356,10 +312,6 @@ def test_fused_single_pass_matches_composed(spark):
 
     from arc_kinesis_tagging_spark.streaming.pipeline import (
         fused_gated_story_pipeline,
-        make_admission_gate,
-        story_pipeline,
-        train_dsir_model,
-        train_pruned_lm,
     )
 
     fluent = [
@@ -412,8 +364,7 @@ def test_fused_single_pass_matches_composed(spark):
     )
 
     gate = make_admission_gate(rules, *models, host_col="host",
-                               path_col="path", text_col="headline",
-                               engine="arrow", **kw)
+                               path_col="path", text_col="headline", **kw)
     composed = gate(
         story_pipeline(records)
         .withColumn("host", F.split(F.col("_id"), "-").getItem(0))

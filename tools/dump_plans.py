@@ -431,19 +431,12 @@ COMMENTARY = {
 COMMENTARY.update(
     {
         "q_admission_gate": (
-            "The fused production admission stage (Arrow engine): ONE "
+            "The production admission stage: ONE "
             "vectorized mapInPandas evaluates robots longest-match + "
             "frozen pruned-LM + frozen DSIR from broadcast-frozen "
             "models — no shuffle, no window, and the stage is its own "
             "pushdown fence so downstream admitted-filters read "
             "materialized booleans instead of re-inlining gate folds."
-        ),
-        "q_admission_gate_sql": (
-            "The SAME gate through the Catalyst expression engine: one "
-            "fused projection chain where each expensive intermediate "
-            "(robots fold struct, LM bits array, DSIR score array) is "
-            "an attribute evaluated once per row. The parity reference "
-            "for the Arrow form; pure projection, zero shuffle."
         ),
         "q_dedup_phash": (
             "Image near-dup: hashing is one map-only Arrow pass "

@@ -19,9 +19,13 @@ Protocol for a paired A/B against the parent commit:
     done
 
 Each run is a fresh process (a fresh JVM) on each side, so neither side
-inherits the other's JIT, page-cache or Python-worker state. Record the
-per-side mins and cpus, and how many pairs the change lost, in
-CHANGES.md.
+inherits the other's JIT, page-cache or Python-worker state. Both sides
+must time the identical name list in the identical order: a query's
+min depends on what ran before it in the same process (``q_tpch_q6ish``
+read 0.93-1.22 s when timed first and about 0.30 s when ninth in a
+16-query list, on a 4-core host at sf0.1), so numbers from different
+lists or orders are not comparable. Record the per-side mins and cpus,
+and how many pairs the change lost, in CHANGES.md.
 """
 
 from __future__ import annotations
