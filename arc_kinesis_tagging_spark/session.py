@@ -50,6 +50,12 @@ _DEFAULTS = {
     # when this factory creates the first session of the process).
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     "spark.ui.enabled": "false",
+    # Generated-code cache (JVM-wide, static): Spark's default keeps 100
+    # classes, but one pass of bench.py's 74 entries at sf0.1 compiles
+    # 1,329 distinct classes (4 cores), so a repeated query set larger
+    # than the cache recompiled every class on every pass (LRU misses
+    # in order). 2000 holds one pass with headroom.
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 

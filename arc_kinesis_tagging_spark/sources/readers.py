@@ -9,7 +9,6 @@ record-stream sources in streaming/source.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 
 def read_json(spark: SparkSession, path: str, schema: str, multiline: bool = False) -> DataFrame:
@@ -42,19 +41,10 @@ def write_partitioned_parquet(
 
 
 def upsert_by_key_parquet(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    version_col: str,
-    existing: DataFrame | None = None,
-) -> StructType:
+    spark: SparkSession, df: DataFrame, path: str, key_col: str, version_col: str
+) -> None:
     """Batch keyed upsert into parquet: union existing + new, keep the
-    max-version row per key, rewrite. Returns the schema written.
-
-    ``existing`` is the table's current contents when the caller
-    already holds them as a frame; it spares the read here its schema
-    inference job. Without it the table at ``path`` is read, if any.
+    max-version row per key, rewrite.
 
     This is the batch analog of the reference's PUT-full-document sink
     (utility/tag.py:19-29) with last-writer-wins semantics
@@ -69,10 +59,8 @@ def upsert_by_key_parquet(
 
     from arc_kinesis_tagging_spark.sources.maintenance import _fs_exists
 
-    if existing is None and _fs_exists(spark, path):
-        existing = spark.read.parquet(path)
-    if existing is not None:
-        merged = existing.unionByName(df, allowMissingColumns=True)
+    if _fs_exists(spark, path):
+        merged = spark.read.parquet(path).unionByName(df, allowMissingColumns=True)
     else:
         merged = df
     w = Window.partitionBy(key_col).orderBy(F.col(version_col).desc())
@@ -87,9 +75,7 @@ def upsert_by_key_parquet(
     # with an executor) recomputes from the source files mid-overwrite,
     # corrupting the store. localCheckpoint truncates the lineage so
     # recomputation from the overwritten path is impossible.
-    winner = winner.localCheckpoint(eager=True)
-    winner.write.mode("overwrite").parquet(path)
-    return winner.schema
+    winner.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
 
 
 def read_parquet_evolving(

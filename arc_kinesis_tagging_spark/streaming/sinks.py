@@ -85,80 +85,148 @@ def autotag_batch_sink(
 ) -> Callable[[DataFrame, int], None]:
     """Fully-distributed autotag sink: the document store is a keyed
     parquet table, and the whole R12->R15 composition runs as DataFrame
-    ops — lookup is a join, the tag mutation is the Catalyst
-    ``tag_upsert`` expression, writeback is the keyed upsert writer.
-    Nothing iterates on the driver, so this is the shape that scales to
-    a 1000-executor cluster (swap parquet for a MERGE-capable table
-    format in production).
+    ops — lookup and tag decision are one keyed aggregate, the tag
+    mutation is the Catalyst ``tag_upsert`` expression, writeback
+    rewrites the store. Nothing iterates on the driver, so this is the
+    shape that scales to a 1000-executor cluster (swap parquet for a
+    MERGE-capable table format in production).
 
-    Each micro-batch plan runs exactly once. ``batch_df`` is lazy: every
-    action on it re-reads the source and re-runs the decode. So the
-    batch is reduced to its ``(_id, max(seq))`` keys and pinned first;
-    the empty check, the store lookup (one left join with a hit marker)
-    and both outputs then read only pinned blocks and store parquet.
+    Each micro-batch is one keyed aggregate over ``store ∪ batch_df``:
+    per ``_id`` the stored row and the batch's highest ``seq``. That
+    one pass derives the tagged rows, the untouched store rows and the
+    dead letters, and is pinned with one eager ``localCheckpoint``
+    whose ``Observation`` counts the tagged and dead-lettered rows. So
+    ``batch_df``'s plan runs once, and a batch costs at most four
+    Spark jobs: the aggregate's two, then the store rewrite (only if a
+    row was tagged) and the dead-letter append (only if an id was
+    unknown), the two writes running at once.
 
-    Store schema: (_id string, revision string, tags array<struct>).
-    Unknown and null _ids are dead-lettered to
+    A row is tagged iff its batch seq + 1 exceeds the stored seq; the
+    written version is that seq + 1. A tie or a stale batch keeps the
+    stored row, and a replay rewrites nothing, so replays are
+    idempotent.
+
+    Store schema: (_id string, revision string, tags array<struct>,
+    seq). Unknown and null _ids are dead-lettered to
     ``store_path + '.deadletter'`` instead of failing the batch (R16).
+    The returned callable's ``last_counts`` holds the last batch's
+    ``{"batch_id", "tagged", "dead_lettered"}``.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from arc_kinesis_tagging_spark.functions.arrays import make_tag, tag_upsert
-    from arc_kinesis_tagging_spark.sources.readers import upsert_by_key_parquet
 
     t = tag or {"slug": AUTOTAG[0], "text": AUTOTAG[1]}
     tag_col = make_tag(t["slug"], t["text"])
     # The store's schema is inferred from its files once per sink, not
     # on every read: inference is a Spark job. The sink is the store's
-    # only writer, so the schema each upsert writes is the next batch's.
+    # only writer, so the schema each rewrite writes is the next batch's.
     store_schema = None
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal store_schema
-        # The only action on batch_df: the highest seq per _id wins
-        # within the batch. localCheckpoint, NOT cache(): see
-        # upsert_by_key_parquet — cache is not a plan barrier, and an
-        # evicted partition would re-read the source.
-        keys = (
-            batch_df.groupBy("_id")
-            .agg(F.max("seq").alias("seq"))
-            .localCheckpoint(eager=True)
-        )
-        if keys.isEmpty():
-            return
-        # enrichment lookup (R12) as ONE left join against the store;
-        # the batch's seq (version) wins over the store's stored seq.
-        # Pinned before the upsert below overwrites the store files a
-        # lazy plan would re-read. A null _id never matches, so it is
-        # dead-lettered.
         if store_schema is None:
             store_schema = spark.read.parquet(store_path).schema
         store = spark.read.schema(store_schema).parquet(store_path)
-        looked_up = keys.join(
-            store.drop("seq").withColumn("_hit", F.lit(True)), "_id", "left"
+        # Each side is a struct that is null on the other side's rows. A
+        # null batch _id groups apart (_nb), so it never meets a
+        # null-_id store row.
+        both = store.select(
+            "_id", F.lit(False).alias("_nb"), F.struct(*store.columns).alias("_store")
+        ).unionByName(
+            batch_df.select(
+                "_id", F.col("_id").isNull().alias("_nb"), F.struct("seq").alias("_batch")
+            ),
+            allowMissingColumns=True,
+        )
+        # max_by skips a null ordering: order store rows by a struct of
+        # their seq, so a null stored seq still orders and batch rows
+        # never do. max over _batch keeps the highest batch seq.
+        keyed = both.groupBy("_id", "_nb").agg(
+            F.max_by(
+                "_store", F.when(F.col("_store").isNotNull(), F.struct("_store.seq"))
+            ).alias("_store"),
+            F.max("_batch").alias("_batch"),
+        )
+        hit = F.col("_store").isNotNull()
+        in_batch = F.col("_batch").isNotNull()
+        seq, stored_seq = F.col("_batch.seq"), F.col("_store.seq")
+        # tag decision (R13): the written version must strictly exceed
+        # the stored one, so a tie or a stale batch keeps the stored row
+        tagged = in_batch & hit & F.coalesce(seq + 1 > stored_seq, stored_seq.isNull())
+        dead = in_batch & ~hit
+        # idempotent array upsert (R14) on the tagged rows; every other
+        # store row is written back as it was
+        update = {"tags": tag_upsert(F.col("_store.tags"), tag_col), "seq": seq + 1}
+        row = F.struct(*(
+            F.when(tagged, update[c]).otherwise(F.col("_store")[c]).alias(c)
+            if c in update else F.col("_store")[c].alias(c)
+            for c in store.columns
+        ))
+        counts = Observation()
+        # Pinned before the rewrite below overwrites the store files a
+        # lazy plan would re-read. localCheckpoint, NOT cache(): cache
+        # is not a plan barrier, and an evicted partition would re-read
+        # the source and the overwritten store.
+        pinned = keyed.observe(
+            counts,
+            F.count_if(tagged).alias("tagged"),
+            F.count_if(dead).alias("dead_lettered"),
+        ).select(
+            F.when(hit, row).alias("_row"),
+            F.when(
+                dead,
+                F.struct(
+                    "_id", seq.alias("seq"), F.lit("document_not_found").alias("reason")
+                ),
+            ).alias("_dead"),
         ).localCheckpoint(eager=True)
-        hit = F.col("_hit").isNotNull()
-        matched = looked_up.filter(hit).drop("_hit")
-        missing = looked_up.filter(~hit).select("_id", "seq")
-        # tag decision (R13) + idempotent array upsert (R14). The
-        # written version must strictly exceed the stored one (seq+1):
-        # a tagged row tying the seed's version would make the upsert
-        # winner arbitrary. Replays rewrite the same seq+1 with
-        # identical content, so idempotency holds.
-        tagged = matched.withColumn("tags", tag_upsert(F.col("tags"), tag_col)).withColumn(
-            "seq", F.col("seq") + 1
-        )
-        # keyed upsert writeback (R15): last-writer-wins by seq
-        store_schema = upsert_by_key_parquet(
-            spark, tagged, store_path, "_id", "seq", existing=store
-        )
-        # dead letters (R16): unknown documents, never a failed batch
-        if not missing.isEmpty():
-            missing.withColumn("reason", F.lit("document_not_found")).write.mode(
-                "append"
-            ).parquet(store_path + ".deadletter")
+        n = counts.get
+        writes = []
+        if n["tagged"]:
+            # keyed writeback (R15): the whole store, rewritten
+            rows = pinned.where("_row IS NOT NULL").select("_row.*")
+            writes.append(lambda: rows.write.mode("overwrite").parquet(store_path))
+        if n["dead_lettered"]:
+            # dead letters (R16): unknown documents, never a failed batch
+            dead_rows = pinned.where("_dead IS NOT NULL").select("_dead.*")
+            writes.append(
+                lambda: dead_rows.write.mode("append").parquet(store_path + ".deadletter")
+            )
+        _run_at_once(writes)
+        if n["tagged"]:
+            store_schema = rows.schema
+        write_batch.last_counts = {"batch_id": batch_id, **n}
 
+    write_batch.last_counts = None
     return write_batch
+
+
+def _run_at_once(writes: list[Callable[[], None]]) -> None:
+    """Run ``writes`` concurrently: the first on the calling thread, the
+    rest on ``InheritableThread``s, which carry the caller's job group,
+    so a streaming query's ``stop()`` still cancels every write. The
+    first failure is re-raised once all writes have ended."""
+    from pyspark import InheritableThread
+
+    errors: list[BaseException] = []
+
+    def run(write: Callable[[], None]) -> None:
+        try:
+            write()
+        except BaseException as exc:  # re-raised on the calling thread
+            errors.append(exc)
+
+    threads = [InheritableThread(run, args=(w,)) for w in writes[1:]]
+    for th in threads:
+        th.start()
+    for w in writes[:1]:
+        run(w)
+    for th in threads:
+        th.join()
+    if errors:
+        raise errors[0]
 
 
 def autotag_sink(
