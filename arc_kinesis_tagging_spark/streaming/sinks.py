@@ -97,9 +97,9 @@ def autotag_batch_sink(
     dead letters, and is pinned with one eager ``localCheckpoint``
     whose ``Observation`` counts the tagged and dead-lettered rows. So
     ``batch_df``'s plan runs once, and a batch costs at most four
-    Spark jobs: the aggregate's two, then the store rewrite (only if a
-    row was tagged) and the dead-letter append (only if an id was
-    unknown), the two writes running at once.
+    Spark jobs: the aggregate's shuffle and its pin, then the store
+    rewrite (only if a row was tagged) and the dead-letter append (only
+    if an id was unknown), the two writes running at once.
 
     A row is tagged iff its batch seq + 1 exceeds the stored seq; the
     written version is that seq + 1. A tie or a stale batch keeps the
