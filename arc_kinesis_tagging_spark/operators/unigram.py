@@ -12,11 +12,14 @@ Spark shape (the part that matters at 100 TB): the corpus is touched
 EXACTLY ONCE — a word-frequency aggregate into a vocabulary-sized
 table (corpus-independent; ~10M rows for web-scale English). Seeding,
 every EM sweep, and pruning all run on that table: the candidate
-explode is map-side with partial aggregation, the piece table that
-comes back to the driver is bounded by ``seed_size`` rows (explicitly
-bounded collect), and each E-step broadcasts the current piece table
-to an Arrow-batched Viterbi pass. Encoding is map-only with the final
-vocab closure-captured, exactly like bpe_encode.
+explode is map-side with partial aggregation, and the seed table that
+comes back to the driver is bounded by ``seed_size`` multi-char rows
+plus the seen characters (explicitly bounded collect). Each E-step is
+one map-only job: it broadcasts the current piece table to an
+Arrow-batched Viterbi pass whose tasks each emit their summed piece
+counts once, and the driver adds those partials up (bounded by
+word-table partitions x vocabulary rows). Encoding is map-only with
+the final vocab closure-captured, exactly like bpe_encode.
 
 Determinism (the cross-engine discipline this repo applies
 everywhere): piece log-probs are quantized to INTEGER micro-units
@@ -95,32 +98,36 @@ def _word_freqs(df: DataFrame, text_col: str) -> DataFrame:
 
 def _viterbi_counts(
     word_freqs: DataFrame, vocab: dict[str, int], max_len: int
-) -> list:
-    """One distributed hard-E-step: per distinct word, Viterbi-count
-    the pieces of its best segmentation weighted by corpus frequency;
-    shuffle is the piece-keyed partial aggregate; the collect is
-    bounded by the vocabulary size."""
+) -> dict[str, int]:
+    """One distributed hard-E-step as one map-only Spark job: per
+    distinct word, Viterbi-count the pieces of its best segmentation
+    weighted by corpus frequency. Each task sums its counts over all of
+    its Arrow batches into one dict and emits it once; the driver adds
+    the partial counts up. The collect is bounded by (word-table
+    partitions x vocabulary) rows. The counts are exact integer sums,
+    so the result does not depend on the partitioning."""
     spark = word_freqs.sparkSession
     b = spark.sparkContext.broadcast((vocab, max_len))
 
     def estep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v, ml = b.value
+        out: dict[str, int] = {}
         for pdf in batches:
-            out: dict[str, int] = {}
             for w, f in zip(pdf["word"], pdf["freq"]):
                 pieces, _ = _viterbi(w, v, ml)
                 for p in pieces:
                     out[p] = out.get(p, 0) + int(f)
+        if out:
             yield pd.DataFrame(
                 {"piece": list(out), "cnt": list(out.values())}
             )
 
-    counted = (
-        word_freqs.mapInPandas(estep, "piece string, cnt long")
-        .groupBy("piece")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    return counted.collect()  # bounded: <= len(vocab) rows
+    got: dict[str, int] = {}
+    for piece, cnt in word_freqs.mapInPandas(
+        estep, "piece string, cnt long"
+    ).collect():  # bounded: <= partitions x len(vocab) rows
+        got[piece] = got.get(piece, 0) + cnt
+    return got
 
 
 def unigram_train(
@@ -161,14 +168,19 @@ def unigram_train(
                 {"piece": list(out), "cnt": list(out.values())}
             )
 
+    # The piece length is an aggregate output, not a function of the
+    # grouping key: Catalyst pushes a filter on the key below the
+    # aggregate, which would give the two branches below two different
+    # Exchanges (not reused) and run seed_step twice. Filtered on `n`,
+    # both branches share one reused Exchange and seed_step runs once.
     seeds = (
         wf.mapInPandas(seed_step, "piece string, cnt long")
         .groupBy("piece")
-        .agg(F.sum("cnt").alias("cnt"))
+        .agg(F.sum("cnt").alias("cnt"), F.max(F.length("piece")).alias("n"))
     )
-    chars = seeds.filter(F.length("piece") == 1)
+    chars = seeds.filter(F.col("n") == 1)
     multis = (
-        seeds.filter(F.length("piece") > 1)
+        seeds.filter(F.col("n") > 1)
         .orderBy(F.col("cnt").desc(), F.col("piece").asc())
         .limit(seed_size)
     )
@@ -183,10 +195,7 @@ def unigram_train(
     n_multi_start = len(counts) - len(char_set)
     for rnd in range(n_rounds):
         for _ in range(em_per_round):
-            got = {
-                r["piece"]: int(r["cnt"])
-                for r in _viterbi_counts(wf, to_vocab(counts), ml)
-            }
+            got = _viterbi_counts(wf, to_vocab(counts), ml)
             # single chars are never dropped: floor their count at 1
             counts = {
                 p: got.get(p, 1 if p in char_set else 0)
@@ -231,10 +240,11 @@ def unigram_encode(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Viterbi-encode the corpus with a trained vocabulary. Map-only:
-    the vocab is closure-captured bounded metadata, words are memoized
-    per Arrow batch. Emits per-document (n_words, n_pieces,
-    lp_micro_total — an exact integer sum, order-independent by
-    construction — and the first 10 pieces as a sample)."""
+    the vocab is closure-captured bounded metadata, and each task keeps
+    one word memo across all of its Arrow batches. Emits per-document
+    (n_words, n_pieces, lp_micro_total — an exact integer sum,
+    order-independent by construction — and the first 10 pieces as a
+    sample)."""
     spark = df.sparkSession
     b = spark.sparkContext.broadcast((vocab, max_piece_len))
 

@@ -1501,7 +1501,7 @@ def q_unigram_encode(spark, sf_dir):
     """The tokenize-apply half of the unigram loop: train the
     vocabulary (q_unigram_train's path), then Viterbi-encode every
     document (operators/unigram.py:unigram_encode — map-only, vocab
-    closure-captured, per-batch word memoization, zero shuffle) and
+    closure-captured, one word memo per task, zero shuffle) and
     emit per-document piece statistics with an exact integer total
     log-prob. Iterative training upstream -> rows-only; the
     segmentation-optimality and determinism invariants are pinned in

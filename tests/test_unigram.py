@@ -10,6 +10,8 @@ from arc_kinesis_tagging_spark.operators.unigram import (
     _UNK_LP_MICRO,
     _lp_micro,
     _viterbi,
+    _viterbi_counts,
+    _word_freqs,
     unigram_encode,
     unigram_train,
 )
@@ -101,6 +103,54 @@ def test_unigram_train_matches_reference_and_is_layout_invariant(spark):
         c for _, t in CORPUS for w in t.split() for c in w
     }
     assert corpus_chars <= set(ref_vocab)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` in its own job group; return (its Spark job ids, its
+    result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return sc.statusTracker().getJobIdsForGroup(group), out
+
+
+def test_em_sweep_is_one_map_only_job(spark):
+    """One E-step is one Spark job: each task emits its summed piece
+    counts once and the driver adds them up (a piece-keyed groupBy
+    would add a shuffle-map job). The counts are the exact
+    frequency-weighted Viterbi piece counts, whatever the layout."""
+    df = spark.createDataFrame(CORPUS, "doc_id long, text string")
+    vocab = {"a": -100, "at": -200, "the": -300, "ca": -250, "s": -120}
+    want = {}
+    for _, t in CORPUS:
+        for w in t.split():
+            for p in _viterbi(w, vocab, 6)[0]:
+                want[p] = want.get(p, 0) + 1
+    wf = _word_freqs(df.repartition(3), "text").localCheckpoint(eager=True)
+    jobs, got = _jobs_in_group(
+        spark, "unigram-em-sweep", lambda: _viterbi_counts(wf, vocab, 6)
+    )
+    assert len(jobs) == 1, jobs
+    assert got == want
+
+
+def test_unigram_train_job_count(spark):
+    """One train (2 rounds x 2 EM sweeps) runs at most 8 jobs: the
+    word-table pin's Exchange and the pin, the seed aggregate's one
+    (reused) Exchange and its collect, and one job per sweep. With a
+    piece-keyed shuffle per sweep and the seed kernel run once per
+    union branch it ran 13."""
+    df = spark.createDataFrame(CORPUS, "doc_id long, text string")
+    jobs, _ = _jobs_in_group(
+        spark,
+        "unigram-train",
+        lambda: unigram_train(df, vocab_size=8, seed_size=40, n_rounds=2, em_per_round=2),
+    )
+    assert len(jobs) <= 8, jobs
 
 
 def test_viterbi_is_optimal_by_brute_force():

@@ -7,6 +7,8 @@ substring of length >= k + w - 1 share a fingerprint hash.
 
 import hashlib
 
+import pytest
+
 from arc_kinesis_tagging_spark.plans.llmops import q_text_winnowing
 from arc_kinesis_tagging_spark.sources.tables import load_table
 
@@ -213,3 +215,63 @@ def test_winnowing_kernel_matches_expression_form(spark):
     expr = sorted(map(tuple, _winnow_expression_form(df).collect()))
     assert kern == expr
     assert len(kern) == len(docs)
+
+
+def _word_soup_docs(n=48, seed=11):
+    """Docs drawn from a 40-word vocabulary: most 5-grams repeat inside
+    an Arrow batch, at different offsets in different docs, so the gram
+    memo stays on."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(2, 9)))
+        for _ in range(40)
+    ]
+    docs = [" ".join(rng.choice(vocab) for _ in range(rng.randint(350, 600))) for _ in range(n)]
+    return docs + ["ab", "abcdefg", ""]
+
+
+def _high_entropy_docs(n=48, seed=12):
+    """Seeded 3,000-char docs over 69 symbols, non-ASCII included:
+    almost no 5-gram repeats (a few chance collisions in 69**5), so
+    every batch that reaches the memo's 8,192-gram check switches the
+    memo off mid-document."""
+    import random
+
+    rng = random.Random(seed)
+    sym = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789éüßñçøå"
+    docs = ["".join(rng.choice(sym) for _ in range(3000)) for _ in range(n)]
+    grams = [t[i : i + K] for t in docs for i in range(len(t) - K + 1)]
+    assert len(set(grams)) > 0.999 * len(grams)
+    return docs
+
+
+@pytest.mark.parametrize("make_docs", [_word_soup_docs, _high_entropy_docs])
+def test_winnowing_gram_memo_paths_match_reference(spark, tmp_path, make_docs):
+    """The kernel hashes each distinct gram of an Arrow batch once
+    (memo on) or, when fewer than a quarter of a batch's first 8,192
+    grams repeat, hashes the rest of the batch directly (memo off).
+    Both paths select the reference's exact (position, hash) set. Four
+    docs per Arrow batch, so the memo restarts at every batch boundary
+    and every full batch of either input reaches the check."""
+    docs = list(enumerate(make_docs()))
+    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        rows = {r["doc_id"]: r for r in q_text_winnowing(spark, str(tmp_path)).collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert len(rows) == len(docs)
+    for did, text in docs:
+        sel = _winnow(text)
+        want_xor = 0
+        for _p, h in sel:
+            want_xor ^= h
+        r = rows[did]
+        assert r["n_grams"] == max(len(text) - K + 1, 0), did
+        assert (r["n_fps"], r["fp_xor"]) == (len(sel), want_xor), did
