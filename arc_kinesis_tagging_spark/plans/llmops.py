@@ -2854,22 +2854,22 @@ def q_text_winnowing(spark, sf_dir):
     selectivity knob plain rolling-hash fingerprints lack.
 
     One map-only ``mapInPandas`` kernel per batch of documents:
-    Python hashlib md5 for the gram hashes and a vectorized numpy
-    sliding rightmost-argmin for the window minima — linear in text
-    length, no explode, no shuffle before the row emit. (The former
-    nested-HOF expression form evaluated both steps interpreted,
-    about 3x slower.) Each Arrow batch memoizes gram -> hash, so md5
-    runs once per distinct gram of the batch: 99.9% of the bench
-    word-soup corpus's 5-grams repeat within a 1,250-doc batch, and
-    89% of natural English text's. The memo holds at most 2**16 grams
-    (~6 MB). After a batch's first 8,192 grams it stays on only if at
-    least a quarter of them repeated (81% do in the bench corpus,
-    51-65% in natural text, 0% in high-entropy text); otherwise the
-    rest of the batch hashes directly. Hashes use the portable
-    md5-prefix convention (functions/text.py:stable_hash64), so the
-    DuckDB oracle replicates selection bit for bit via a rank-over-range
-    formulation; the per-document summary XORs the selected hashes
-    (order-independent) and counts them. Docs shorter than 8 chars have no window and
+    Python md5 for the gram hashes and a vectorized numpy sliding
+    rightmost-argmin for the window minima — linear in text length,
+    no explode, no shuffle before the row emit. (The former nested-HOF
+    expression form evaluated both steps interpreted, about 3x
+    slower.) Each Arrow batch memoizes gram -> hash, so md5 runs once
+    per distinct gram of the batch: 99.9% of the bench word-soup
+    corpus's 5-grams repeat within a 1,250-doc batch, and 89% of
+    natural English text's. The memo holds at most 2**16 grams
+    (~6 MB). md5 is CPython's built-in one, which skips OpenSSL's
+    per-call context setup, so on text where no gram repeats the
+    memoized loop is still faster than hashing every gram with
+    hashlib's md5. Hashes use the portable md5-prefix convention
+    (functions/text.py:stable_hash64), so the DuckDB oracle replicates
+    selection bit for bit via a rank-over-range formulation; the
+    per-document summary XORs the selected hashes (order-independent)
+    and counts them. Docs shorter than 8 chars have no window and
     report (0, 0)."""
     k, w = 5, 4
     d = _t(spark, sf_dir, "documents")
@@ -2888,62 +2888,43 @@ def q_text_winnowing(spark, sf_dir):
     # the output only through pair-distinctness, which the 0-based
     # numpy indexing preserves.
     #
-    # Gram memo constants (see the docstring), neither an option:
-    # - memo_cap (~6 MB of keys and values): a batch of long web
-    #   documents cannot grow the memo without bound. Past the cap a
-    #   new gram is hashed but not stored.
-    # - gate: on text whose grams do not repeat, a probe and an insert
-    #   per gram cost ~1.4x the bare md5. The repeat share of a batch's
-    #   first 8,192 grams is a property of the input that the kernel
-    #   observes; below a quarter, the rest of the batch skips the memo.
-    memo_cap, gate = 1 << 16, 8192
+    # The memo cap (see the docstring) is a constant, not an option:
+    # ~6 MB of keys and values, so a batch of long web documents cannot
+    # grow the memo without bound. Past the cap a new gram is hashed
+    # but not stored.
+    memo_cap = 1 << 16
 
     def _winnow(it):
-        from hashlib import md5 as _md5
+        try:
+            # CPython's built-in md5: the same digest as hashlib's
+            # OpenSSL md5, ~1.5x faster on a 5-char gram
+            from _md5 import md5 as _md5
+        except ImportError:  # interpreter built without it
+            from hashlib import md5 as _md5
 
         import numpy as np
         import pandas as pd
 
         win = np.lib.stride_tricks.sliding_window_view
 
-        def hashes(text, lo, hi, memo):
-            if memo is None:
-                return [
-                    int(_md5(text[i : i + k].encode()).hexdigest()[:15], 16)
-                    for i in range(lo, hi)
-                ]
-            out = []
-            get = memo.get
-            for i in range(lo, hi):
-                g = text[i : i + k]
-                hv = get(g)
-                if hv is None:
-                    hv = int(_md5(g.encode()).hexdigest()[:15], 16)
-                    if len(memo) < memo_cap:
-                        memo[g] = hv
-                out.append(hv)
-            return out
-
         for pdf in it:
             memo = {}
-            to_gate = gate  # grams left before the repeat-share check
+            get = memo.get
             ids, ngs, nfs, xrs = [], [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 ng = max(len(text) - (k - 1), 0) if text is not None else 0
                 n_fps = 0
                 xr = 0
                 if ng >= w:
-                    cut = 0
                     hl = []
-                    if to_gate > 0:
-                        cut = min(ng, to_gate)
-                        hl = hashes(text, 0, cut, memo)
-                        to_gate -= cut
-                        # memo_cap > gate, so len(memo) is the number
-                        # of distinct grams among the first `gate`
-                        if to_gate == 0 and gate - len(memo) < gate // 4:
-                            memo = None
-                    hl += hashes(text, cut, ng, memo)
+                    for i in range(ng):
+                        g = text[i : i + k]
+                        hv = get(g)
+                        if hv is None:
+                            hv = int(_md5(g.encode()).hexdigest()[:15], 16)
+                            if len(memo) < memo_cap:
+                                memo[g] = hv
+                        hl.append(hv)
                     hs = np.array(hl, dtype=np.int64)
                     sw = win(hs, w)
                     nw = ng - (w - 1)

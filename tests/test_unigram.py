@@ -121,8 +121,10 @@ def _jobs_in_group(spark, group, fn):
 def test_em_sweep_is_one_map_only_job(spark):
     """One E-step is one Spark job: each task emits its summed piece
     counts once and the driver adds them up (a piece-keyed groupBy
-    would add a shuffle-map job). The counts are the exact
-    frequency-weighted Viterbi piece counts, whatever the layout."""
+    would add a shuffle-map job). The word table has 3 partitions and
+    some pieces come from more than one of them, so the driver's sum
+    of partial counts is exercised; the result is the exact
+    frequency-weighted Viterbi piece counts."""
     df = spark.createDataFrame(CORPUS, "doc_id long, text string")
     vocab = {"a": -100, "at": -200, "the": -300, "ca": -250, "s": -120}
     want = {}
@@ -130,7 +132,15 @@ def test_em_sweep_is_one_map_only_job(spark):
         for w in t.split():
             for p in _viterbi(w, vocab, 6)[0]:
                 want[p] = want.get(p, 0) + 1
-    wf = _word_freqs(df.repartition(3), "text").localCheckpoint(eager=True)
+    wf = _word_freqs(df, "text").repartition(3).localCheckpoint(eager=True)
+    assert wf.rdd.getNumPartitions() == 3
+    part_pieces = [
+        {p for r in part for p in _viterbi(r["word"], vocab, 6)[0]}
+        for part in wf.rdd.glom().collect()
+    ]
+    assert any(
+        len([s for s in part_pieces if p in s]) > 1 for p in want
+    ), part_pieces
     jobs, got = _jobs_in_group(
         spark, "unigram-em-sweep", lambda: _viterbi_counts(wf, vocab, 6)
     )

@@ -6,8 +6,9 @@ substring of length >= k + w - 1 share a fingerprint hash.
 """
 
 import hashlib
-
-import pytest
+import os
+import random
+import tempfile
 
 from arc_kinesis_tagging_spark.plans.llmops import q_text_winnowing
 from arc_kinesis_tagging_spark.sources.tables import load_table
@@ -68,23 +69,63 @@ def test_winnowing_shared_substring_guarantee(spark):
     assert sels[0] & sels[1], "shared 12-char substring must intersect"
 
     # and the Spark side reproduces those fingerprints' XOR/count
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    from pyspark.sql import functions as F
+    _rows_vs_reference(spark, docs)
 
-    # reuse the registry query's expression path via a temp sf_dir-less
-    # call: clone the plan by registering the frame as 'documents'
-    import tempfile, os
 
+def _rows_vs_reference(spark, docs, max_batch_rows=None):
+    """Run q_text_winnowing over ``docs`` [(doc_id, text)] and assert
+    every row equals the pure-Python reference; returns the rows by
+    doc_id. ``max_batch_rows`` caps the Arrow batch the kernel sees."""
     d = tempfile.mkdtemp()
-    df.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-    rows = {r["doc_id"]: r for r in q_text_winnowing(spark, d).collect()}
+    spark.createDataFrame(docs, "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(os.path.join(d, "documents.parquet"))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if max_batch_rows is not None:
+        spark.conf.set(key, str(max_batch_rows))
+    try:
+        rows = {r["doc_id"]: r for r in q_text_winnowing(spark, d).collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert len(rows) == len(docs)
     for did, t in docs:
         sel = _winnow(t)
-        x = 0
+        want_xor = 0
         for _p, h in sel:
-            x ^= h
-        assert rows[did]["n_fps"] == len(sel)
-        assert rows[did]["fp_xor"] == x
+            want_xor ^= h
+        r = rows[did]
+        assert r["n_grams"] == max(len(t) - K + 1, 0), did
+        assert (r["n_fps"], r["fp_xor"]) == (len(sel), want_xor), did
+    return rows
+
+
+def _word_soup_docs(n=48, seed=11):
+    """Docs drawn from a 40-word vocabulary: most 5-grams repeat inside
+    an Arrow batch, at different offsets in different docs, so most
+    grams are memo hits."""
+    rng = random.Random(seed)
+    vocab = [
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(2, 9)))
+        for _ in range(40)
+    ]
+    docs = [" ".join(rng.choice(vocab) for _ in range(rng.randint(350, 600))) for _ in range(n)]
+    return docs + ["ab", "abcdefg", ""]
+
+
+def _high_entropy_docs(n=16, seed=12):
+    """Seeded docs over 69 symbols, non-ASCII included: almost no
+    5-gram repeats (a few chance collisions in 69**5), so every gram
+    is a memo miss. The first doc alone has more grams than the
+    memo's 2**16 cap, so whatever the partitioning, one batch hashes
+    its last grams without storing them."""
+    rng = random.Random(seed)
+    sym = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789éüßñçøå"
+    lens = [70_000] + [3_000] * (n - 1)
+    docs = ["".join(rng.choice(sym) for _ in range(L)) for L in lens]
+    grams = [t[i : i + K] for t in docs for i in range(len(t) - K + 1)]
+    assert len(set(grams)) > 0.999 * len(grams)
+    return docs
 
 
 def test_winnowing_short_and_tie_edge(spark):
@@ -93,7 +134,8 @@ def test_winnowing_short_and_tie_edge(spark):
     rightmost-tie rule — every window selects its LAST gram, so the
     fingerprint count equals the window count. Every edge shape
     (empty, sub-k, exactly k, exactly k + w - 1, multibyte, periodic
-    ties) also matches the pure-Python reference."""
+    ties) also matches the pure-Python reference, and so do word-soup
+    and high-entropy docs through the kernel's gram memo."""
     docs = [
         (0, "short"),              # exactly k chars: 1 gram, no window
         (1, "aaaaaaaaaaaa"),       # all-tie hashes: rightmost rule
@@ -104,13 +146,7 @@ def test_winnowing_short_and_tie_edge(spark):
         (6, "ab ab ab ab ab ab"),  # periodic ties
         (7, "the quick brown fox jumps over the lazy dog"),
     ]
-    import tempfile, os
-
-    d = tempfile.mkdtemp()
-    spark.createDataFrame(docs, "doc_id long, text string").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "documents.parquet"))
-    rows = {r["doc_id"]: r for r in q_text_winnowing(spark, d).collect()}
+    rows = _rows_vs_reference(spark, docs)
 
     assert (rows[0]["n_fps"], rows[0]["fp_xor"]) == (0, 0)  # 1 gram, no window
     assert (rows[2]["n_grams"], rows[2]["n_fps"], rows[2]["fp_xor"]) == (0, 0, 0)
@@ -124,15 +160,14 @@ def test_winnowing_short_and_tie_edge(spark):
     assert rows[1]["fp_xor"] == _h("aaaaa")
 
     assert rows[4]["n_fps"] == 1  # one window, one fingerprint
-    assert len(rows) == len(docs)
-    for did, t in docs:
-        sel = _winnow(t)
-        want_xor = 0
-        for _p, h in sel:
-            want_xor ^= h
-        r = rows[did]
-        assert r["n_grams"] == max(len(t) - K + 1, 0), did
-        assert (r["n_fps"], r["fp_xor"]) == (len(sel), want_xor), did
+
+    # The kernel memoizes gram -> hash per Arrow batch (at most 2**16
+    # grams). Four docs per batch, so the memo restarts at every batch
+    # boundary: word soup shares grams across docs at different
+    # offsets (memo hits), high-entropy text repeats none and one of
+    # its batches passes the cap.
+    for make_docs in (_word_soup_docs, _high_entropy_docs):
+        _rows_vs_reference(spark, list(enumerate(make_docs())), max_batch_rows=4)
 
 
 def _winnow_expression_form(docs_df):
@@ -215,63 +250,3 @@ def test_winnowing_kernel_matches_expression_form(spark):
     expr = sorted(map(tuple, _winnow_expression_form(df).collect()))
     assert kern == expr
     assert len(kern) == len(docs)
-
-
-def _word_soup_docs(n=48, seed=11):
-    """Docs drawn from a 40-word vocabulary: most 5-grams repeat inside
-    an Arrow batch, at different offsets in different docs, so the gram
-    memo stays on."""
-    import random
-
-    rng = random.Random(seed)
-    vocab = [
-        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(2, 9)))
-        for _ in range(40)
-    ]
-    docs = [" ".join(rng.choice(vocab) for _ in range(rng.randint(350, 600))) for _ in range(n)]
-    return docs + ["ab", "abcdefg", ""]
-
-
-def _high_entropy_docs(n=48, seed=12):
-    """Seeded 3,000-char docs over 69 symbols, non-ASCII included:
-    almost no 5-gram repeats (a few chance collisions in 69**5), so
-    every batch that reaches the memo's 8,192-gram check switches the
-    memo off mid-document."""
-    import random
-
-    rng = random.Random(seed)
-    sym = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789éüßñçøå"
-    docs = ["".join(rng.choice(sym) for _ in range(3000)) for _ in range(n)]
-    grams = [t[i : i + K] for t in docs for i in range(len(t) - K + 1)]
-    assert len(set(grams)) > 0.999 * len(grams)
-    return docs
-
-
-@pytest.mark.parametrize("make_docs", [_word_soup_docs, _high_entropy_docs])
-def test_winnowing_gram_memo_paths_match_reference(spark, tmp_path, make_docs):
-    """The kernel hashes each distinct gram of an Arrow batch once
-    (memo on) or, when fewer than a quarter of a batch's first 8,192
-    grams repeat, hashes the rest of the batch directly (memo off).
-    Both paths select the reference's exact (position, hash) set. Four
-    docs per Arrow batch, so the memo restarts at every batch boundary
-    and every full batch of either input reaches the check."""
-    docs = list(enumerate(make_docs()))
-    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "4")
-    try:
-        rows = {r["doc_id"]: r for r in q_text_winnowing(spark, str(tmp_path)).collect()}
-    finally:
-        spark.conf.set(key, old)
-    assert len(rows) == len(docs)
-    for did, text in docs:
-        sel = _winnow(text)
-        want_xor = 0
-        for _p, h in sel:
-            want_xor ^= h
-        r = rows[did]
-        assert r["n_grams"] == max(len(text) - K + 1, 0), did
-        assert (r["n_fps"], r["fp_xor"]) == (len(sel), want_xor), did
