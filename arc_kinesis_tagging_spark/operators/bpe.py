@@ -36,6 +36,12 @@ from arc_kinesis_tagging_spark.functions.text import tokens
 
 END = "</w>"
 
+# Bound on ``bpe_encode``'s per-task word memo: ~64k short words and
+# their symbol lists are a few MB. Past it a new word is encoded but
+# not stored, so a task over a heavy-tailed vocabulary (web text, typo
+# soup) keeps a fixed memo instead of one entry per distinct word.
+_MEMO_CAP = 1 << 16
+
 
 def _word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     """(syms array<string>, freq long): distinct words as char symbol
@@ -127,8 +133,9 @@ def bpe_encode(
     so encoding any training-corpus word reproduces the final training
     vocabulary's symbol sequence — the self-consistency invariant the
     tests pin). Map-only: the merge list is closure-captured (it is
-    rank-bounded metadata), words are memoized per Arrow batch, and no
-    shuffle happens at any scale. Emits per-document subword stats."""
+    rank-bounded metadata), each task memoizes up to ``_MEMO_CAP``
+    words across all of its Arrow batches, and no shuffle happens at
+    any scale. Emits per-document subword stats."""
     pairs = [(left, right) for left, right, *_ in merges]
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -151,7 +158,9 @@ def bpe_encode(
                             out.append(syms[i])
                             i += 1
                     syms = out
-                cache[w] = got = syms
+                got = syms
+                if len(cache) < _MEMO_CAP:
+                    cache[w] = got
             return got
 
         for pdf in batches:

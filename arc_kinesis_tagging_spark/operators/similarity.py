@@ -138,35 +138,55 @@ def _assign_cells(
     id_col: str,
     vec_col: str,
     rank_limit: int,
-    keep_sim: bool = False,
 ) -> DataFrame:
     """Assign each corpus vector to its ``rank_limit`` nearest centroids
     (1 for indexing, nprobe for query routing).
 
     Centroids are broadcast-size by construction, so they are collected
     into one numpy matrix and the whole assignment is a single NARROW
-    ``mapInPandas`` pass — one matmul per Arrow batch, no shuffle, no
-    window, no join-back (a previous windowed-rank formulation spent
-    more time in its two extra shuffle stages than in all the math).
-    Ties in similarity break toward the lowest cell_id (stable argsort
-    over ascending cell ids). ``keep_sim`` appends the vector-to-chosen-
-    centroid cosine as ``__csim`` (the threshold join derives per-cell
-    angular radii from it for free)."""
+    ``mapInPandas`` pass (see ``_assign_to_centroids``)."""
+    crows = sorted(
+        centroids.select("cell_id", "__centroid").collect(), key=lambda r: r["cell_id"]
+    )
+    return _assign_to_centroids(
+        corpus,
+        [r["cell_id"] for r in crows],
+        [r["__centroid"] for r in crows],
+        id_col,
+        vec_col,
+        rank_limit,
+    )
+
+
+def _assign_to_centroids(
+    corpus: DataFrame,
+    cell_ids: list,
+    centroid_vecs: list,
+    id_col: str,
+    vec_col: str,
+    rank_limit: int,
+    keep_sim: bool = False,
+) -> DataFrame:
+    """Assign each corpus vector to its ``rank_limit`` nearest of the
+    given driver-side centroids: one matmul per Arrow batch, no
+    shuffle, no window, no join-back (a previous windowed-rank
+    formulation spent more time in its two extra shuffle stages than
+    in all the math). Ties in similarity break toward the lowest
+    cell_id (stable argsort over ascending cell ids). ``keep_sim``
+    appends the vector-to-chosen-centroid cosine as ``__csim`` (the
+    threshold join derives per-cell angular radii from it)."""
     import numpy as np
     import pandas as pd
 
     spark = corpus.sparkSession
-    crows = sorted(
-        centroids.select("cell_id", "__centroid").collect(), key=lambda r: r["cell_id"]
-    )
-    cids = np.array([r["cell_id"] for r in crows])
-    C = np.array([r["__centroid"] for r in crows], dtype=np.float64)
+    cids = np.array(cell_ids)
+    C = np.array(centroid_vecs, dtype=np.float64)
     Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
     bc = spark.sparkContext.broadcast((cids, Cn))
 
     id_type = dict(corpus.dtypes)[id_col]
     vec_type = corpus.schema[vec_col].dataType.simpleString()
-    k = min(rank_limit, len(crows))
+    k = min(rank_limit, len(cids))
     schema = f"{id_col} {id_type}, cell_id int, {vec_col} {vec_type}" + (
         ", __csim double" if keep_sim else ""
     )
@@ -196,13 +216,30 @@ def _assign_cells(
     return corpus.select(id_col, vec_col).mapInPandas(assign, schema)
 
 
+def _exact_cosines(X, ia, ib):
+    """``functions/vectors.cosine_similarity``'s value, bit for bit, for
+    the row pairs ``(X[ia], X[ib])`` of a float64 matrix: the HOF sums
+    the double products left to right from 0.0 (so does this, one
+    vectorized add per dimension — numpy's own sums are pairwise and
+    would round differently), takes each norm the same way, and divides
+    by ``max(sqrt(na) * sqrt(nb), 1e-12)``. O(len(ia)) memory."""
+    import numpy as np
+
+    dot = np.zeros(len(ia))
+    sq = np.zeros(len(X))
+    for col in X.T.copy():  # contiguous rows: one per dimension
+        dot += col[ia] * col[ib]
+        sq += col * col
+    norm = np.sqrt(sq)
+    return dot / np.maximum(norm[ia] * norm[ib], 1e-12)
+
+
 def cosine_threshold_pairs(
     df: DataFrame,
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     nlist: int = 16,
-    exact_rescore: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
     """EXACT cosine-threshold self-join (all pairs with
@@ -210,177 +247,166 @@ def cosine_threshold_pairs(
 
     Strategy — triangle-inequality pruning over IVF cells:
 
-    1. assign every vector to its nearest of ``nlist`` centroids;
-    2. compute each cell's angular radius ``r_c`` = max angle between a
-       member and its centroid (free: the assignment pass already
-       scored it);
-    3. keep only cell pairs whose centroid angle is <=
+    1. collect the ``nlist`` lowest-id vectors as centroids (1 job);
+    2. assign every vector to its nearest centroid in one narrow pass,
+       pinned (1 job);
+    3. each task reports its smallest member-to-centroid cosine per
+       cell (1 job, at most tasks x nlist rows); the driver turns them
+       into each cell's angular radius ``r_c`` = max angle between a
+       member and its centroid;
+    4. on the driver, keep the cell pairs whose centroid angle is <=
        ``theta_max + r_a + r_b``. For any qualifying vector pair,
        ``angle(c_a, c_b) <= angle(a, b) + r_a + r_b`` by the triangle
        inequality on the sphere, so no qualifying pair is ever pruned —
        the result is exactly the brute-force set, which is why the
        all-pairs SQL form can stay as this operator's oracle;
-    4. join vectors only through surviving cell pairs and verify with
-       the exact cosine.
+    5. replicate each vector once per candidate cell of its own cell
+       (on the JVM: ``explode`` over a literal cell -> candidate-cells
+       map), shuffle once on the candidate cell, and score each cell's
+       group in one Python kernel (the exchange's map stage and the
+       result stage are the last 2 jobs).
 
-    At 100 TB: nlist scales to thousands (cells stay a broadcast-size
-    table — nlist^2 centroid comparisons are metadata-cheap), the big
-    join shuffles on cell_id instead of exploding N^2, and pruning
+    The kernel (``block_score``) filters with a slabbed GEMM over
+    normalized vectors, whose 1e-6 slack is orders of magnitude above
+    its disagreement with the exact value (<1e-12), so no qualifying
+    pair is lost; for the GEMM's hits only it computes
+    ``functions/vectors.cosine_similarity``'s value bit for bit and
+    keeps ``cos_sim >= threshold``. SQL oracles round and compare that
+    value, so there is no join-back and no HOF re-score.
+
+    At 100 TB: nlist scales to thousands (cells stay driver-side
+    metadata — nlist^2 centroid comparisons are one small matmul), the
+    big shuffle is keyed by cell instead of exploding N^2, and pruning
     power grows with centroid quality (swap the deterministic seed
-    centroids for a k-means fit offline). Worst case (useless
-    centroids) degrades to the cross join's cost but never to wrong
-    answers.
+    centroids for a k-means fit offline). One group holds one cell's
+    members plus the vectors replicated to it from its candidate
+    cells. Worst case (useless centroids) degrades to the cross join's
+    cost but never to wrong answers. ``stats`` receives ``nlist`` and
+    the surviving (ordered) cell-pair count, at no extra job.
 
     Zero-norm vectors score cos 0 against everything (see
     ``cosine_similarity``), so for thresholds > 0 they can't qualify
     and their non-metric "angle" can't break the pruning bound.
-
-    ``exact_rescore=True`` re-scores the surviving pairs with the
-    Catalyst HOF cosine, whose bit-exact value is what SQL oracles
-    compare against — keep it for oracle-checked queries. Pipelines
-    that only consume the PAIR SET (dedup clustering) pass False and
-    take the kernel's cosine directly: at 80k vectors / 1.5M survivors
-    the interpreted re-score plus its join-back is most of the
-    operator's cost, for values that differ below 1e-12.
     """
     import math
+
+    import numpy as np
+    import pandas as pd
 
     if not (-1.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (-1, 1], got {threshold}")
     # null embeddings would crash the numpy kernels (object arrays);
     # they can't qualify for any positive threshold, so drop up front
     df = df.filter(F.col(vec_col).isNotNull())
+    id_type = dict(df.dtypes)[id_col]
+    schema = f"id_a {id_type}, id_b {id_type}, cos_sim double"
     # slack absorbs float-ulp disagreement between the numpy assignment
-    # scores and the Catalyst-HOF verification cosine
+    # scores and the exact verification cosine
     theta_max = math.acos(max(-1.0, threshold - 1e-9)) + 1e-6
 
-    centroids = (
-        df.orderBy(F.col(id_col).asc())
-        .limit(nlist)
-        .select(
-            # unpartitioned window over a .limit(nlist) input: nlist<=16
-            # rows by construction, a constant — never corpus-sized
-            # (see tests/test_plan_shapes.py::test_global_window_allowlist)
-            F.row_number().over(Window.orderBy(F.col(id_col).asc())).alias("cell_id"),
-            F.col(vec_col).alias("__centroid"),
-        )
-    )
-    assigned = _assign_cells(
-        df, F.broadcast(centroids), id_col, vec_col, rank_limit=1, keep_sim=True
+    cent = [
+        r[0] for r in df.orderBy(F.col(id_col).asc()).limit(nlist).select(vec_col).collect()
+    ]
+    if stats is not None:
+        stats["nlist"] = nlist
+        stats["n_cell_pairs"] = 0
+    if not cent:
+        return df.sparkSession.createDataFrame([], schema)
+    cell_ids = list(range(1, len(cent) + 1))
+    assigned = _assign_to_centroids(
+        df, cell_ids, cent, id_col, vec_col, rank_limit=1, keep_sim=True
     ).localCheckpoint(eager=True)
-    # ^ reused 3x below; without the pin each branch re-scores.
-    # localCheckpoint instead of persist(): builder-returned plan has
-    # no unpersist point, and ContextCleaner reclaims checkpoint
+    # ^ read by the radii job and the scoring plan; without the pin each
+    # re-scores. localCheckpoint instead of persist(): the returned plan
+    # has no unpersist point, and ContextCleaner reclaims checkpoint
     # blocks on GC where persist() would leak for the session.
 
-    clamp = lambda c: F.least(F.greatest(c, F.lit(-1.0)), F.lit(1.0))
-    radii = assigned.groupBy("cell_id").agg(
-        F.max(F.acos(clamp(F.col("__csim")))).alias("__r")
-    )
-    cells = centroids.join(radii, "cell_id")
-    ca = cells.select(
-        F.col("cell_id").alias("cell_a"), F.col("__centroid").alias("__ca"),
-        F.col("__r").alias("__ra"),
-    )
-    cb = cells.select(
-        F.col("cell_id").alias("cell_b"), F.col("__centroid").alias("__cb"),
-        F.col("__r").alias("__rb"),
-    )
-    cand_cells = (
-        ca.crossJoin(cb)
-        .filter(
-            F.acos(clamp(cosine_similarity(F.col("__ca"), F.col("__cb"))))
-            <= F.lit(theta_max) + F.col("__ra") + F.col("__rb")
-        )
-        .select("cell_a", "cell_b")
-    )
-    if stats is not None:
-        # metadata-size audit hook (tests assert the surviving cell-pair
-        # set stays << nlist^2 at realistic nlist); one cheap extra job
-        # over an nlist^2-bounded frame, only when a dict is passed
-        stats["nlist"] = nlist
-        stats["n_cell_pairs"] = cand_cells.count()
+    def min_csim(batches):
+        lows = [pdf.groupby("cell_id")["__csim"].min() for pdf in batches if len(pdf)]
+        if lows:
+            low = pd.concat(lows).groupby(level=0).min()
+            yield pd.DataFrame({"cell_id": low.index, "__csim": low.to_numpy()})
 
-    a = assigned.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("__cvec"),
-        F.col("cell_id").alias("cell_a"),
+    # bounded: tasks x nlist rows; pandas' min skips the NaN cosines of
+    # NaN vectors, which can never pass the kernel's filter
+    low = (
+        assigned.select("cell_id", "__csim")
+        .mapInPandas(min_csim, "cell_id int, __csim double")
+        .toPandas()
+        .groupby("cell_id")["__csim"]
+        .min()
     )
-    b = assigned.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("__qvec"),
-        F.col("cell_id").alias("cell_b"),
+    cells = [int(c) for c in low.index]  # empty cells have no members
+    radii = np.arccos(np.clip(low.to_numpy(), -1.0, 1.0))
+    C = np.array([cent[c - 1] for c in cells], dtype=np.float64)
+    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    angle = np.arccos(np.clip(Cn @ Cn.T, -1.0, 1.0))
+    keep = angle <= theta_max + radii[:, None] + radii[None, :]
+    # a cell's own members always meet in its group, whatever its
+    # radius (NaN for a cell holding only NaN vectors)
+    np.fill_diagonal(keep, True)
+    if stats is not None:
+        stats["n_cell_pairs"] = int(keep.sum())
+    ids = np.array(cells, dtype=np.int32)
+    cand = F.create_map(
+        *[x for i, c in enumerate(cells) for x in (F.lit(c), F.lit(ids[keep[i]]))]
     )
+
     # Blocked-GEMM verification: materializing one row PER PAIR (each
     # carrying two full vectors) makes data volume scale with pair
     # count — at 2k vectors that is already 4 GB through Arrow. Instead
-    # the a-side is replicated once per CANDIDATE CELL (not per pair)
-    # and cogrouped with the cell's members; each group scores as one
-    # numpy matmul, so transfer scales with rows x avg-candidate-cells.
-    # The matmul filter keeps a 1e-6 slack — orders of magnitude above
-    # kernel-vs-HOF float disagreement (<1e-12), so no qualifying pair
-    # can be lost — and only the tiny surviving set is re-scored with
-    # the Catalyst HOF, whose bit-exact value is what callers round and
-    # compare against SQL oracles. At 100 TB, oversized cells sub-chunk
-    # by hashing ids into the group key (bounds per-group memory) —
-    # with each group independent, the shuffle key count grows and the
-    # GEMMs stay cache-sized.
-    import numpy as np
-    import pandas as pd
-
-    id_type = dict(df.dtypes)[id_col]
-    a_rep = a.join(F.broadcast(cand_cells), "cell_a").select("cell_b", "id_a", "__cvec")
+    # each vector is replicated once per CANDIDATE CELL (not per pair)
+    # and tagged with its own cell; the group of cell c holds c's
+    # members (own cell c: the b side) and every vector whose cell has
+    # c as a candidate (the a side, c's members included), so transfer
+    # scales with rows x avg-candidate-cells and one Exchange serves
+    # both sides. At 100 TB, oversized cells sub-chunk by hashing ids
+    # into the group key (bounds per-group memory) — with each group
+    # independent, the shuffle key count grows and the GEMMs stay
+    # cache-sized.
     slack = threshold - 1e-6
 
-    def block_score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left) or not len(right):
-            return pd.DataFrame({"id_a": [], "id_b": []})
-        V = np.array(left["__cvec"].tolist(), dtype=np.float64)
-        W = np.array(right["__qvec"].tolist(), dtype=np.float64)
+    def block_score(pdf: pd.DataFrame) -> pd.DataFrame:
+        own = np.flatnonzero((pdf["cell_id"] == pdf["__key"]).to_numpy())
+        V = np.array(pdf["__vec"].tolist(), dtype=np.float64)
+        ids_a = pdf["__id"].to_numpy()
+        ids_b = ids_a[own]
         Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-        Wn = W / np.maximum(np.linalg.norm(W, axis=1, keepdims=True), 1e-12)
-        ids_a = left["id_a"].to_numpy()
-        ids_b = right["id_b"].to_numpy()
-        # Slab the GEMM: a full |left| x |right| score matrix is
-        # O(na*nb) doubles PER TASK — with weak pruning and 32
-        # concurrent tasks that exhausts executor memory (observed:
-        # 80k x 2.5k = 1.6 GB each). ~4M-cell slabs keep each task's
-        # working set ~32 MB with identical results.
+        Wn = Vn[own]
+        # Slab the GEMM: a full |a| x |b| score matrix is O(na*nb)
+        # doubles PER TASK — with weak pruning and 32 concurrent tasks
+        # that exhausts executor memory (observed: 80k x 2.5k = 1.6 GB
+        # each). ~4M-cell slabs keep each task's working set ~32 MB
+        # with identical results.
         step = max(1, 4_000_000 // len(ids_b))
-        hits_a, hits_b, hits_s = [], [], []
+        hits_a, hits_b = [], []
         for s in range(0, len(ids_a), step):
             Sl = Vn[s : s + step] @ Wn.T
-            # id_a < id_b both dedupes (each unordered pair appears in
-            # exactly one direction across the two replicated groups)
-            # and drops self-pairs
+            # id_a < id_b both dedupes (each unordered pair meets in
+            # exactly one direction: in the group of its larger id's
+            # cell) and drops self-pairs
             ia, ib = np.nonzero(
                 (Sl >= slack) & (ids_a[s : s + step, None] < ids_b[None, :])
             )
-            hits_a.append(ids_a[s : s + step][ia])
-            hits_b.append(ids_b[ib])
-            hits_s.append(Sl[ia, ib])
+            hits_a.append(ia + s)
+            hits_b.append(own[ib])
+        # rows of V on both sides; only the GEMM's hits get the exact value
+        ia, ib = np.concatenate(hits_a), np.concatenate(hits_b)
+        sims = _exact_cosines(V, ia, ib)
+        ok = sims >= threshold
         return pd.DataFrame(
-            {
-                "id_a": np.concatenate(hits_a),
-                "id_b": np.concatenate(hits_b),
-                "cos_sim": np.concatenate(hits_s),
-            }
+            {"id_a": ids_a[ia[ok]], "id_b": ids_a[ib[ok]], "cos_sim": sims[ok]}
         )
 
-    survivors = (
-        a_rep.groupBy("cell_b")
-        .cogroup(b.groupBy("cell_b"))
-        .applyInPandas(block_score, f"id_a {id_type}, id_b {id_type}, cos_sim double")
-    )
-    if not exact_rescore:
-        return survivors.filter(F.col("cos_sim") >= threshold)
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     return (
-        F.broadcast(survivors.drop("cos_sim"))
-        .join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cos_sim", cosine_similarity(F.col("__va"), F.col("__vb")))
-        .filter(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", "cos_sim")
+        assigned.select(
+            F.explode(F.element_at(cand, F.col("cell_id"))).alias("__key"),
+            "cell_id",
+            F.col(id_col).alias("__id"),
+            F.col(vec_col).alias("__vec"),
+        )
+        .groupBy("__key")
+        .applyInPandas(block_score, schema)
     )
 
 

@@ -46,6 +46,12 @@ from arc_kinesis_tagging_spark.functions.text import tokens
 
 _UNK_LP_MICRO = -23_025_851  # ln(1e-10) in micro-units: unseen-char floor
 
+# Bound on ``unigram_encode``'s per-task word memo: ~64k short words
+# and their piece lists are a few MB. Past it a new word is encoded but
+# not stored, so a task over a heavy-tailed vocabulary (web text, typo
+# soup) keeps a fixed memo instead of one entry per distinct word.
+_MEMO_CAP = 1 << 16
+
 
 def _lp_micro(count: int, total: int) -> int:
     """Half-up integer micro-units of ln(count/total)."""
@@ -240,11 +246,11 @@ def unigram_encode(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Viterbi-encode the corpus with a trained vocabulary. Map-only:
-    the vocab is closure-captured bounded metadata, and each task keeps
-    one word memo across all of its Arrow batches. Emits per-document
-    (n_words, n_pieces, lp_micro_total — an exact integer sum,
-    order-independent by construction — and the first 10 pieces as a
-    sample)."""
+    the vocab is closure-captured bounded metadata, and each task
+    memoizes up to ``_MEMO_CAP`` words across all of its Arrow batches.
+    Emits per-document (n_words, n_pieces, lp_micro_total — an exact
+    integer sum, order-independent by construction — and the first 10
+    pieces as a sample)."""
     spark = df.sparkSession
     b = spark.sparkContext.broadcast((vocab, max_piece_len))
 
@@ -257,7 +263,9 @@ def unigram_encode(
         def enc_word(w):
             got = cache.get(w)
             if got is None:
-                cache[w] = got = _viterbi(w, v, ml)
+                got = _viterbi(w, v, ml)
+                if len(cache) < _MEMO_CAP:
+                    cache[w] = got
             return got
 
         for pdf in batches:

@@ -28,7 +28,7 @@ from arc_kinesis_tagging_spark.operators.multimodal import attach_fake_media, de
 from arc_kinesis_tagging_spark.operators.similarity import cosine_topk_ivf
 from arc_kinesis_tagging_spark.operators.textops import term_frequencies
 from arc_kinesis_tagging_spark.plans.common import Query, dec
-from arc_kinesis_tagging_spark.sources.tables import load_table
+from arc_kinesis_tagging_spark.sources.tables import load_table, table_fingerprint
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -283,8 +283,10 @@ def q_dedup_embedding(spark, sf_dir):
     threshold join (IVF cells + triangle-inequality pruning — see
     ``cosine_threshold_pairs``). The oracle stays the all-pairs SQL
     form: pruning is lossless, so results are identical, but the Spark
-    plan shuffles on cell_id instead of exploding N^2 — the shape that
-    survives 100x. Threshold is passed with half-ulp-of-rounding slack
+    plan shuffles once on the candidate cell instead of exploding N^2 —
+    the shape that survives 100x — and the scoring kernel emits the
+    ``cosine_similarity`` HOF's value bit for bit (5 Spark jobs in all,
+    no re-score pass). Threshold is passed with half-ulp-of-rounding slack
     (0.3499 < 0.35) so pairs that ROUND to 0.35 survive the exact
     filter; the final rounded filter matches the oracle's.
     Rounded similarity for cross-engine comparability."""
@@ -459,7 +461,7 @@ def q_ann_persisted(spark, sf_dir):
         "akt_ivf_"
         + _hashlib.md5(norm.encode()).hexdigest()[:8]
         + "_"
-        + _table_fingerprint(sf_dir, "embeddings"),
+        + table_fingerprint(sf_dir, "embeddings"),
     )
     memo = _session_memo(spark)
     if (path, "ivf") not in memo:
@@ -474,33 +476,6 @@ def q_ann_persisted(spark, sf_dir):
                 _shutil.rmtree(tmp, ignore_errors=True)
         memo.add((path, "ivf"))
     return query_ivf_index(spark, path, q, k=5, nprobe=4, round_dp=4)
-
-
-def _table_fingerprint(sf_dir: str, table: str) -> str:
-    """Content fingerprint of a testdata table: md5 over the sorted
-    (path, size, mtime_ns) of its parquet file(s). Cheap (stat only, no
-    reads) and changes whenever the data is regenerated — the cache key
-    ingredient that invalidates persisted derived artifacts (IVF
-    indexes) when their source changes."""
-    import glob as _glob
-    import hashlib as _hashlib
-    import os as _os
-
-    p = _os.path.join(_os.path.abspath(sf_dir.rstrip("/")), table + ".parquet")
-    files = (
-        sorted(_glob.glob(_os.path.join(p, "**", "*"), recursive=True))
-        if _os.path.isdir(p)
-        else [p]
-    )
-    h = _hashlib.md5()
-    for f in files:
-        try:
-            st = _os.stat(f)
-        except OSError:
-            continue
-        h.update(f.encode())
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:10]
 
 
 # Full IVF replica: centroids = the 16 lowest-vec_id vectors; every
@@ -593,7 +568,7 @@ def q_ann_incremental(spark, sf_dir):
         "akt_ivfinc_"
         + _hashlib.md5(norm.encode()).hexdigest()[:8]
         + "_"
-        + _table_fingerprint(sf_dir, "embeddings"),
+        + table_fingerprint(sf_dir, "embeddings"),
     )
     memo = _session_memo(spark)
     if (path, "ivfinc") not in memo:
@@ -4088,7 +4063,8 @@ def q_dedup_embedding_lsh(spark, sf_dir):
 
 def q_dedup_semantic(spark, sf_dir):
     """End-to-end semantic dedup: exact cosine-threshold pairs (IVF
-    triangle-inequality pruning) -> connected components -> one
+    triangle-inequality pruning, the same exact kernel value
+    q_dedup_embedding rounds) -> connected components -> one
     representative per cluster (lowest vec_id). Iterative/adaptive ->
     rows-only; the pair stage is oracle-checked by q_dedup_embedding
     and the clustering by union-find model tests."""
@@ -4096,9 +4072,9 @@ def q_dedup_semantic(spark, sf_dir):
     from arc_kinesis_tagging_spark.operators.similarity import cosine_threshold_pairs
 
     e = _t(spark, sf_dir, "embeddings")
-    pairs = cosine_threshold_pairs(
-        e, threshold=0.35, nlist=16, exact_rescore=False
-    ).select(F.col("id_a").alias("key_a"), F.col("id_b").alias("key_b"))
+    pairs = cosine_threshold_pairs(e, threshold=0.35, nlist=16).select(
+        F.col("id_a").alias("key_a"), F.col("id_b").alias("key_b")
+    )
     kept = dedup_keep_best(
         e.select("vec_id").withColumn("__score", F.lit(0)), pairs, "vec_id", "__score"
     )
@@ -4162,7 +4138,7 @@ def q_ann_lifecycle(spark, sf_dir):
         "akt_ivflc_"
         + _hashlib.md5(norm.encode()).hexdigest()[:8]
         + "_"
-        + _table_fingerprint(sf_dir, "embeddings"),
+        + table_fingerprint(sf_dir, "embeddings"),
     )
     return ann_lifecycle(
         spark,
@@ -4436,7 +4412,7 @@ def q_scan_orc(spark, sf_dir):
         "akt_orc_"
         + _hashlib.md5(norm.encode()).hexdigest()[:8]
         + "_"
-        + _table_fingerprint(sf_dir, "documents"),
+        + table_fingerprint(sf_dir, "documents"),
     )
     memo = _session_memo(spark)
     if (path, "orc") not in memo:
@@ -4560,7 +4536,7 @@ def q_source_tarshard_ds(spark, sf_dir):
         "akt_tarshards_"
         + _hashlib.md5(norm.encode()).hexdigest()[:8]
         + "_"
-        + _table_fingerprint(sf_dir, "documents"),
+        + table_fingerprint(sf_dir, "documents"),
     )
     memo = _session_memo(spark)
     if (path, "tarshard") not in memo:

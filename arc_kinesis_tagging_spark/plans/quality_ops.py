@@ -1501,7 +1501,7 @@ def q_unigram_encode(spark, sf_dir):
     """The tokenize-apply half of the unigram loop: train the
     vocabulary (q_unigram_train's path), then Viterbi-encode every
     document (operators/unigram.py:unigram_encode — map-only, vocab
-    closure-captured, one word memo per task, zero shuffle) and
+    closure-captured, one bounded word memo per task, zero shuffle) and
     emit per-document piece statistics with an exact integer total
     log-prob. Iterative training upstream -> rows-only; the
     segmentation-optimality and determinism invariants are pinned in
@@ -1522,7 +1522,7 @@ def q_bpe_encode(spark, sf_dir):
     """The tokenize-apply half of the BPE loop: train 16 merges on the
     corpus (q_bpe_train's path), then encode every document with them
     (operators/bpe.py:bpe_encode — map-only, merge list closure-
-    captured, per-batch word memoization, zero shuffle) and emit
+    captured, bounded per-task word memoization, zero shuffle) and emit
     per-document subword statistics. Iterative training upstream ->
     rows-only; the train/apply self-consistency invariant (encoding a
     training word reproduces the final vocab's symbols) is pinned in
@@ -3177,15 +3177,13 @@ def q_lm_arpa(spark, sf_dir):
         export_arpa_bigram,
         score_docs_with_arpa,
     )
-    from arc_kinesis_tagging_spark.plans.llmops import (
-        _session_memo,
-        _table_fingerprint,
-    )
+    from arc_kinesis_tagging_spark.plans.llmops import _session_memo
+    from arc_kinesis_tagging_spark.sources.tables import table_fingerprint
 
     d = _t(spark, sf_dir, "documents")
     path = _os.path.join(
         _tempfile.gettempdir(),
-        "akt_arpa_" + _table_fingerprint(sf_dir, "documents") + ".arpa",
+        "akt_arpa_" + table_fingerprint(sf_dir, "documents") + ".arpa",
     )
     memo = _session_memo(spark)
     if (path, "arpa") not in memo:

@@ -143,6 +143,61 @@ def test_cosine_threshold_pairs_matches_bruteforce(spark):
     assert got == want and len(want) >= 10
 
 
+def test_cosine_threshold_pairs_cos_sim_is_the_hof_value_bit_for_bit(spark):
+    """The kernel's cos_sim is the value SQL oracles round: it must be
+    ``functions/vectors.cosine_similarity``'s double bit for bit (as an
+    int64 view), on float and double arrays, over scaled duplicates at
+    cos ~ 1, near-duplicates, a zero vector and a null, at a negative
+    threshold (the zero vector qualifies) and up to cos ~ 1."""
+    from arc_kinesis_tagging_spark.functions.vectors import cosine_similarity
+
+    def bits(pdf):
+        view = pdf["cos_sim"].to_numpy(np.float64).view(np.int64)
+        return dict(zip(zip(pdf["id_a"], pdf["id_b"]), view))
+
+    rng = np.random.default_rng(5)
+    base = rng.normal(size=(30, 16))
+    vecs = [*base, *(base[:10] * 3.0), *(base[:10] + rng.normal(scale=0.05, size=(10, 16)))]
+    # float arrays hold float32-rounded values; double arrays keep full
+    # 53-bit mantissas, so their products round too
+    for typ, dtype in (("float", np.float32), ("double", np.float64)):
+        rows = [(i, np.asarray(v, dtype).tolist()) for i, v in enumerate(vecs)]
+        rows += [(len(rows), [0.0] * 16), (len(rows) + 1, None)]
+        df = spark.createDataFrame(rows, f"vec_id long, embedding array<{typ}>")
+        a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+        b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
+        hof = (
+            a.crossJoin(b)
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", cosine_similarity(F.col("va"), F.col("vb")).alias("cos_sim"))
+        ).toPandas()
+        for thr in (-0.3, 0.2, 0.9, 0.999999):
+            want = hof[hof["cos_sim"] >= thr]
+            got = cosine_threshold_pairs(df, thr, nlist=4).toPandas()
+            assert bits(got) == bits(want), (typ, thr)
+            assert len(want) >= 10
+
+
+def test_cosine_threshold_pairs_runs_five_jobs(spark, sf_dir):
+    """Centroid collect, assignment pin, radii collect, and the one
+    Exchange's map and result stages: 5 jobs. The cell pairs are
+    computed on the driver and the exact cosine inside the kernel, so
+    neither costs a job, and ``stats=`` costs none either."""
+    from arc_kinesis_tagging_spark.sources.tables import load_table
+
+    e = load_table(spark, "embeddings", sf_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("threshold-pairs", "threshold-pairs")
+    try:
+        stats = {}
+        n = len(cosine_threshold_pairs(e, 0.35, nlist=16, stats=stats).toPandas())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("threshold-pairs")
+    assert n > 0 and 0 < stats["n_cell_pairs"] <= 16 * 16
+    assert len(jobs) <= 5, jobs
+
+
 def test_srp_lsh_recall_vs_exact(spark):
     from arc_kinesis_tagging_spark.operators.similarity import srp_lsh_pairs
 

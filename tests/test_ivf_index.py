@@ -213,11 +213,8 @@ def test_ann_persisted_fingerprint_invalidates_on_data_change(spark, sf_dir, tmp
 
     from pyspark.sql import functions as F
 
-    from arc_kinesis_tagging_spark.plans.llmops import (
-        _table_fingerprint,
-        q_ann_persisted,
-    )
-    from arc_kinesis_tagging_spark.sources.tables import load_table
+    from arc_kinesis_tagging_spark.plans.llmops import q_ann_persisted
+    from arc_kinesis_tagging_spark.sources.tables import load_table, table_fingerprint
 
     work = str(tmp_path / "sfcopy")
     os.makedirs(work)
@@ -227,7 +224,7 @@ def test_ann_persisted_fingerprint_invalidates_on_data_change(spark, sf_dir, tmp
         shutil.copytree(src, dst)
     else:
         shutil.copy2(src, dst)
-    fp1 = _table_fingerprint(work, "embeddings")
+    fp1 = table_fingerprint(work, "embeddings")
     r1 = {(r["query_id"], r["rank"]): r["vec_id"]
           for r in q_ann_persisted(spark, work).collect()}
     assert r1
@@ -243,7 +240,7 @@ def test_ann_persisted_fingerprint_invalidates_on_data_change(spark, sf_dir, tmp
     else:
         os.remove(dst)
     shutil.copytree(tmp_out, dst)
-    fp2 = _table_fingerprint(work, "embeddings")
+    fp2 = table_fingerprint(work, "embeddings")
     assert fp2 != fp1  # new content -> new fingerprint -> new index path
 
     r2 = q_ann_persisted(spark, work).collect()

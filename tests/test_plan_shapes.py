@@ -207,11 +207,6 @@ GLOBAL_WINDOW_ALLOWLIST = {
     # composite inheriting both bounded shapes above (lm_buckets'
     # top-V prune + prefix dedup's P-row boundary window)
     "q_corpus_pipeline5",
-    # cosine_threshold_pairs' cell-pair pruning windows run over the
-    # nlist x nlist centroid-pair table (<= 256 rows at nlist=16) —
-    # constant-bounded, never data-sized (q_dedup_embedding carries
-    # the same shape but is exempted via _EAGER_BUILDERS)
-    "q_corpus_pipeline9",
 }
 
 # Builders that launch eager Spark jobs at build time (iterative loops,
@@ -287,11 +282,12 @@ def test_global_window_allowlist(spark, registry_dfs):
 # BroadcastNestedLoopJoin: every one is a crossJoin against a
 # BOUNDED broadcast side — a 1-row global aggregate (mixing
 # denominators, domain-balance caps, sample fractions, Q11/Q22
-# scalar-subquery thresholds) or nlist^2 cell-pair metadata
-# (threshold-join pruning). A BNLJ against anything data-sized is a
-# scale killer and fails this gate.
+# scalar-subquery thresholds). The threshold join's cell pairs are
+# driver-side numpy, so its queries (q_dedup_embedding,
+# q_corpus_pipeline9) plan no cross join at all. A BNLJ against
+# anything data-sized is a scale killer and fails this gate.
 BNLJ_ALLOWLIST = {
-    "q_source_mixing", "q_corpus_pipeline2", "q_dedup_embedding",
+    "q_source_mixing", "q_corpus_pipeline2",
     "q_sample", "q_similarity_topk", "q_hard_negatives",
     "q_minhash_vs_exact",
     "q_ann_recall", "q_domain_balance", "q_domain_balance_hash",
@@ -300,9 +296,6 @@ BNLJ_ALLOWLIST = {
     "q_heavy_hitters",
     # 1-row vocabulary-size broadcast onto the scored bigrams
     "q_text_perplexity", "q_corpus_pipeline3",
-    # centroid-assignment cross join: broadcast side is the nlist=16
-    # centroid table (constant-bounded; q_dedup_embedding's shape)
-    "q_corpus_pipeline9",
     # 1-row token-vocabulary-size broadcast (the word-level sibling,
     # the round-6 composite that embeds it, the tail-pruned form, and
     # the CCNet-style bucketing built on it)

@@ -537,6 +537,46 @@ def test_bpe_encode_self_consistent_with_training(spark):
     assert rows[9]["n_words"] == 0 and rows[10]["n_subwords"] == 0
 
 
+def test_bpe_encode_past_the_word_memo_cap(spark):
+    """One task sees more distinct words than the per-task memo holds:
+    words past the cap are encoded without being stored, and every
+    document still matches a plain merge-by-merge encoding."""
+    from arc_kinesis_tagging_spark.operators.bpe import END, _MEMO_CAP, bpe_encode
+
+    letters = "abcdefghij"
+    words = [
+        "".join(letters[int(d)] for d in f"{i:05d}") for i in range(_MEMO_CAP + 4_000)
+    ]
+    docs = [
+        (k, " ".join(words[k * 100 : (k + 1) * 100] + words[:3]))
+        for k in range(len(words) // 100)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string").coalesce(1)
+    merges = [("a", "a", 0), ("b", "c", 0), ("aa", "a", 0), ("j", END, 0)]
+
+    def ref(w):
+        syms = list(w) + [END]
+        for left, right, _ in merges:
+            out, i = [], 0
+            while i < len(syms):
+                if syms[i : i + 2] == [left, right]:
+                    out.append(left + right)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            syms = out
+        return syms
+
+    got = {r["doc_id"]: r for r in bpe_encode(df, merges).collect()}
+    assert len(got) == len(docs) and len(words) > _MEMO_CAP
+    for k, text in docs:
+        syms = [s for w in text.split() for s in ref(w)]
+        r = got[k]
+        assert r["n_subwords"] == len(syms), k
+        assert r["sample_tokens"] == "|".join(syms[:10]), k
+
+
 def test_minwise_estimate_tracks_exact(spark, sf_dir):
     """The bottom-k Jaccard estimate must sit within the standard
     KMV error envelope of the exact value it approximates — and be

@@ -212,7 +212,7 @@ def test_ivf_realistic_nlist_scale(spark):
 
         stats = {}
         pairs = cosine_threshold_pairs(
-            corpus, 0.97, nlist=nlist, exact_rescore=False, stats=stats
+            corpus, 0.97, nlist=nlist, stats=stats
         )
         n_pairs = pairs.count()
         assert stats["nlist"] == nlist

@@ -1,6 +1,8 @@
 """File readers (JSON/CSV with corrupt capture) and sinks (partitioned
 parquet with pruning, batch keyed upsert)."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from arc_kinesis_tagging_spark.sources.readers import (
@@ -9,6 +11,7 @@ from arc_kinesis_tagging_spark.sources.readers import (
     upsert_by_key_parquet,
     write_partitioned_parquet,
 )
+from arc_kinesis_tagging_spark.sources.tables import TABLES, _schema_memo, load_table
 
 
 def test_json_reader_corrupt_capture(spark, tmp_path):
@@ -24,6 +27,43 @@ def test_json_reader_corrupt_capture(spark, tmp_path):
     bad = [r["_corrupt_record"] for r in rows if r["_corrupt_record"] is not None]
     assert good == {(1, "a"), (2, "b")}
     assert bad == ["not json at all"]
+
+
+def test_load_table_infers_each_schema_once(spark, sf_dir, tmp_path):
+    """load_table memoizes the inferred parquet schema per session: a
+    second read of an unchanged table runs no Spark job, a rewrite with
+    a new schema is inferred again, and the memoized read has the same
+    schema as fresh inference for every table."""
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    work = str(tmp_path)
+    path = os.path.join(work, "region.parquet")
+    spark.createDataFrame([(1, "a")], "r_regionkey long, r_name string").write.parquet(path)
+    n1, first = jobs("load-table-1", lambda: load_table(spark, "region", work))
+    n2, again = jobs("load-table-2", lambda: load_table(spark, "region", work))
+    assert n1 >= 1 and n2 == 0, (n1, n2)
+    assert again.schema == first.schema and again.collect() == [(1, "a")]
+
+    spark.createDataFrame([(2, 2.5, "x")], "a long, b double, c string").write.mode(
+        "overwrite"
+    ).parquet(path)
+    changed = load_table(spark, "region", work)
+    assert changed.schema.simpleString() == "struct<a:bigint,b:double,c:string>"
+    assert changed.collect() == [(2, 2.5, "x")]
+
+    _schema_memo(spark).clear()
+    for name in TABLES:
+        fresh = load_table(spark, name, sf_dir)
+        n, memoized = jobs(f"load-table-{name}", lambda: load_table(spark, name, sf_dir))
+        assert n == 0 and memoized.schema == fresh.schema, name
 
 
 def test_csv_reader(spark, tmp_path):

@@ -7,6 +7,7 @@ import itertools
 import math
 
 from arc_kinesis_tagging_spark.operators.unigram import (
+    _MEMO_CAP,
     _UNK_LP_MICRO,
     _lp_micro,
     _viterbi,
@@ -98,6 +99,22 @@ def test_unigram_train_matches_reference_and_is_layout_invariant(spark):
         )
         assert vocab == ref_vocab
         assert rows == ref_rows
+    # AQE coalesces the ~10-row word table into one partition; without
+    # coalescing it keeps its shuffle partitions, so each EM sweep sums
+    # partial counts of the same piece from several tasks. At 3 pieces
+    # the words split into pieces that words in other partitions share
+    # (at 8 most words are one piece each, and a merge that keeps one
+    # task's partial count would still pass).
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        parts = _word_freqs(df, "text").rdd.glom().collect()
+        assert sum(1 for p in parts if p) >= 2, parts
+        vocab, rows = unigram_train(df, vocab_size=3, seed_size=40, n_rounds=2)
+    finally:
+        spark.conf.set(key, prev)
+    assert (vocab, rows) == _ref_train([t for _, t in CORPUS], vocab_size=3, seed_size=40)
     # coverage: every corpus character is in the vocabulary
     corpus_chars = {
         c for _, t in CORPUS for w in t.split() for c in w
@@ -222,6 +239,31 @@ def test_unigram_encode_stats_and_unknown_chars(spark):
     r = unigram_encode(odd, vocab).collect()[0]
     assert r["n_pieces"] >= 5
     assert r["lp_micro_total"] <= 5 * _UNK_LP_MICRO + vocab.get("cat", 0)
+
+
+def test_unigram_encode_past_the_word_memo_cap(spark):
+    """One task sees more distinct words than the per-task memo holds:
+    words past the cap are encoded without being stored, and every
+    document still matches the single-machine Viterbi encoding."""
+    letters = "abcdefghij"
+    words = [
+        "".join(letters[int(d)] for d in f"{i:05d}") for i in range(_MEMO_CAP + 4_000)
+    ]
+    docs = [
+        (k, " ".join(words[k * 100 : (k + 1) * 100] + words[:3]))
+        for k in range(len(words) // 100)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string").coalesce(1)
+    vocab = {"a": -100, "b": -120, "ab": -150, "ba": -160, "aa": -170, "abc": -200}
+    got = {r["doc_id"]: r for r in unigram_encode(df, vocab).collect()}
+    assert len(got) == len(docs) and len(words) > _MEMO_CAP
+    for k, text in docs:
+        segs = [_viterbi(w, vocab, 6) for w in text.split()]
+        pieces = [p for seg, _ in segs for p in seg]
+        r = got[k]
+        assert r["n_pieces"] == len(pieces), k
+        assert r["lp_micro_total"] == sum(lp for _, lp in segs), k
+        assert r["sample_pieces"] == "|".join(pieces[:10]), k
 
 
 def test_unigram_registry_queries_run(spark, sf_dir):
